@@ -1119,9 +1119,19 @@ object Dedup {
     * it). Above it (a genuinely large held-out split) the map-side
     * bloom gate + shuffle join path stands. ~2M grams ≈ low hundreds of
     * MB of broadcast hash relation — sized for the bench's 8 GB driver;
-    * env-tunable for bigger drivers. */
-  private[graft] val GateBroadcastKeys: Long =
-    sys.env.get("GRAFT_GATE_BROADCAST_KEYS").map(_.toLong).getOrElse(1L << 21)
+    * env-tunable for bigger drivers. Read at each use, so a bad value
+    * fails the query that needs it, not the whole object. */
+  private[graft] def GateBroadcastKeys: Long =
+    gateBroadcastKeys(sys.env.get("GRAFT_GATE_BROADCAST_KEYS"))
+
+  /** Parses a `GRAFT_GATE_BROADCAST_KEYS` value: unset ⇒ 2^21 keys;
+    * anything but a positive whole number is rejected. */
+  private[graft] def gateBroadcastKeys(raw: Option[String]): Long =
+    raw.fold(1L << 21) { v =>
+      v.trim.toLongOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"GRAFT_GATE_BROADCAST_KEYS must be a positive whole number, got '$v'"))
+    }
 
   private[graft] def contaminationSpan(
       s: SparkSession, dir: String, native: Boolean,

@@ -3,7 +3,8 @@ package graft.pipeline
 import graft.ingest.Ingest
 import graft.model.RootSchema
 import graft.views.Views
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import java.nio.file.{Files, Paths, Path}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
@@ -67,8 +68,9 @@ final class SyncPipeline(
   val state = new SyncState(stateDir)
   private val source = new FileDocumentSource(sourceDir, pageFiles)
 
-  /** One sync run: page through new files, append each page's batch,
-    * persist the cursor per page (O2). Returns documents landed. */
+  /** One sync run: page through new files, land each page, persist the
+    * cursor per page (O2). Returns the rows parsed: documents plus chunk
+    * slices, counted before the in-page dedup. */
   def syncOnce(force: Boolean = false): Long = {
     var cursor = state.read(force)
     var total = 0L
@@ -78,18 +80,8 @@ final class SyncPipeline(
       val page = source.fetchPage(cursor)
       if (page.files.isEmpty) more = false
       else {
-        // persist: count + append would otherwise each re-run the full
-        // NDJSON parse + chunk split. Dedup-on-write = the landing PK
-        // (K3 semantics): a document delivered twice within this page
-        // lands once.
-        val df = Ingest.fromNdjsonLines(
-          spark.read.textFile(page.files.map(_.toString): _*),
-          batchDate, chunkSize).persist()
-        try {
-          val n = df.count()
-          if (n > 0) Ingest.appendBatchDedup(df, landingPath)
-          total += n
-        } finally df.unpersist()
+        total += landPage(
+          spark.read.textFile(page.files.map(_.toString): _*), batchDate)
         cursor = page.cursor
         state.write(cursor)
         more = page.truncated
@@ -99,8 +91,7 @@ final class SyncPipeline(
   }
 
   /** One sync run against any paged source (e.g. HttpDocumentSource):
-    * identical page/land/persist-cursor loop as the file flow, with the
-    * page's NDJSON lines parallelized for the distributed parse. */
+    * the same page/land/persist-cursor loop and return as `syncOnce`. */
   def syncFrom(source: PagedSource, force: Boolean = false): Long = {
     var cursor = state.read(force)
     var total = 0L
@@ -110,21 +101,28 @@ final class SyncPipeline(
       val page = source.fetchPage(cursor)
       if (page.lines.nonEmpty) {
         import spark.implicits._
-        val df = Ingest.fromNdjsonLines(
-          spark.createDataset(page.lines).repartition(
-            spark.sparkContext.defaultParallelism),
-          batchDate, chunkSize).persist()
-        try {
-          val n = df.count()
-          if (n > 0) Ingest.appendBatchDedup(df, landingPath)
-          total += n
-        } finally df.unpersist()
+        total += landPage(spark.createDataset(page.lines), batchDate)
       }
       cursor = page.cursor
       state.write(cursor)
       more = page.truncated && page.lines.nonEmpty
     }
     total
+  }
+
+  /** Land one page as one query: parse + chunk split, dedup on the
+    * landing PK (K3: a document delivered twice in a page lands once),
+    * append. Returns the rows parsed, observed in that same execution. A
+    * page that parses to nothing writes only `_SUCCESS`, no data file.
+    * The observation sits in the dedup's map stage: a failed task attempt
+    * adds nothing, but a successful map task that is re-executed
+    * (speculation, lost shuffle output) adds its rows once more; the
+    * landed rows are unaffected. */
+  private def landPage(lines: Dataset[String], batchDate: Timestamp): Long = {
+    val parsed = Observation()
+    Ingest.appendBatchDedup(Ingest.fromNdjsonLines(lines, batchDate, chunkSize)
+      .observe(parsed, count(lit(1)).as("rows")), landingPath)
+    parsed.get("rows").asInstanceOf[Long]
   }
 
   /** create_views (§3.2): register the R1/R2 + typed view catalog over

@@ -1,8 +1,13 @@
 package graft
 
-import graft.pipeline.{SyncPipeline, SyncState}
+import graft.ingest.Landing
+import graft.pipeline.{PagedSource, SourcePage, SyncPipeline, SyncState}
 import graft.views.Views
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 class PipelineSpec extends SparkSpec {
 
@@ -13,6 +18,28 @@ class PipelineSpec extends SparkSpec {
 
   private def writeNdjson(dir: String, file: String, lines: String*): Unit =
     Files.writeString(Paths.get(dir, file), lines.mkString("\n"))
+
+  /** Serves `pages` in order, cursor `p<n>` after page n; past the last
+    * page an empty page that keeps the cursor. */
+  private final class StubSource(var pages: Vector[Seq[String]]) extends PagedSource {
+    def fetchPage(since: String): SourcePage = {
+      val i = if (since.startsWith("p")) since.drop(1).toInt else 0
+      if (i < pages.size) SourcePage(pages(i), s"p${i + 1}", i + 1 < pages.size)
+      else SourcePage(Nil, since, truncated = false)
+    }
+  }
+
+  private def parquetFiles(land: String): Seq[Path] =
+    if (!Files.exists(Paths.get(land))) Nil
+    else Using.resource(Files.walk(Paths.get(land))) { st =>
+      st.iterator.asScala.filter(_.toString.endsWith(".parquet")).toVector
+    }
+
+  private val malformed = Seq(
+    "not json",
+    """{"$TYPE":"W","$VERSION":1}""",  // no DOCUMENT_ID
+    """{"DOCUMENT_ID":"x"}""",         // no $TYPE
+    """[1, 2, 3]""")
 
   test("cursor: missing file ⇒ epoch; force resets (S4/O3)") {
     val st = new SyncState(tmp("state"))
@@ -132,5 +159,65 @@ class PipelineSpec extends SparkSpec {
     p.syncOnce(force = true) // replay: 4 physical rows
     p.prune()
     assert(Tables.t(spark, base, "landing").count() == 2)
+  }
+
+  test("a page of only malformed lines: returns 0, advances the cursor, writes no data file") {
+    // file flow: a malformed page, then an empty file
+    val src = tmp("bad"); val land = tmp("landbad") + "/landing"; val state = tmp("stbad")
+    writeNdjson(src, "f001.ndjson", malformed: _*)
+    writeNdjson(src, "f002.ndjson")
+    val p = new SyncPipeline(spark, src, land, state, pageFiles = 1)
+    assert(p.syncOnce() == 0L)
+    assert(p.state.read() == "f002.ndjson")
+    assert(parquetFiles(land).isEmpty)
+    writeNdjson(src, "f003.ndjson",
+      """{"$TYPE":"W","DOCUMENT_ID":"a","$VERSION":1,"N":"a1"}""")
+    assert(p.syncOnce() == 1L)
+    assert(spark.read.schema(Landing.schema).parquet(land).count() == 1)
+
+    // paged flow: the same page through a stub source
+    val land2 = tmp("landbad2") + "/landing"
+    val source = new StubSource(Vector(malformed))
+    val q = new SyncPipeline(spark, "", land2, tmp("stbad2"))
+    assert(q.syncFrom(source) == 0L)
+    assert(q.state.read() == "p1")
+    assert(parquetFiles(land2).isEmpty)
+    source.pages :+= Seq("""{"$TYPE":"W","DOCUMENT_ID":"b","$VERSION":1,"N":"b1"}""")
+    assert(q.syncFrom(source) == 1L)
+    assert(q.state.read() == "p2")
+    val landed = spark.read.schema(Landing.schema).parquet(land2)
+    assert(landed.select("id").collect().map(_.getString(0)).toSeq == Seq("b"))
+  }
+
+  test("a page returns its parsed rows, lands them deduplicated, in one shuffle") {
+    val land = tmp("one") + "/landing"
+    val b = """{"$TYPE":"W","DOCUMENT_ID":"b","$VERSION":1,"N":"b1"}"""
+    // chunkSize 2: a's five readings split into a main row + 3 slices;
+    // b is replayed within the page. One line per scan partition (3
+    // lines, local[4]), so no map-side combine merges the replay.
+    val page = Seq(
+      """{"$TYPE":"W","DOCUMENT_ID":"a","$VERSION":1,"R":[1,2,3,4,5]}""", b, b)
+    val p = new SyncPipeline(spark, "", land, tmp("stone"), chunkSize = 2)
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val parsed =
+      try {
+        val n = p.syncFrom(new StubSource(Vector(page)))
+        ListenerBusDrain(spark.sparkContext)
+        n
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(parsed == 6L, "4 rows of a + 2 copies of b, before the dedup")
+    val landed = spark.read.schema(Landing.schema).parquet(land)
+    assert(landed.count() == 5L)
+    assert(landed.filter("id = 'a'").select("chunk").collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(0, 1, 2, 3))
+    // the dedup's exchange only: every parsed row crosses it once
+    assert(shuffled.get == parsed)
   }
 }

@@ -106,6 +106,18 @@ class Round17Spec extends SparkSpec {
     assert(Integer.bitCount(gateBits(123456L)) == 1, "power of two (m % 64 == 0)")
   }
 
+  test("x119/x109 broadcast-key limit: unset ⇒ 2^21; bad values name the variable") {
+    import graft.llm.Dedup.gateBroadcastKeys
+    assert(gateBroadcastKeys(None) == (1L << 21))
+    assert(gateBroadcastKeys(Some("4096")) == 4096L)
+    assert(gateBroadcastKeys(Some(" 8000000000 ")) == 8000000000L)
+    for (bad <- Seq("", "lots", "2e6", "1.5", "0", "-1", "99999999999999999999")) {
+      val e = intercept[IllegalArgumentException](gateBroadcastKeys(Some(bad)))
+      assert(e.getMessage.contains("GRAFT_GATE_BROADCAST_KEYS"), bad)
+      assert(e.getMessage.contains(s"'$bad'"), bad)
+    }
+  }
+
   test("x119: fallback bloom gate plan probes map-side (broadcast, no corpus gram shuffle before the gate)") {
     val plan = graft.llm.Dedup.contaminationSpan(spark, dir, native = true,
         broadcastKeys = 0L)
