@@ -152,9 +152,10 @@ object Ingest {
     * version views at scale (SCALE.md §2). Partitions by type and
     * hash-buckets by id: a bucketed scan reports HashPartitioning(id),
     * and id is a subset of every downstream clustering key — the R1
-    * window (type,id,version), the PK-restoring dropDuplicates, and
-    * the R2 window (type,id) — so the whole latestAllVersions/latest
-    * pipeline runs WITHOUT A SINGLE EXCHANGE over the landing store
+    * window (type,id,version) and the R2 window (type,id), each of
+    * which also picks the landing PK — so the whole
+    * latestAllVersions/latest pipeline runs WITHOUT A SINGLE EXCHANGE
+    * over the landing store
     * (BucketingSpec proves it on the physical plan). On a 100 TB
     * landing that exchange is the dominant cost of every view refresh;
     * bucketing pays it once at write time, amortized across every

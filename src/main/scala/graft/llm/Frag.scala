@@ -47,11 +47,11 @@ object Frag {
     * composable HOF twin otherwise (identical output, oracle-checked).
     * Shared by the equality-only shingle consumers (x48/x57/x64).
     *
-    * DECISION RECORD (round 14, graft.ShingleProbe at the 100× decade,
-    * interleaved A/B ×3): keys cross these exchanges as RAW STRINGS,
-    * not 60-bit hashes. Hashing-at-generation was measured and
-    * REJECTED — x64 19.3 s (fused strings) vs 26.0 s (fused hashes),
-    * x48 22.4 vs 28.8 — because on a duplication-heavy corpus the
+    * DECISION RECORD (round 14, a shingle-key study at the 100× decade,
+    * interleaved A/B ×3; its main is in git history): keys cross these
+    * exchanges as RAW STRINGS, not 60-bit hashes. Hashing-at-generation
+    * was measured and REJECTED — x64 19.3 s (fused strings) vs 26.0 s
+    * (fused hashes), x48 22.4 vs 28.8 — because on a duplication-heavy corpus the
     * map-side partial aggregation collapses the shingle exchange
     * before it ships, so the md5 per instance is pure added CPU with
     * nothing left to save. The fused STRING shingler is the part that

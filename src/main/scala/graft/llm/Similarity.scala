@@ -1667,12 +1667,13 @@ object Similarity {
     // QUANTIZER CALIBRATION — the gauge behind the round-15 seeding
     // regrade: IVF-routed entries buy recall 4× cheaper per entry on
     // CLUSTERED geometry (x136: 0.5 → 1.0 at E=8) and LOSE to hash
-    // diversity on isotropic vectors (SeedRegrade: 0.2625 → 0.1625 at
-    // B=10) — so whether the quantizer carries routing signal is a
-    // per-corpus MEASUREMENT, not an assumption. Per cell: assigned
-    // count, mean top-1 cosine, and mean top1−top2 MARGIN (the routing
-    // confidence; measured ≈ 0.76 on the clustered twin vs ≈ 0.07 on
-    // the hash corpus — an order of magnitude apart, split at 0.2).
+    // diversity on isotropic vectors (the seed re-grade study, now in
+    // git history: 0.2625 → 0.1625 at B=10) — so whether the quantizer
+    // carries routing signal is a per-corpus MEASUREMENT, not an
+    // assumption. Per cell: assigned count, mean top-1 cosine, and mean
+    // top1−top2 MARGIN (the routing confidence; measured ≈ 0.76 on the
+    // clustered twin vs ≈ 0.07 on the hash corpus — an order of
+    // magnitude apart, split at 0.2).
     // DURABLE tier: `ann_search` consults the corpus-weighted mean
     // margin when resolving the seeding default (Main.resolveSeed) —
     // resident + margin ≥ 0.2 ⇒ ivf, resident + measured-low ⇒ hash.
@@ -1926,41 +1927,6 @@ object Similarity {
         "case when d0 = src then (d0 + 1) % nc else d0 end as dst")
       .distinct()
     walkFromTrace(s, sq, ud, probes, entries, hops, b)
-  }
-
-  /** Measurement body for the round-15 seeding re-grade (SCALE.md, the
-    * SeedRegrade main): the x132-shaped width curve over the STANDING
-    * corpus index, run TWICE — hash entries (the retired default) vs
-    * IVF-routed serving entries (the new default) — so the operating
-    * numbers x126/x132 freeze under IVF seeding have their hash
-    * baseline next to them. Hash geometry; the clustered-geometry
-    * A/B is x136/x137's job (slice index, measured recall@10 1.0 at
-    * E=8 for IVF vs 0.5 for hash). */
-  private[graft] def seedRegradeTable(s: SparkSession, dir: String): DataFrame = {
-    val sq = withSq(s, dir)
-    val probes = sq.filter(QuerySet)
-      .selectExpr("vec_id as src", "embedding as ea", "sq as sa")
-    val ud = cappedUd(s, dir, nndescentEdges(s, dir, iters = 2), "nnd_ud")
-    val nRow = sq.agg(count(lit(1)).as("nc"))
-    val hashE = probes.select(col("src")).crossJoin(broadcast(nRow))
-      .selectExpr("src",
-        s"explode(transform(sequence(1, 8), j -> " +
-          s"${sH("concat(src, ':entry:', j)")} % nc)) as d0", "nc")
-      .selectExpr("src",
-        "case when d0 = src then (d0 + 1) % nc else d0 end as dst")
-      .distinct().localCheckpoint()
-    val ivfE = ivfServingEntries(s, dir, probes).localCheckpoint()
-    val legs = for {
-      (seed, entries) <- Seq("hash" -> hashE, "ivf" -> ivfE)
-      b <- Seq(1, 5, 10)
-    } yield gradeWalk(s, dir, walkFrom(s, sq, ud, probes, entries, hops = 2, b = b))
-      .agg(count(lit(1)).as("n_answers"),
-        sum(when(col("hit"), 1L).otherwise(0L)).as("n_hits"))
-      .selectExpr(s"'$seed' as seeding", s"cast($b as bigint) as beam",
-        "n_answers", "n_hits",
-        sRound6("cast(n_hits as double) / cast(n_answers as double)") +
-          " as recall_at_k")
-    legs.reduce(_ unionByName _).orderBy("seeding", "beam")
   }
 
   /** [[beamWalkTrace]] with IVF-ROUTED serving entries — the round-15
@@ -2409,9 +2375,9 @@ object Similarity {
   }
 
   /** x136's body: the SEEDING lever at a FIXED graph. The round-14
-    * walk-recall study (RecallStudy, SCALE.md) found that on clustered
-    * geometry the standing graph fragments into label islands, so
-    * recall is ENTRY-limited — uniform hash seeds land in the wrong
+    * walk-recall study (SCALE.md; its main is in git history) found
+    * that on clustered geometry the standing graph fragments into
+    * label islands, so recall is ENTRY-limited — uniform hash seeds land in the wrong
     * island and no amount of walking escapes it (E=8→64 lifted
     * recall@10 from 0.20 to 0.84 at fixed K=10). The principled fix at
     * a FIXED entry budget is semantic placement: route each query

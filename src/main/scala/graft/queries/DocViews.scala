@@ -391,25 +391,7 @@ object DocViews {
     // must be bit-identical to the temp DataFrame catalog (the no-drift
     // pin, under the hash gate at every sf).
     "r85_persistent_view" -> { (s, dir) =>
-      // collision-proof scratch path: md5 of the FULL dir string (two
-      // dirs can share a 32-bit hashCode) plus the JVM pid, so two
-      // concurrent processes on the same corpus never overwrite each
-      // other's parquet under the other's registered views
-      val dirTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_r85_${dirTag}_${ProcessHandle.current().pid()}").toString
-      // the landing STORE is ingest-time state (the r68 bucketedStore
-      // rule): write it once per (session, dir); what r85 demonstrates —
-      // and what every invocation still pays — is the persistent SQL
-      // catalog DDL and the read back through those views
-      val k = (s, dir)
-      if (!r85Built.contains(k)) r85Built.synchronized {
-        if (!r85Built.contains(k)) {
-          landing(s, dir).write.mode("overwrite").parquet(path)
-          r85Built.add(k)
-        }
-      }
+      val path = r85Store(s, dir)
       Views.registerAllPersistent(s, path, docSchema, db = "graft_r85")
       s.table("graft_r85.DOC").orderBy("DOCUMENT_ID")
     },
@@ -664,11 +646,35 @@ object DocViews {
     java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]())
 
-  /** r85's landing-store parquet, written once per (session, dir) —
-    * same ingest-time-state rule as [[storeBuilt]]. */
+  /** r85's landing-store dirs already written by this JVM. */
   private val r85Built =
     java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]())
+      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
+
+  /** r85's landing-store parquet path for `dir`, written on first use.
+    * The path is per JVM and per corpus dir: md5 of the FULL dir string
+    * (two dirs can share a 32-bit hashCode) plus the JVM pid, so two
+    * concurrent processes on the same corpus never overwrite each
+    * other's parquet under the other's registered views. The store is
+    * ingest-time state (the r68 [[bucketedStore]] rule), written once
+    * per JVM — not per session: the persistent graft_r85 views of every
+    * session read this same path, so a rewrite would pull files from
+    * under them. What r85 demonstrates, and what every invocation still
+    * pays, is the persistent SQL catalog DDL and the read back through
+    * those views. */
+  private[graft] def r85Store(s: SparkSession, dir: String): String = {
+    val dirTag = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    val path = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_r85_${dirTag}_${ProcessHandle.current().pid()}").toString
+    if (!r85Built.contains(dir)) r85Built.synchronized {
+      if (!r85Built.contains(dir)) {
+        landing(s, dir).write.mode("overwrite").parquet(path)
+        r85Built.add(dir)
+      }
+    }
+    path
+  }
 
   /** The bucketed landing store for `dir` (built on first use, then a
     * pure bucketed-table read). */

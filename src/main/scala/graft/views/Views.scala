@@ -2,71 +2,81 @@ package graft.views
 
 import graft.model._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** The generated query layer of the reference, re-expressed as native
-  * DataFrame operators (SURVEY.md §2.4–§2.5). The reference emits SQL
-  * strings per warehouse dialect; here each view is a declarative
-  * LogicalPlan that Catalyst optimizes (pushdown, pruning, join
-  * strategy) — no dialect generators needed.
+/** The generated query layer of the reference (SURVEY.md §2.4–§2.5).
+  * The reference emits SQL strings per warehouse dialect; here each
+  * view is defined once as a short chain of Spark SQL steps and
+  * rendered either as a DataFrame (a LogicalPlan that Catalyst
+  * optimizes: pushdown, pruning, join strategy) or as the text of a
+  * persistent view — no dialect generators needed.
   */
 object Views {
 
   /** R1 — `_LATEST_ALL_VERSIONS`: per (type,id,version) keep every chunk
     * of the single most recent BATCH_DATE copy (absorbs at-least-once
     * replays). Reference forms: tuple-IN on the grouped max
-    * (snowflake.go:264-273) or self-join (sqlserver.go:213-226); here a
-    * single unordered window max — one shuffle on the document key, no
-    * self-join / double scan, and no per-partition sort (a row_number
-    * would need one).
+    * (snowflake.go:264-273) or self-join (sqlserver.go:213-226); here
+    * one window — one shuffle on the document key, no self-join or
+    * double scan (see [[newestSteps]]).
     *
     * The partition key is deliberately (type,id,version) WITHOUT chunk: a
     * replayed batch re-lands the whole document, so only that batch's
     * chunk set must survive. If a version is re-landed with fewer chunks
     * (e.g. chunk-size config changed), the older batch's higher-numbered
-    * chunks are dropped rather than leaking into list flattens.
-    *
-    * The final dropDuplicates restores the landing PK
-    * (batch_date,type,id,version,chunk — snowflake.go:58) at read time:
-    * the parquet store enforces no PK, so a document delivered twice
-    * within one sync run (same batch_date) would otherwise survive as
-    * two identical-key rows. The reference is backend-split here —
-    * SQLite's INSERT OR REPLACE dedups, Snowflake's informational PK
-    * does not — and we take the safe (SQLite/K3) semantics. The extra
-    * exchange hashes on a superset of the window key and carries only
-    * the winning batch's rows.
-    */
-  def latestAllVersions(landing: DataFrame): DataFrame = {
-    val w = Window.partitionBy("type", "id", "version")
-    landing.withColumn("__maxb", max(col("batch_date")).over(w))
-      .filter(col("batch_date") === col("__maxb")).drop("__maxb")
-      .dropDuplicates("batch_date", "type", "id", "version", "chunk")
-  }
+    * chunks are dropped rather than leaking into list flattens. */
+  def latestAllVersions(landing: DataFrame): DataFrame =
+    frame(landing, latestAllVersionsSteps(landing.columns.toSeq))
 
   /** R2 — `_LATEST`: of those, keep only the max version per (type,id)
-    * (argmax over the full history, snowflake.go:278-287). Implemented as
-    * a second window on the same (type,id)-prefixed key, so AQE can reuse
-    * the exchange from R1 (both windows shuffle on type,id-prefixed
-    * keys). */
-  def latest(landing: DataFrame): DataFrame = {
-    // One exchange, not two: the R2 argmax (max version per (type,id))
-    // runs FIRST, so R1's (type,id,version) window and the PK-restoring
-    // dedup both reuse the hash(type,id) partitioning (subset rule —
-    // HashPartitioning(t,i) clusters every (t,i,v) and every PK group).
-    // Value-identical to R1-then-R2: R1 keeps ≥1 row of every landed
-    // version (it only drops stale replays WITHIN a version), so the max
-    // version per (type,id) is the same computed before or after R1, and
-    // same-PK rows are identical replay copies, so dedup order is moot.
-    val wTI = Window.partitionBy("type", "id")
-    val wTIV = Window.partitionBy("type", "id", "version")
-    landing
-      .withColumn("__maxv", max(col("version")).over(wTI))
-      .filter(col("version") === col("__maxv")).drop("__maxv")
-      .withColumn("__maxb", max(col("batch_date")).over(wTIV))
-      .filter(col("batch_date") === col("__maxb")).drop("__maxb")
-      .dropDuplicates("batch_date", "type", "id", "version", "chunk")
+    * (argmax over the full history, snowflake.go:278-287). R1 and R2
+    * fuse into one (type,id) window whose newest key is
+    * (version, batch_date): the max version, then that version's
+    * newest batch — the same rows as R1-then-R2, on one exchange. */
+  def latest(landing: DataFrame): DataFrame =
+    frame(landing, latestSteps(landing.columns.toSeq))
+
+  /** The order that picks ONE row per landing PK
+    * (batch_date,type,id,version,chunk — snowflake.go:58) after the
+    * newest key: chunk, then every non-key landing column, so the pick
+    * is the least row and a function of the rows alone. The parquet
+    * store enforces no PK, so a document delivered twice within one
+    * sync run (same batch_date) would otherwise survive as two
+    * same-key rows. The reference is backend-split here — SQLite's
+    * INSERT OR REPLACE dedups, Snowflake's informational PK does not —
+    * and we take the safe (SQLite/K3) semantics. */
+  private val pkOrder = "chunk, data, author, date, deleted"
+
+  /** The store views' one window: partition by `key`, order newest
+    * first, then [[pkOrder]]. A row survives when it holds the
+    * partition's newest key (`FIRST_VALUE` of each `newest` column) and
+    * its chunk differs from the previous row's, which keeps the first —
+    * least — row of every PK. One exchange and one sort, and the
+    * output is `cols` (the input's columns). */
+  private def newestSteps(cols: Seq[String], key: Seq[String],
+      newest: Seq[String]): Seq[Step] = {
+    val w = s"PARTITION BY ${key.mkString(", ")} ORDER BY " +
+      newest.map(_ + " DESC").mkString(", ") + s", $pkOrder"
+    Seq(
+      Step("*" +: newest.map(c => s"FIRST_VALUE($c) OVER ($w) AS __newest_$c") :+
+        s"LAG(chunk) OVER ($w) AS __prev_chunk"),
+      Step(cols.map(qi), (newest.map(c => s"$c = __newest_$c") :+
+        "chunk IS DISTINCT FROM __prev_chunk").mkString(" AND ")))
+  }
+
+  private def latestAllVersionsSteps(cols: Seq[String]): Seq[Step] =
+    newestSteps(cols, Seq("type", "id", "version"), Seq("batch_date"))
+
+  private def latestSteps(cols: Seq[String]): Seq[Step] =
+    newestSteps(cols, Seq("type", "id"), Seq("version", "batch_date"))
+
+  /** [[history]]: R1's rows plus the validity columns. */
+  private def historySteps(cols: Seq[String]): Seq[Step] = {
+    val later = "PARTITION BY type, id ORDER BY version " +
+      "RANGE BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING"
+    latestAllVersionsSteps(cols) ++ Seq(
+      Step(Seq("*", "date AS valid_from", s"MIN(date) OVER ($later) AS valid_to")),
+      Step(Seq("*", "valid_to IS NULL AS is_current")))
   }
 
   /** SCD2 `_HISTORY` view: every surviving version of every document
@@ -80,9 +90,8 @@ object Views {
     * valid_to is a RANGE-frame min over later versions (not a
     * row-based lead), so chunk rows of one version share the interval
     * instead of chaining through each other. One (type,id)-keyed
-    * window over the deduped history — the same exchange R1 already
-    * paid, so over a bucketed landing store the view is
-    * exchange-free.
+    * window over the deduped history, so over a bucketed landing
+    * store the view is exchange-free.
     *
     * PRECONDITION: document `date` must be monotone in `version` per
     * (type,id) — the producer-timestamp contract the reference's
@@ -93,20 +102,15 @@ object Views {
     * are detectable as `valid_to < valid_from`; this view surfaces
     * them rather than silently clamping (a clamp would fabricate an
     * interval no producer ever asserted). */
-  def history(landing: DataFrame): DataFrame = {
-    val w = Window.partitionBy("type", "id").orderBy(col("version"))
-      .rangeBetween(1L, Window.unboundedFollowing)
-    latestAllVersions(landing)
-      .withColumn("valid_from", col("date"))
-      .withColumn("valid_to", min(col("date")).over(w))
-      .withColumn("is_current", col("valid_to").isNull)
-  }
+  def history(landing: DataFrame): DataFrame =
+    frame(landing, historySteps(landing.columns.toSeq))
 
   /** Incremental `_LATEST` refresh: fold a NEW landing batch into an
     * already-materialized latest frame without re-reading the version
     * history. Correct because both R1 (max batch_date per
     * (type,id,version)) and R2 (max version per (type,id)) are
-    * associative argmax folds over row sets:
+    * associative argmax folds over row sets, and so is the least-row
+    * pick per PK:
     * latest(history ∪ batch) = latest(latest(history) ∪ batch) — rows
     * the materialized frame already dropped can never win against rows
     * that beat their winners. This includes the re-chunked-replay rule:
@@ -190,40 +194,20 @@ object Views {
   /** Rows R4 would delete (for parity testing: anti-join form,
     * snowflake.go:87-94) — the exact multiset complement of
     * [[latestAllVersions]]: superseded-batch rows AND the extra copies of
-    * same-batch exact PK duplicates that the PK-restoring dropDuplicates
-    * collapses, so prune ∪ pruneDeletes ≡ landing row-for-row. */
+    * same-batch PK duplicates that the PK-restoring pick drops, so
+    * prune ∪ pruneDeletes ≡ landing row-for-row. */
   def pruneDeletes(landing: DataFrame): DataFrame =
     landing.exceptAll(latestAllVersions(landing))
 
   // ─── Typed per-document-type views (V1–V6) ───
-
-  /** Scalar projection of one field per §1.3's cast table; `path` is the
-    * column path inside the parsed struct. */
-  private def scalarCol(path: Column, name: String, fm: FieldMetadata): Option[Column] =
-    fm.fieldType match {
-      case "DOCUMENT" => // V4: FK — project the nested DOCUMENT_ID
-        Some(path.getField(name).getField("DOCUMENT_ID").as(name))
-      case t =>
-        SchemaMapper.scalarType(fm).map(dt => path.getField(name).cast(dt).as(name))
-    }
 
   /** V1+V2+V3 — top-level typed view for `docType`: filter latest rows of
     * that type at chunk 0, parse DATA once with the schema-derived
     * StructType, project one typed column per scalar field plus the root
     * metadata passthrough (_DELETED/_AUTHOR/_VERSION/_DATE,
     * snowflake.go:325-330). Tombstones are visible, not filtered. */
-  def typedView(latestDf: DataFrame, docType: String, ds: DocumentSchema): DataFrame = {
-    val struct = SchemaMapper.structFor(ds)
-    val base = latestDf
-      .filter(col("type") === docType && col("chunk") === 0)
-      .withColumn("__j", from_json(col("data"), struct))
-    val cols =
-      col("id").as("DOCUMENT_ID") +:
-      (ds.fields.flatMap { case (n, fm) => scalarCol(col("__j"), n, fm) } ++
-        Seq(col("deleted").as("_DELETED"), col("author").as("_AUTHOR"),
-          col("version").as("_VERSION"), col("date").as("_DATE")))
-    base.select(cols: _*)
-  }
+  def typedView(latestDf: DataFrame, docType: String, ds: DocumentSchema): DataFrame =
+    frame(latestDf, viewSteps(TypedDef(docType, docType), ds))
 
   /** Variant-native variant of V1+V2+V3: the reference's landing column
     * IS Snowflake VARIANT (snowflake.go:55), and Spark 4 has the native
@@ -293,17 +277,8 @@ object Views {
   /** V5 — nested RECORD child view: same row grain, deeper path. `path`
     * is the field chain from the root, e.g. Seq("LOCATION"). */
   def recordView(latestDf: DataFrame, docType: String, root: DocumentSchema,
-      path: Seq[String]): DataFrame = {
-    val struct = SchemaMapper.structFor(root)
-    val inner = path.foldLeft(root) { (ds, f) => ds(f).recordType.get }
-    val base = latestDf
-      .filter(col("type") === docType && col("chunk") === 0)
-      .withColumn("__j", from_json(col("data"), struct))
-    val nested = path.foldLeft(col("__j"))(_.getField(_))
-    val cols = col("id").as("DOCUMENT_ID") +:
-      inner.fields.flatMap { case (n, fm) => scalarCol(nested, n, fm) }
-    base.select(cols: _*)
-  }
+      path: Seq[String]): DataFrame =
+    frame(latestDf, viewSteps(RecordDef(docType, docType, path), root))
 
   /** Resolve `listPath` (RECORD fields ending at a RECORD LIST) against
     * the schema and return the list element's record type. */
@@ -322,24 +297,6 @@ object Views {
     fm.recordType.get
   }
 
-  /** Shared flatten base for the list-grain views: navigate `listPath`
-    * (RECORD fields ending at a RECORD LIST field) from the parsed
-    * root and explode — one row per list element, keyed by
-    * DOCUMENT_ID. No chunk=0 filter: split chunks (T2) re-union
-    * transparently, and chunks that don't carry the path contribute
-    * nothing (explode of NULL emits no rows). */
-  private def explodedItems(latestDf: DataFrame, docType: String,
-      root: DocumentSchema, listPath: Seq[String]): (DataFrame, DocumentSchema) = {
-    val inner = resolveListPath(root, listPath)
-    val struct = SchemaMapper.structFor(root)
-    val listCol = listPath.foldLeft[Column](
-      from_json(col("data"), struct))(_.getField(_))
-    val base = latestDf
-      .filter(col("type") === docType) // chunk union: all chunks contribute
-      .select(col("id").as("DOCUMENT_ID"), explode(listCol).as("__item"))
-    (base, inner)
-  }
-
   /** V6 — RECORD LIST flatten at any `data`-rooted depth: `listPath` is
     * the RECORD field chain from the root ending at the RECORD LIST
     * field (the reference generates exactly this set — its
@@ -347,20 +304,13 @@ object Views {
     * which holds for every path reached through RECORD recursion and
     * fails only inside another flatten; snowflake.go:352-356). One row
     * per list element, DOCUMENT_ID + LISTITEM_ID first. Lists nested
-    * under another LIST are refused, matching the reference. */
+    * under another LIST are refused, matching the reference. No
+    * chunk=0 filter: split chunks (T2) re-union transparently, and
+    * chunks that don't carry the path contribute nothing (explode of
+    * NULL emits no rows). */
   def recordListView(latestDf: DataFrame, docType: String,
-      root: DocumentSchema, listPath: Seq[String]): DataFrame = {
-    val (base, inner) = explodedItems(latestDf, docType, root, listPath)
-    val cols = Seq(col("DOCUMENT_ID"),
-      col("__item").getField("LISTITEM_ID").cast(StringType).as("LISTITEM_ID")) ++
-      inner.fields.flatMap { case (n, fm2) =>
-        fm2.fieldType match {
-          case "RECORD LIST" => None // list-in-list unsupported
-          case _             => scalarCol(col("__item"), n, fm2)
-        }
-      }
-    base.select(cols: _*)
-  }
+      root: DocumentSchema, listPath: Seq[String]): DataFrame =
+    frame(latestDf, viewSteps(ListDef(docType, docType, listPath), root))
 
   /** V6 at the top level (original signature, kept for callers). */
   def recordListView(latestDf: DataFrame, docType: String,
@@ -377,26 +327,9 @@ object Views {
     * flatten it rides. */
   def listItemRecordView(latestDf: DataFrame, docType: String,
       root: DocumentSchema, listPath: Seq[String],
-      subPath: Seq[String]): DataFrame = {
-    val (base, item) = explodedItems(latestDf, docType, root, listPath)
-    require(subPath.nonEmpty, "subPath must name at least one RECORD field")
-    val inner = subPath.foldLeft(item) { (ds, f) =>
-      val fm = ds(f)
-      require(fm.fieldType == "RECORD",
-        s"$f under list ${listPath.last} is ${fm.fieldType}, not RECORD")
-      fm.recordType.get
-    }
-    val nested = subPath.foldLeft[Column](col("__item"))(_.getField(_))
-    val cols = Seq(col("DOCUMENT_ID"),
-      col("__item").getField("LISTITEM_ID").cast(StringType).as("LISTITEM_ID")) ++
-      inner.fields.flatMap { case (n, fm2) =>
-        fm2.fieldType match {
-          case "RECORD LIST" => None // still inside a flatten: refused
-          case _             => scalarCol(nested, n, fm2)
-        }
-      }
-    base.select(cols: _*)
-  }
+      subPath: Seq[String]): DataFrame =
+    frame(latestDf,
+      viewSteps(ItemRecordDef(docType, docType, listPath, subPath), root))
 
   /** V7 — register the full view catalog for a schema, mirroring the
     * reference's recursive generator (snowflake.go:314-378): `<TYPE>`
@@ -421,16 +354,7 @@ object Views {
           System.err.println(s"graft: error creating view $name: ${e.getMessage}")
       }
     catalogDefs(schema).foreach { d =>
-      val ds = schema(d.docType)
-      d match {
-        case TypedDef(n, dt) => register(n)(typedView(latestDf, dt, ds))
-        case RecordDef(n, dt, p) =>
-          register(n)(recordView(latestDf, dt, ds, p))
-        case ListDef(n, dt, lp) =>
-          register(n)(recordListView(latestDf, dt, ds, lp))
-        case ItemRecordDef(n, dt, lp, sp) =>
-          register(n)(listItemRecordView(latestDf, dt, ds, lp, sp))
-      }
+      register(d.name)(frame(latestDf, viewSteps(d, schema(d.docType))))
     }
     reg.toSeq
   }
@@ -493,129 +417,81 @@ object Views {
     defs.toSeq
   }
 
-  // ─── Persistent catalog (V7 durability parity) ───
+  // ─── One definition per view, rendered two ways ───
 
-  /** SQL identifier / string-literal quoting for generated DDL. */
+  /** One step of a generated view: `SELECT cols FROM <previous step>
+    * WHERE where` (no WHERE when empty). Every view is a short chain of
+    * steps, rendered as a DataFrame by [[frame]] (temp views and the
+    * public builders) and as SQL text by [[sqlText]] (the persistent
+    * catalog), so the two catalogs cannot drift. */
+  private final case class Step(cols: Seq[String], where: String = "")
+
+  private def frame(df: DataFrame, steps: Seq[Step]): DataFrame =
+    steps.foldLeft(df) { (d, s) =>
+      (if (s.where.isEmpty) d else d.where(s.where)).selectExpr(s.cols: _*)
+    }
+
+  /** The steps as one nested SELECT over the relation `ref`. */
+  private def sqlText(ref: String, steps: Seq[Step]): String =
+    steps.foldLeft(ref) { (from, s) =>
+      s"(SELECT ${s.cols.mkString(",\n  ")}\nFROM $from" +
+        (if (s.where.isEmpty) ")" else s"\nWHERE ${s.where})")
+    }.stripPrefix("(").stripSuffix(")")
+
+  /** SQL identifier / string-literal quoting for generated text. */
   private def qi(n: String): String = "`" + n.replace("`", "``") + "`"
   private def ql(s: String): String = "'" + s.replace("'", "''") + "'"
 
-  /** Scalar projection of one field as SQL text — the SQL twin of
-    * [[scalarCol]], character-for-character the same cast table. */
+  /** Scalar projection of one field per §1.3's cast table; `path` is the
+    * SQL path of the parsed struct that holds it. RECORD and RECORD
+    * LIST fields have no scalar type and project nothing. */
   private def scalarSql(path: String, name: String,
       fm: FieldMetadata): Option[String] =
     fm.fieldType match {
-      case "DOCUMENT" =>
+      case "DOCUMENT" => // V4: FK — project the nested DOCUMENT_ID
         Some(s"$path.${qi(name)}.`DOCUMENT_ID` AS ${qi(name)}")
       case _ =>
         SchemaMapper.scalarType(fm).map(dt =>
           s"CAST($path.${qi(name)} AS ${dt.sql}) AS ${qi(name)}")
     }
 
-  private def metaSql = Seq("deleted AS _DELETED", "author AS _AUTHOR",
-    "version AS _VERSION", "date AS _DATE")
-
-  /** The generated-view SQL texts, one per [[ViewDef]] plus the three
-    * store views, all reading the landing store by PATH
-    * (`parquet.`…``) — the path is baked into the view text, so the
-    * definition is self-contained and survives any session. */
-  private[views] def viewSql(d: ViewDef, schema: RootSchema,
-      latestRef: String): String = {
-    val root = schema(d.docType)
-    val ddl = ql(SchemaMapper.structFor(root).toDDL)
-    def typedBase(chunk0: Boolean) =
-      s"""FROM (SELECT *, from_json(data, $ddl) AS __j FROM $latestRef
-         |      WHERE type = ${ql(d.docType)}${if (chunk0) " AND chunk = 0" else ""})""".stripMargin
+  /** One generated view's steps over the latest frame: parse DATA once
+    * with the schema-derived StructType (a from_json DDL literal), then
+    * project the typed columns. The RECORD views navigate the parsed
+    * struct; the list views explode the list first, one row per
+    * element. */
+  private def viewSteps(d: ViewDef, root: DocumentSchema): Seq[Step] = {
+    val parsed = s"from_json(data, ${ql(SchemaMapper.structFor(root).toDDL)})"
+    val ofType = s"type = ${ql(d.docType)}"
+    def at(base: String, path: Seq[String]) = (base +: path.map(qi)).mkString(".")
+    def scalars(base: String, ds: DocumentSchema) =
+      ds.fields.flatMap { case (n, fm) => scalarSql(base, n, fm) }
+    val chunk0 = Step(Seq("*", s"$parsed AS __j"), s"$ofType AND chunk = 0")
+    def items(listPath: Seq[String]) = Step(Seq("id AS DOCUMENT_ID",
+      s"explode(${at(parsed, listPath)}) AS __item"), ofType)
+    val itemId = Seq("DOCUMENT_ID",
+      "CAST(__item.`LISTITEM_ID` AS STRING) AS LISTITEM_ID")
     d match {
-      case TypedDef(_, _) =>
-        val cols = "id AS DOCUMENT_ID" +:
-          (root.fields.flatMap { case (n, fm) => scalarSql("__j", n, fm) } ++
-            metaSql)
-        s"SELECT ${cols.mkString(",\n  ")}\n${typedBase(chunk0 = true)}"
+      case TypedDef(_, _) => Seq(chunk0, Step("id AS DOCUMENT_ID" +:
+        (scalars("__j", root) ++ Seq("deleted AS _DELETED",
+          "author AS _AUTHOR", "version AS _VERSION", "date AS _DATE"))))
       case RecordDef(_, _, path) =>
         val inner = path.foldLeft(root) { (ds, f) => ds(f).recordType.get }
-        val nested = ("__j" +: path.map(qi)).mkString(".")
-        val cols = "id AS DOCUMENT_ID" +:
-          inner.fields.flatMap { case (n, fm) => scalarSql(nested, n, fm) }
-        s"SELECT ${cols.mkString(",\n  ")}\n${typedBase(chunk0 = true)}"
+        Seq(chunk0, Step("id AS DOCUMENT_ID" +: scalars(at("__j", path), inner)))
       case ListDef(_, _, listPath) =>
-        val inner = listPath.init.foldLeft(root)((ds, f) =>
-          ds(f).recordType.get)(listPath.last).recordType.get
-        val arr = (s"from_json(data, $ddl)" +: listPath.map(qi)).mkString(".")
-        val cols = Seq("DOCUMENT_ID",
-          "CAST(__item.`LISTITEM_ID` AS STRING) AS LISTITEM_ID") ++
-          inner.fields.flatMap { case (n, fm) =>
-            if (fm.fieldType == "RECORD LIST") None // list-in-list refused
-            else scalarSql("__item", n, fm)
-          }
-        // chunk union: all chunks contribute (explode of NULL emits none)
-        s"""SELECT ${cols.mkString(",\n  ")}
-           |FROM (SELECT id AS DOCUMENT_ID, explode($arr) AS __item
-           |      FROM $latestRef WHERE type = ${ql(d.docType)})""".stripMargin
+        val inner = resolveListPath(root, listPath)
+        Seq(items(listPath), Step(itemId ++ scalars("__item", inner)))
       case ItemRecordDef(_, _, listPath, subPath) =>
-        val item = listPath.init.foldLeft(root)((ds, f) =>
-          ds(f).recordType.get)(listPath.last).recordType.get
-        val inner = subPath.foldLeft(item)((ds, f) => ds(f).recordType.get)
-        val arr = (s"from_json(data, $ddl)" +: listPath.map(qi)).mkString(".")
-        val nested = ("__item" +: subPath.map(qi)).mkString(".")
-        val cols = Seq("DOCUMENT_ID",
-          "CAST(__item.`LISTITEM_ID` AS STRING) AS LISTITEM_ID") ++
-          inner.fields.flatMap { case (n, fm) =>
-            if (fm.fieldType == "RECORD LIST") None
-            else scalarSql(nested, n, fm)
-          }
-        s"""SELECT ${cols.mkString(",\n  ")}
-           |FROM (SELECT id AS DOCUMENT_ID, explode($arr) AS __item
-           |      FROM $latestRef WHERE type = ${ql(d.docType)})""".stripMargin
+        require(subPath.nonEmpty, "subPath must name at least one RECORD field")
+        val inner = subPath.foldLeft(resolveListPath(root, listPath)) { (ds, f) =>
+          val fm = ds(f)
+          require(fm.fieldType == "RECORD",
+            s"$f under list ${listPath.last} is ${fm.fieldType}, not RECORD")
+          fm.recordType.get
+        }
+        Seq(items(listPath), Step(itemId ++ scalars(at("__item", subPath), inner)))
     }
   }
-
-  private val landingCols = graft.ingest.Landing.schema.fieldNames.toSeq
-
-  /** R1 as SQL over the landing path: max-batch window + the
-    * PK-restoring dedup (a deterministic `ORDER BY data` row_number
-    * replaces dropDuplicates' arbitrary pick — same-PK rows are
-    * identical replay copies, so any pick yields the same row). */
-  private[views] def latestAllVersionsSql(landingRef: String): String =
-    s"""SELECT ${landingCols.mkString(", ")} FROM (
-       |  SELECT *, ROW_NUMBER() OVER (
-       |      PARTITION BY batch_date, type, id, version, chunk
-       |      ORDER BY data) AS __rn
-       |  FROM (SELECT *, MAX(batch_date) OVER (
-       |          PARTITION BY type, id, version) AS __maxb
-       |        FROM $landingRef)
-       |  WHERE batch_date = __maxb)
-       |WHERE __rn = 1""".stripMargin
-
-  /** `_LATEST` as ONE self-contained text over the landing path — the
-    * SQL twin of [[latest]]'s fused shape (R2 argmax first, so the R1
-    * window and the PK row_number reuse the hash(type,id) exchange;
-    * value-identical, see [[latest]]). The previous composed form (an R2
-    * window view over the R1 view) paid two exchanges because R1's
-    * (type,id,version) partitioning cannot serve R2's (type,id). */
-  private[views] def latestFusedSql(landingRef: String): String =
-    s"""SELECT ${landingCols.mkString(", ")} FROM (
-       |  SELECT *, ROW_NUMBER() OVER (
-       |      PARTITION BY batch_date, type, id, version, chunk
-       |      ORDER BY data) AS __rn
-       |  FROM (SELECT *, MAX(batch_date) OVER (
-       |          PARTITION BY type, id, version) AS __maxb
-       |        FROM (SELECT *, MAX(version) OVER (
-       |                PARTITION BY type, id) AS __maxv
-       |              FROM $landingRef)
-       |        WHERE version = __maxv)
-       |  WHERE batch_date = __maxb)
-       |WHERE __rn = 1""".stripMargin
-
-  /** SCD2 history as SQL over the R1 view (same RANGE frame as
-    * [[history]]). */
-  private[views] def historySql(lavRef: String): String =
-    s"""SELECT *, date AS valid_from,
-       |  MIN(date) OVER (PARTITION BY type, id ORDER BY version
-       |    RANGE BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS valid_to,
-       |  MIN(date) OVER (PARTITION BY type, id ORDER BY version
-       |    RANGE BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) IS NULL
-       |    AS is_current
-       |FROM $lavRef""".stripMargin
 
   /** V7-persistent — the reference's durability contract: its generated
     * catalog is `CREATE OR REPLACE SECURE VIEW` DDL that SURVIVES the
@@ -646,13 +522,14 @@ object Views {
     }
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS ${qi(db)}")
     val landingRef = s"parquet.${qi(landingPath)}"
-    val lav = s"${prefix}_LATEST_ALL_VERSIONS"
-    create(lav)(latestAllVersionsSql(landingRef))
+    val cols = graft.ingest.Landing.schema.fieldNames.toSeq
+    create(s"${prefix}_LATEST_ALL_VERSIONS")(
+      sqlText(landingRef, latestAllVersionsSteps(cols)))
+    create(s"${prefix}_LATEST")(sqlText(landingRef, latestSteps(cols)))
+    create(s"${prefix}_HISTORY")(sqlText(landingRef, historySteps(cols)))
     val latestQn = s"${qi(db)}.${qi(s"${prefix}_LATEST")}"
-    create(s"${prefix}_LATEST")(latestFusedSql(landingRef))
-    create(s"${prefix}_HISTORY")(historySql(s"${qi(db)}.${qi(lav)}"))
     catalogDefs(schema).foreach { d =>
-      create(d.name)(viewSql(d, schema, latestQn))
+      create(d.name)(sqlText(latestQn, viewSteps(d, schema(d.docType))))
     }
     reg.toSeq
   }

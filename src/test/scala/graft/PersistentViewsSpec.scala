@@ -26,8 +26,9 @@ class PersistentViewsSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
   private def rec(batch: String, typ: String, id: String, ver: Long,
-      chunk: Int = 0, deleted: Boolean = false, data: String = "{}") =
-    LandingRecord(ts(batch), typ, id, ver, chunk, "a", ts(batch), deleted, data)
+      chunk: Int = 0, deleted: Boolean = false, data: String = "{}",
+      author: String = "a") =
+    LandingRecord(ts(batch), typ, id, ver, chunk, author, ts(batch), deleted, data)
 
   // every view shape in one schema: scalars of each cast class, a
   // DOCUMENT reference, a RECORD, a RECORD LIST under the RECORD, and
@@ -64,9 +65,15 @@ class PersistentViewsSpec extends SparkSpec {
   private def item(id: String, v: Int, x: Double) =
     s"""{"LISTITEM_ID": "$id", "VAL": $v, "POS": {"X": $x}}"""
 
+  private val d2Chunk1 = """{"META": {"ITEMS": [""" + item("D", 4, 3.5) + "]}}"
+  private val d3Data = doc("dead", item("E", 5, 4.5))
+
   // replay (d1 v1 twice), version argmax (d1 v2 wins), a chunk-split
   // list (d2: items split across chunks 0 and 1 — the flatten must
-  // re-union), a tombstone (d3), and one SRC dimension row
+  // re-union), a tombstone (d3), and one SRC dimension row. Two PKs
+  // also carry a second row that is NOT a replay copy, listed first:
+  // d2's chunk 1 with a greater `data` and d3 with a greater `author`
+  // — every store view must keep the least row of each PK.
   private val fixture = Seq(
     rec("2026-01-01 00:00:00", "DOC", "d1", 1,
       data = doc("old", item("A", 1, 0.5))),
@@ -77,9 +84,12 @@ class PersistentViewsSpec extends SparkSpec {
     rec("2026-01-01 00:00:00", "DOC", "d2", 1, chunk = 0,
       data = doc("two", item("C", 3, 2.5))),
     rec("2026-01-01 00:00:00", "DOC", "d2", 1, chunk = 1,
-      data = """{"META": {"ITEMS": [""" + item("D", 4, 3.5) + "]}}"),
+      data = d2Chunk1.replace("\"D\"", "\"Z\"")),
+    rec("2026-01-01 00:00:00", "DOC", "d2", 1, chunk = 1, data = d2Chunk1),
     rec("2026-01-02 00:00:00", "DOC", "d3", 2, deleted = true,
-      data = doc("dead", item("E", 5, 4.5))),
+      data = d3Data, author = "b"),
+    rec("2026-01-02 00:00:00", "DOC", "d3", 2, deleted = true,
+      data = d3Data),
     rec("2026-01-01 00:00:00", "SRC", "s1", 1,
       data = """{"SOURCE_NAME": "UPSTREAM"}"""))
 
@@ -145,6 +155,23 @@ class PersistentViewsSpec extends SparkSpec {
     assert(d1.getAs[String]("OWNER") == "new")
   }
 
+  test("every store view, DataFrame and persistent alike, keeps the " +
+      "least row of a PK") {
+    registered
+    Seq("DOCUMENTS_LATEST_ALL_VERSIONS" -> Views.latestAllVersions(landing),
+      "DOCUMENTS_LATEST" -> Views.latest(landing),
+      "DOCUMENTS_HISTORY" -> Views.history(landing)).foreach { case (name, df) =>
+      Seq("DataFrame" -> df, "persistent" -> spark.table(s"$db.$name"))
+        .foreach { case (form, v) =>
+          def kept(id: String, chunk: Int) =
+            v.filter(s"id = '$id' AND chunk = $chunk").select("data", "author")
+              .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+          assert(kept("d2", 1) == Seq((d2Chunk1, "a")), s"$form $name: data")
+          assert(kept("d3", 0) == Seq((d3Data, "a")), s"$form $name: author")
+        }
+    }
+  }
+
   test("a NEW session resolves the persistent views; temp views are gone") {
     registered
     Views.typedView(Views.latest(landing), "DOC", schema("DOC"))
@@ -166,5 +193,19 @@ class PersistentViewsSpec extends SparkSpec {
     val again = Views.registerAllPersistent(spark, landingDir, schema, db)
     assert(again.toSet == registered.toSet)
     assert(spark.table(s"$db.DOC").count() == 3)
+  }
+
+  test("r85's landing store is written once per JVM: a second session " +
+      "neither rewrites it nor reads different rows") {
+    val r85 = SparkEntry.queries("r85_persistent_view")
+    def listing(path: String) =
+      new java.io.File(path).listFiles().map(f => (f.getName, f.lastModified)).toSet
+    val first = r85(spark, sf001).collect().toSeq
+    val path = graft.queries.DocViews.r85Store(spark, sf001)
+    val files = listing(path)
+    assert(files.exists(_._1.endsWith(".parquet")))
+    val second = r85(spark.newSession(), sf001).collect().toSeq
+    assert(listing(path) == files, "a second session rewrote the r85 store")
+    assert(second == first && first.nonEmpty)
   }
 }

@@ -59,18 +59,17 @@ class PropertySpec extends SparkSpec {
 
   test("incremental latest fold is associative for ANY landing split") {
     import spark.implicits._
-    // row data is a pure function of the landing PK, so exact PK
-    // duplicates across the split are identical rows (R1's PK-restoring
-    // dropDuplicates can then never make an arbitrary choice)
     val gen = for {
       rs <- Gen.listOfN(30, for {
         id <- Gen.oneOf("a", "b", "c", "d")
         ver <- Gen.choose(1L, 4L)
         day <- Gen.choose(1, 5)
         chunk <- Gen.choose(0, 1)
+        author <- Gen.oneOf("au", "ax")
+        tag <- Gen.choose(0, 2)
       } yield LandingRecord(Timestamp.valueOf(f"2026-01-$day%02d 00:00:00"),
-        "T", id, ver, chunk, "au", bd, (ver + day) % 2 == 0,
-        s"$id-$ver-$day-$chunk"))
+        "T", id, ver, chunk, author, bd, (ver + day) % 2 == 0,
+        s"$id-$ver-$day-$chunk-$tag"))
       cut <- Gen.choose(0, 30)
     } yield (rs.distinct, cut)
     check(Prop.forAll(gen) { case (rs, cut0) =>

@@ -16,6 +16,30 @@ class Round16Spec extends SparkSpec {
   private def countExchanges(p: SparkPlan): Int =
     p.toString.linesIterator.count(_.contains("Exchange hashpartitioning"))
 
+  private def countSorts(p: SparkPlan): Int =
+    p.toString.linesIterator.count(_.matches("""[\s+:-]*Sort \[.*"""))
+
+  test("store-view plan guard: latest and latestAllVersions each plan ONE " +
+      "hash exchange and ONE sort over an unbucketed landing") {
+    // the newest-key pick and the PK pick share one window spec, so each
+    // view is one shuffle on the document key and one sort
+    import spark.implicits._
+    val ts = Timestamp.valueOf("2026-01-01 00:00:00")
+    val dir = java.nio.file.Files.createTempDirectory("graft-guard-landing").toString
+    spark.createDataset(for (i <- 1 to 8; v <- 1L to 2L) yield
+      graft.ingest.LandingRecord(ts, "DOC", s"d$i", v, 0, "a", ts,
+        deleted = false, "{}"))
+      .toDF().write.mode("overwrite").parquet(dir)
+    val landing = spark.read.schema(graft.ingest.Landing.schema).parquet(dir)
+    Seq("latest" -> Views.latest(landing),
+      "latestAllVersions" -> Views.latestAllVersions(landing)).foreach {
+      case (name, df) =>
+        val plan = df.queryExecution.executedPlan
+        assert(countExchanges(plan) == 1, s"$name exchanges:\n$plan")
+        assert(countSorts(plan) == 1, s"$name sorts:\n$plan")
+    }
+  }
+
   test("r81: nested list flatten matches the closed form (chunk re-union at depth)") {
     val rows = SparkEntry.queries("r81_nested_list_flatten")(spark, sf001)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))

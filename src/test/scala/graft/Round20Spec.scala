@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
   *  - x86's plan stays one narrow map + a single exchange;
   *  - the equality-only shingle consumers (x48/x57/x64) run the FUSED
   *    STRING shingler (shingles3) — hashed keys were measured and
-  *    rejected (graft.ShingleProbe, decision record in
+  *    rejected (a shingle-key study in git history, decision record in
   *    Frag.sShinglesText), and the fused form must equal the
   *    composable HOF chain it replaced.
   */
