@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Decade cells for the streaming gates (round-12 task 7): measure the
@@ -29,13 +28,7 @@ object StreamDecade {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/sf1x10", "/tmp/sf1x100")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = EngineSession.local("graft-stream-decade", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.llm.Frag._
 

@@ -2,7 +2,8 @@ package graft.ingest
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
@@ -121,29 +122,37 @@ object Ingest {
       .toDF()
   }
 
-  /** Read an NDJSON file/directory into landing form. */
-  def readNdjson(spark: SparkSession, path: String, batchDate: Timestamp,
-      chunkSize: Int = 10000): DataFrame = {
-    import spark.implicits._
-    fromNdjsonLines(spark.read.textFile(path).as[String], batchDate, chunkSize)
+  /** Land one page as one query: parse + chunk split, dedup on the
+    * landing PK (K3: a document delivered twice in a page lands once),
+    * append. The sync loop and the streaming sink both land through
+    * here. Returns the rows parsed (documents plus chunk slices, before
+    * the dedup), observed in that same execution. A page that parses to
+    * nothing writes only `_SUCCESS`, no data file. The observation sits
+    * in the dedup's map stage: a failed task attempt adds nothing, but a
+    * successful map task that is re-executed (speculation, lost shuffle
+    * output) adds its rows once more; the landed rows are unaffected. */
+  def land(lines: Dataset[String], batchDate: Timestamp, chunkSize: Int,
+      landingPath: String): Long = {
+    val parsed = Observation()
+    appendBatch(fromNdjsonLines(lines, batchDate, chunkSize)
+      .observe(parsed, count(lit(1)).as("rows"))
+      .dropDuplicates(Landing.keyCols), landingPath)
+    parsed.get("rows").asInstanceOf[Long]
   }
 
   /** Append a batch to the landing store (K1/K4 analogue: the columnar
-    * write IS the bulk load). Partitioned by type so per-type views prune
-    * files at scan time. `format` covers the Spark-native columnar/row
-    * stores (parquet default; orc for ORC-standardized estates; json
-    * for an interchange-friendly landing log). */
-  def appendBatch(df: DataFrame, landingPath: String,
-      format: String = "parquet"): Unit = {
-    val w = df.write.mode("append").partitionBy("type").format(format)
-    // CSV staging mirrors the reference's file-staged loads (Snowflake
-    // CSV snowflake.go:131-147, Databricks TSV nullValue='NULL'
-    // databricks.go:153-155, 242-247): a sentinel distinguishes NULL
-    // from the empty string, which bare CSV cannot represent
-    (if (format == "csv") w.option("nullValue", "NULL") else w)
-      .save(landingPath)
-    // an in-session reader may hold a memoized plan over this path —
-    // evict so the next read lists the new files
+    * write IS the bulk load). Parquet, partitioned by type so per-type
+    * views prune files at scan time. */
+  def appendBatch(df: DataFrame, landingPath: String): Unit = {
+    df.write.mode("append").partitionBy("type").parquet(landingPath)
+    invalidate(landingPath)
+  }
+
+  /** Evict every in-session reader memoized over `landingPath` (the
+    * `Tables` and `Shared` caches). An append, prune or compaction
+    * changes the files under the path; a memoized plan pins the OLD
+    * listing and would miss new files or fail on deleted ones. */
+  def invalidate(landingPath: String): Unit = {
     graft.queries.Tables.invalidate(landingPath)
     graft.queries.Shared.invalidate(landingPath)
   }
@@ -206,18 +215,7 @@ object Ingest {
     df.sparkSession.catalog.refreshTable(table)
   }
 
-  /** Read the landing store back with the canonical schema (required:
-    * schema-on-read keeps json/csv stores type-exact). */
-  def readLanding(spark: SparkSession, landingPath: String,
-      format: String = "parquet"): DataFrame = {
-    val r = spark.read.schema(Landing.schema).format(format)
-    (if (format == "csv") r.option("nullValue", "NULL") else r)
-      .load(landingPath)
-  }
-
-  /** K3-style idempotent write: drop exact landing-key duplicates within
-    * the batch before append (replays across batches are absorbed by the
-    * latest-version views, SURVEY.md §2.4). */
-  def appendBatchDedup(df: DataFrame, landingPath: String): Unit =
-    appendBatch(df.dropDuplicates(Landing.keyCols), landingPath)
+  /** Read the landing store back with the canonical schema. */
+  def readLanding(spark: SparkSession, landingPath: String): DataFrame =
+    spark.read.schema(Landing.schema).parquet(landingPath)
 }

@@ -492,36 +492,7 @@ object Dedup {
     // (never pairwise over the corpus) with the text payload joined in
     // for survivors only — the verify-after-candidates discipline that
     // keeps fuzzy dedup linear.
-    "x29_edit_distance" -> { (s, dir) =>
-      val pairs = Shared.temp(simhashPairs(s, dir).select("doc_a", "doc_b"))
-      // normalize ONLY pair members (guide §8: the decision set is
-      // pair-graph-sized): the old shape evaluated the whitespace-lower
-      // normalization over the FULL corpus twice — once per join side —
-      // to feed a candidate set thousands of times smaller
-      val ids = pairs.selectExpr("explode(array(doc_a, doc_b)) as doc_id")
-        .distinct()
-      val norm = Shared.temp(t(s, dir, "documents")
-        .join(broadcast(ids), "doc_id")
-        .selectExpr("doc_id", s"$sNorm as nt"))
-      // the DP runs ONCE per pair: the persist boundary stops
-      // CollapseProject from inlining the alias into both consumers and
-      // evaluating it twice. The persisted frame is candidate-pair-sized
-      // (LSH survivors), not corpus-sized. The distance itself is the
-      // banded exact kernel (EditDistance: prefix/suffix strip + Ukkonen
-      // band doubling — O(d·len) on the near-identical candidates
-      // instead of the built-in's full O(len²) table; value-identical,
-      // property-pinned against the built-in by EditDistanceSpec).
-      val lev = Shared.temp(pairs
-        .join(norm.select(col("doc_id").as("doc_a"), col("nt").as("ta")), "doc_a")
-        .join(norm.select(col("doc_id").as("doc_b"), col("nt").as("tb")), "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          expr("length(ta)").as("la"), expr("length(tb)").as("lb"),
-          levBandedUdf(col("ta"), col("tb")).as("lev")))
-      lev.selectExpr("doc_a", "doc_b",
-          "cast(lev as bigint) as edit_dist",
-          sRound6("1.0d - cast(lev as double) / cast(greatest(la, lb, 1) as double)") + " as edit_sim")
-        .orderBy("doc_a", "doc_b")
-    },
+    "x29_edit_distance" -> { (s, dir) => editDistance(s, dir) },
 
     // LSH QUALITY METRICS — the tuning harness every LSH deployment
     // needs: precision/recall of the minhash-banded near-dup pairs
@@ -1111,8 +1082,45 @@ object Dedup {
     m.toInt
   }
 
-  /** Max distinct eval-gram keys the contamination scans will BROADCAST
-    * for the exact semi-join (x119/x109). Below this the join is a
+  /** x29's body. Normalizes ONLY pair members (guide §8: the decision
+    * set is pair-graph-sized): the old shape evaluated the
+    * whitespace-lower normalization over the FULL corpus twice — once
+    * per join side — to feed a candidate set thousands of times smaller.
+    * The member ids are broadcast to the corpus scan while their count,
+    * taken off the persisted pairs, is at most `broadcastKeys`; above
+    * that they take a plain join, so the driver never collects an
+    * unbounded id set. */
+  private[graft] def editDistance(s: SparkSession, dir: String,
+      broadcastKeys: Long = GateBroadcastKeys): DataFrame = {
+    val pairs = Shared.temp(simhashPairs(s, dir).select("doc_a", "doc_b"))
+    val ids = pairs.selectExpr("explode(array(doc_a, doc_b)) as doc_id")
+      .distinct()
+    val norm = Shared.temp(t(s, dir, "documents")
+      .join(if (ids.count() <= broadcastKeys) broadcast(ids) else ids, "doc_id")
+      .selectExpr("doc_id", s"$sNorm as nt"))
+    // the DP runs ONCE per pair: the persist boundary stops
+    // CollapseProject from inlining the alias into both consumers and
+    // evaluating it twice. The persisted frame is candidate-pair-sized
+    // (LSH survivors), not corpus-sized. The distance itself is the
+    // banded exact kernel (EditDistance: prefix/suffix strip + Ukkonen
+    // band doubling — O(d·len) on the near-identical candidates
+    // instead of the built-in's full O(len²) table; value-identical,
+    // property-pinned against the built-in by EditDistanceSpec).
+    val lev = Shared.temp(pairs
+      .join(norm.select(col("doc_id").as("doc_a"), col("nt").as("ta")), "doc_a")
+      .join(norm.select(col("doc_id").as("doc_b"), col("nt").as("tb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        expr("length(ta)").as("la"), expr("length(tb)").as("lb"),
+        levBandedUdf(col("ta"), col("tb")).as("lev")))
+    lev.selectExpr("doc_a", "doc_b",
+        "cast(lev as bigint) as edit_dist",
+        sRound6("1.0d - cast(lev as double) / cast(greatest(la, lb, 1) as double)") + " as edit_sim")
+      .orderBy("doc_a", "doc_b")
+  }
+
+  /** Max distinct keys a plan decision will BROADCAST: x29's pair-member
+    * ids, and the eval-gram keys of the contamination scans' exact
+    * semi-join (x119/x109). Below this the join is a
     * broadcast hash semi-join — the corpus-side positional gram stream
     * never shuffles on the gram string at all, which beats any bloom
     * gate (the gate only *thinned* that exchange; the broadcast removes

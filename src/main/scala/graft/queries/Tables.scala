@@ -30,11 +30,12 @@ object Tables {
   }
 
   /** Drop cached resolutions overlapping `path` — the write paths
-    * (Ingest.appendBatch, Sync.prune/compact) call this so an in-session
-    * rewrite of a cached table is seen by the next read (the cached plan
-    * would otherwise pin the old file listing). Matches any cache entry
-    * whose directory contains, equals, or is contained by the written
-    * path — coarse on purpose: eviction is cheap, staleness is not. */
+    * (append, prune, compact, through Ingest.invalidate) call this so an
+    * in-session rewrite of a cached table is seen by the next read (the
+    * cached plan would otherwise pin the old file listing). Matches any
+    * cache entry whose directory contains, equals, or is contained by the
+    * written path — coarse on purpose: eviction is cheap, staleness is
+    * not. */
   def invalidate(path: String): Unit = {
     val p = path.stripSuffix("/")
     cache.keySet.removeIf { k =>

@@ -13,8 +13,9 @@ import java.sql.Timestamp
   * equivalent is Structured Streaming: the file source's checkpointed
   * offset log IS the cursor (S4/O2), `Trigger.ProcessingTime` is the
   * `Wait` interval (O1), and at-least-once replays are absorbed by the
-  * same latest-version views (R1) as in batch. `foreachBatch` reuses the
-  * exact batch ingest transform, so batch and streaming cannot drift.
+  * same latest-version views (R1) as in batch. Each micro-batch lands
+  * through `Ingest.land`, the page lander of batch sync, so batch and
+  * streaming cannot drift.
   *
   * Beyond reference parity (§2.7 gaps): watermarked windowed
   * aggregation and arbitrary stateful sessionization
@@ -24,11 +25,12 @@ import java.sql.Timestamp
 object Streaming {
 
   /** Streaming sync: NDJSON files arriving in `srcDir` → landing store.
-    * Each micro-batch runs the SAME metadata-projection + chunk-split
-    * transform as batch sync, stamped with the batch wall-clock (the
-    * reference stamps one batch_date per sync run, cmd_sync.go:79).
-    * Exactly-once file tracking via the checkpoint; duplicate landings
-    * after a crash-replay are absorbed by Views.latestAllVersions. */
+    * Each micro-batch is landed by `Ingest.land`, as a sync page is
+    * (parse + chunk split, in-page dedup on the landing PK, append),
+    * stamped with the batch wall-clock (the reference stamps one
+    * batch_date per sync run, cmd_sync.go:79). Exactly-once file
+    * tracking via the checkpoint; duplicate landings after a
+    * crash-replay are absorbed by Views.latestAllVersions. */
   def landingStream(
       spark: SparkSession,
       srcDir: String,
@@ -46,9 +48,9 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (lines: Dataset[String], _: Long) =>
-        val batchDate = new Timestamp(System.currentTimeMillis())
-        val df = Ingest.fromNdjsonLines(lines, batchDate, chunkSize)
-        if (!df.isEmpty) Ingest.appendBatch(df, landingPath)
+        Ingest.land(lines, new Timestamp(System.currentTimeMillis()),
+          chunkSize, landingPath)
+        ()
       }
       .start()
   }

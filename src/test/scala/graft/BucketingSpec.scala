@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Proof of SCALE.md's co-location claim: writing both join sides
   * bucketed by the join key removes every shuffle exchange from the
@@ -236,5 +237,23 @@ class BucketingSpec extends SparkSpec {
       assert(a.nonEmpty && a.toSeq == b.toSeq,
         "bucketed latest view diverges from the unbucketed r24 result")
     } finally spark.sql("DROP TABLE IF EXISTS graft_r68_landing")
+  }
+
+  test("r68's bucketed store is written once per JVM: a second session " +
+      "neither rewrites it nor reads different rows") {
+    val r68 = graft.queries.DocViews.queries("r68_bucketed_latest")
+    val loc = java.nio.file.Paths.get(
+      graft.queries.DocViews.storePath("r68_store", sf001))
+    def listing() = scala.util.Using.resource(Files.walk(loc)) {
+      _.iterator.asScala.filter(Files.isRegularFile(_))
+        .map(f => (loc.relativize(f).toString, Files.getLastModifiedTime(f)))
+        .toSet
+    }
+    val first = r68(spark, sf001).collect().toSeq
+    val files = listing()
+    assert(files.exists(_._1.endsWith(".parquet")))
+    val second = r68(spark.newSession(), sf001).collect().toSeq
+    assert(listing() == files, "a second session rewrote the r68 store")
+    assert(second == first && first.nonEmpty)
   }
 }

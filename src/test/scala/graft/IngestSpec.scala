@@ -48,20 +48,18 @@ class IngestSpec extends SparkSpec {
     assert(Ingest.parseLine(mapper, "", bd, 10).isEmpty)
   }
 
-  test("landing store round-trips through parquet, orc, json and csv formats") {
+  test("landing store round-trips through parquet") {
     import spark.implicits._
     val df = Ingest.fromNdjsonLines(Seq(doc("a", 2), doc("b", 1)).toDS(), bd, 10)
-    Seq("parquet", "orc", "json", "csv").foreach { fmt =>
-      val path = java.nio.file.Files
-        .createTempDirectory(s"graft-landing-$fmt").toString + "/store"
-      Ingest.appendBatch(df, path, fmt)
-      val back = Ingest.readLanding(spark, path, fmt)
-      assert(back.count() == 2, fmt)
-      val a = back.filter("id = 'a'").collect().head
-      assert(a.getAs[java.sql.Timestamp]("batch_date") == bd, fmt)
-      assert(a.getAs[Long]("version") == 3L, fmt)
-      assert(a.getAs[String]("data").contains("\"NAME\""), fmt)
-    }
+    val path = java.nio.file.Files
+      .createTempDirectory("graft-landing").toString + "/store"
+    Ingest.appendBatch(df, path)
+    val back = Ingest.readLanding(spark, path)
+    assert(back.count() == 2)
+    val a = back.filter("id = 'a'").collect().head
+    assert(a.getAs[java.sql.Timestamp]("batch_date") == bd)
+    assert(a.getAs[Long]("version") == 3L)
+    assert(a.getAs[String]("data").contains("\"NAME\""))
   }
 
   test("distributed NDJSON parse preserves all chunks and skips bad lines") {

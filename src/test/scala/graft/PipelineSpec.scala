@@ -189,6 +189,29 @@ class PipelineSpec extends SparkSpec {
     assert(landed.select("id").collect().map(_.getString(0)).toSeq == Seq("b"))
   }
 
+  test("an empty page persists its cursor, lands nothing and ends the run, on both sources") {
+    // file flow: no file after the cursor ⇒ the page's cursor is the one
+    // it was given, persisted even on a first run
+    val src = tmp("empty"); val land = tmp("landempty") + "/landing"
+    val state = tmp("stempty")
+    val p = new SyncPipeline(spark, src, land, state)
+    assert(p.syncOnce() == 0L)
+    assert(Files.readString(Paths.get(state, "last_sync_date.txt")) == p.state.Epoch)
+    assert(!Files.exists(Paths.get(land)))
+
+    // paged flow: an empty page that is marked truncated still ends the
+    // run; its cursor is persisted
+    val land2 = tmp("landempty2") + "/landing"
+    val source = new StubSource(Vector(Nil,
+      Seq("""{"$TYPE":"W","DOCUMENT_ID":"b","$VERSION":1,"N":"b1"}""")))
+    val q = new SyncPipeline(spark, "", land2, tmp("stempty2"))
+    assert(q.syncFrom(source) == 0L)
+    assert(q.state.read() == "p1")
+    assert(!Files.exists(Paths.get(land2)))
+    assert(q.syncFrom(source) == 1L)
+    assert(q.state.read() == "p2")
+  }
+
   test("a page returns its parsed rows, lands them deduplicated, in one shuffle") {
     val land = tmp("one") + "/landing"
     val b = """{"$TYPE":"W","DOCUMENT_ID":"b","$VERSION":1,"N":"b1"}"""

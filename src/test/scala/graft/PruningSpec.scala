@@ -22,7 +22,7 @@ class PruningSpec extends SparkSpec {
     val df = Ingest.fromNdjsonLines(lines.toDS(), bd, 10000)
     val path = java.nio.file.Files
       .createTempDirectory("graft-prune").toString + "/store"
-    Ingest.appendBatch(df, path, "parquet")
+    Ingest.appendBatch(df, path)
 
     val q = Ingest.readLanding(spark, path)
       .filter(col("type") === "invoice" && col("version") >= 1)

@@ -94,6 +94,14 @@ class Round17Spec extends SparkSpec {
     assert(plain.nonEmpty)
   }
 
+  test("x29: above the broadcast bound the pair members take a plain join, same rows") {
+    val broadcastPath = graft.llm.Dedup.editDistance(spark, sf001).collect().toSeq
+    val plain = graft.llm.Dedup.editDistance(spark, sf001, broadcastKeys = 0L)
+      .collect().toSeq
+    assert(plain == broadcastPath)
+    assert(plain.nonEmpty)
+  }
+
   test("x119/x109 gate sizing: ~16 bits/key, power of two, floored at 2^17, capped at 2^27") {
     import graft.llm.Dedup.gateBits
     assert(gateBits(0L) == (1 << 17))

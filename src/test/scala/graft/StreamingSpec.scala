@@ -30,6 +30,16 @@ class StreamingSpec extends SparkSpec {
     assert(Views.latest(landing).count() == 2) // a@2, b@1
   }
 
+  test("landingStream lands an in-page replay once, as a sync page does") {
+    val src = Files.createTempDirectory("graft-stream-replay-src").toString
+    val land = Files.createTempDirectory("graft-stream-replay-land").toString + "/landing"
+    val ckpt = Files.createTempDirectory("graft-stream-replay-ckpt").toString
+    val a = """{"$TYPE":"W","DOCUMENT_ID":"a","$VERSION":1,"N":"a1"}"""
+    Files.writeString(Paths.get(src, "f001.ndjson"), Seq(a, a).mkString("\n"))
+    Streaming.landingStream(spark, src, land, ckpt).awaitTermination()
+    assert(spark.read.schema(graft.ingest.Landing.schema).parquet(land).count() == 1)
+  }
+
   test("windowedEventStats aggregates tumbling windows (batch-mode parity)") {
     import spark.implicits._
     val events = Seq(
