@@ -2,8 +2,9 @@ package graft.ingest
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, count, lit, row_number}
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
@@ -37,6 +38,13 @@ object Landing {
     StructField("data", StringType, true),
   ))
   val keyCols: Seq[String] = Seq("batch_date", "type", "id", "version", "chunk")
+
+  /** The order that picks ONE row among rows sharing a landing PK:
+    * every non-key column, ascending, so the pick is the least row and a
+    * function of the rows alone. The in-page pick (`Ingest.land`) and
+    * the store views (`Views`, after their newest key and chunk) both
+    * order by it, so a page lands the row the views would keep. */
+  val pickOrder: Seq[String] = Seq("data", "author", "date", "deleted")
 }
 
 /** NDJSON document batch → landing DataFrame.
@@ -54,6 +62,10 @@ object Landing {
   * flatten) even though Parquet has no VARIANT size limit.
   */
 object Ingest {
+
+  /** Derived once: a per-call `spark.implicits` encoder re-runs Scala
+    * reflection on every page. */
+  private val landingEncoder: Encoder[LandingRecord] = Encoders.product[LandingRecord]
 
   /** Parse one line; None on any malformed input (skip semantics). */
   private[graft] def parseLine(
@@ -111,32 +123,39 @@ object Ingest {
   /** Distributed NDJSON → landing rows. */
   def fromNdjsonLines(
       lines: Dataset[String], batchDate: Timestamp,
-      chunkSize: Int = 10000): DataFrame = {
-    val spark = lines.sparkSession
-    import spark.implicits._
+      chunkSize: Int = 10000): DataFrame =
     lines
-      .mapPartitions { it =>
+      .mapPartitions { (it: Iterator[String]) =>
         val mapper = new ObjectMapper()
         it.flatMap(l => parseLine(mapper, l, batchDate, chunkSize))
-      }
+      }(landingEncoder)
       .toDF()
-  }
 
-  /** Land one page as one query: parse + chunk split, dedup on the
+  /** Land one page as one query: parse + chunk split, keep one row per
     * landing PK (K3: a document delivered twice in a page lands once),
-    * append. The sync loop and the streaming sink both land through
-    * here. Returns the rows parsed (documents plus chunk slices, before
-    * the dedup), observed in that same execution. A page that parses to
+    * append. The kept row is the least under [[Landing.pickOrder]]
+    * (`row_number() = 1`), the row the store views keep, so the landed
+    * rows are a function of the page. `batch_date` is not in the pick's
+    * key: one call stamps one `batchDate`. With `GraftExtensions`,
+    * `TopKRewrite` plans the pick as a map-side top-1, one exchange and
+    * one sort, and that sort also gives the write its `type` order.
+    * The sync loop and the streaming sink both land through here.
+    * Returns the rows parsed (documents plus chunk slices, before the
+    * pick), observed in that same execution. A page that parses to
     * nothing writes only `_SUCCESS`, no data file. The observation sits
-    * in the dedup's map stage: a failed task attempt adds nothing, but a
-    * successful map task that is re-executed (speculation, lost shuffle
-    * output) adds its rows once more; the landed rows are unaffected. */
+    * in the pick's map stage, below its map-side top-1: a failed task
+    * attempt adds nothing, but a successful map task that is re-executed
+    * (speculation, lost shuffle output) adds its rows once more; the
+    * landed rows are unaffected. */
   def land(lines: Dataset[String], batchDate: Timestamp, chunkSize: Int,
       landingPath: String): Long = {
     val parsed = Observation()
+    val pk = Window.partitionBy(Landing.keyCols.filter(_ != "batch_date").map(col): _*)
+      .orderBy(Landing.pickOrder.map(col): _*)
     appendBatch(fromNdjsonLines(lines, batchDate, chunkSize)
       .observe(parsed, count(lit(1)).as("rows"))
-      .dropDuplicates(Landing.keyCols), landingPath)
+      .withColumn("__pick", row_number().over(pk))
+      .where(col("__pick") === 1).drop("__pick"), landingPath)
     parsed.get("rows").asInstanceOf[Long]
   }
 

@@ -28,10 +28,12 @@ trait PagedSource {
   * and the schema endpoint (schema.go:37-94):
   *   GET {base}/fetch/document/schema[?calc=true] → RootSchema JSON.
   *
-  * The page is the unit of driver-side memory; each page lands as one
-  * micro-batch, so ingest memory is bounded by `limit` regardless of
-  * how far behind the cursor is (matching the reference's streaming
-  * reader contract, cmd_sync.go:161-165). */
+  * The page is the unit of driver-side memory: the driver holds one
+  * page's body while `SyncPipeline.syncFrom` spools it to a local
+  * NDJSON file, and the executors read the page from that file, so
+  * ingest memory is bounded by `limit` regardless of how far behind
+  * the cursor is (matching the reference's streaming reader contract,
+  * cmd_sync.go:161-165). */
 final class HttpDocumentSource(
     baseUrl: String,
     user: String,

@@ -4,6 +4,7 @@ import graft.ingest.Ingest
 import graft.model.RootSchema
 import graft.views.Views
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, Path}
 import java.sql.Timestamp
 import scala.annotation.tailrec
@@ -63,14 +64,22 @@ final class SyncPipeline(
   }
 
   /** One sync run against any paged source (e.g. HttpDocumentSource).
-    * Returns the rows parsed (see `sync`). */
-  def syncFrom(source: PagedSource, force: Boolean = false): Long =
-    sync(force) { since =>
+    * Each page's lines are spooled to `{stateDir}/page.ndjson` and land
+    * through the same text-file reader as the file source (Spark sizes
+    * the splits); the next page overwrites the spool, and the run
+    * deletes it when it ends, landed or not. Returns the rows parsed
+    * (see `sync`). */
+  def syncFrom(source: PagedSource, force: Boolean = false): Long = {
+    val spool = Paths.get(stateDir, "page.ndjson")
+    try sync(force) { since =>
       val page = source.fetchPage(since)
-      import spark.implicits._
-      (Option.when(page.lines.nonEmpty)(spark.createDataset(page.lines)),
-        page.cursor, page.truncated)
-    }
+      (Option.when(page.lines.nonEmpty) {
+        Files.createDirectories(spool.getParent)
+        Files.write(spool, page.lines.asJava, StandardCharsets.UTF_8)
+        spark.read.textFile(spool.toString)
+      }, page.cursor, page.truncated)
+    } finally Files.deleteIfExists(spool)
+  }
 
   /** The sync loop (cmd_sync.go:77-187): `fetch` the page after the
     * cursor as (lines, the page's cursor, truncated), land it unless it
@@ -78,7 +87,7 @@ final class SyncPipeline(
     * while the page is truncated and non-empty. An empty page still
     * persists its cursor. One batch_date stamps the whole run. Returns
     * the rows parsed: documents plus chunk slices, counted before the
-    * in-page dedup. */
+    * in-page pick. */
   private def sync(force: Boolean)(
       fetch: String => (Option[Dataset[String]], String, Boolean)): Long = {
     val batchDate = new Timestamp(System.currentTimeMillis())

@@ -1,5 +1,6 @@
 package graft.views
 
+import graft.ingest.Landing
 import graft.model._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -38,14 +39,15 @@ object Views {
 
   /** The order that picks ONE row per landing PK
     * (batch_date,type,id,version,chunk — snowflake.go:58) after the
-    * newest key: chunk, then every non-key landing column, so the pick
-    * is the least row and a function of the rows alone. The parquet
-    * store enforces no PK, so a document delivered twice within one
-    * sync run (same batch_date) would otherwise survive as two
+    * newest key: chunk, then [[Landing.pickOrder]] (every non-key
+    * landing column), so the pick is the least row and a function of
+    * the rows alone — the row `Ingest.land` keeps within a page. The
+    * parquet store enforces no PK, so a document delivered twice within
+    * one sync run (same batch_date) would otherwise survive as two
     * same-key rows. The reference is backend-split here — SQLite's
     * INSERT OR REPLACE dedups, Snowflake's informational PK does not —
     * and we take the safe (SQLite/K3) semantics. */
-  private val pkOrder = "chunk, data, author, date, deleted"
+  private val pkOrder = ("chunk" +: Landing.pickOrder).mkString(", ")
 
   /** The store views' one window: partition by `key`, order newest
     * first, then [[pkOrder]]. A row survives when it holds the

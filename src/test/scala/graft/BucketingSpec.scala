@@ -224,19 +224,17 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("r68_bucketed_latest: public query runs R1/R2 exchange-free and matches r24") {
-    try {
-      val r68 = graft.queries.DocViews.queries("r68_bucketed_latest")(spark, sf001)
-      val plan = r68.queryExecution.executedPlan.toString
-      // the landing-store pipeline must not hash-shuffle; the only
-      // exchange allowed is the final orderBy's range partitioning
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"r68 must be exchange-free over the bucketed store:\n$plan")
-      val a = r68.collect().map(_.toSeq)
-      val b = graft.queries.DocViews.queries("r24_document_latest_view")(spark, sf001)
-        .collect().map(_.toSeq)
-      assert(a.nonEmpty && a.toSeq == b.toSeq,
-        "bucketed latest view diverges from the unbucketed r24 result")
-    } finally spark.sql("DROP TABLE IF EXISTS graft_r68_landing")
+    val r68 = graft.queries.DocViews.queries("r68_bucketed_latest")(spark, sf001)
+    val plan = r68.queryExecution.executedPlan.toString
+    // the landing-store pipeline must not hash-shuffle; the only
+    // exchange allowed is the final orderBy's range partitioning
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"r68 must be exchange-free over the bucketed store:\n$plan")
+    val a = r68.collect().map(_.toSeq)
+    val b = graft.queries.DocViews.queries("r24_document_latest_view")(spark, sf001)
+      .collect().map(_.toSeq)
+    assert(a.nonEmpty && a.toSeq == b.toSeq,
+      "bucketed latest view diverges from the unbucketed r24 result")
   }
 
   test("r68's bucketed store is written once per JVM: a second session " +

@@ -1,7 +1,8 @@
 package graft
 
-import graft.ingest.Landing
+import graft.ingest.{Ingest, Landing}
 import graft.pipeline.{PagedSource, SourcePage, SyncPipeline, SyncState}
+import graft.streaming.Streaming
 import graft.views.Views
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.ListenerBusDrain
@@ -216,16 +217,20 @@ class PipelineSpec extends SparkSpec {
     val land = tmp("one") + "/landing"
     val b = """{"$TYPE":"W","DOCUMENT_ID":"b","$VERSION":1,"N":"b1"}"""
     // chunkSize 2: a's five readings split into a main row + 3 slices;
-    // b is replayed within the page. One line per scan partition (3
-    // lines, local[4]), so no map-side combine merges the replay.
+    // b is replayed within the page. The page spools to one small file,
+    // one scan split, so the pick's map-side top-1 drops the replay
+    // before the exchange.
     val page = Seq(
       """{"$TYPE":"W","DOCUMENT_ID":"a","$VERSION":1,"R":[1,2,3,4,5]}""", b, b)
     val p = new SyncPipeline(spark, "", land, tmp("stone"), chunkSize = 2)
     val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val mapStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         if (e.taskMetrics != null)
           shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+        if (e.taskType == "ShuffleMapTask") mapStages.add(e.stageId)
+      }
     }
     ListenerBusDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
@@ -240,7 +245,108 @@ class PipelineSpec extends SparkSpec {
     assert(landed.count() == 5L)
     assert(landed.filter("id = 'a'").select("chunk").collect()
       .map(_.getInt(0)).sorted.toSeq == Seq(0, 1, 2, 3))
-    // the dedup's exchange only: every parsed row crosses it once
-    assert(shuffled.get == parsed)
+    // the pick's exchange only, behind its map-side top-1: exactly the
+    // landed rows cross it, in one shuffle-map stage
+    assert(shuffled.get == 5L)
+    assert(mapStages.size == 1, s"shuffle-map stages: $mapStages")
+  }
+
+  test("an HTTP page lands through a text-file scan, one exchange, no aggregate and no sort on type") {
+    import graft.plans.TopKPerKey.{FinalTopKExec, PartialTopKExec}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val writes = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.toString.contains("InsertIntoHadoopFsRelationCommand"))
+          writes.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val land = tmp("plan") + "/landing"
+    val page = Seq(
+      """{"$TYPE":"W","DOCUMENT_ID":"a","$VERSION":1,"N":"a1"}""",
+      """{"$TYPE":"V","DOCUMENT_ID":"b","$VERSION":1,"N":"b1"}""")
+    spark.listenerManager.register(listener)
+    try {
+      new SyncPipeline(spark, "", land, tmp("stplan"))
+        .syncFrom(new StubSource(Vector(page)))
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1)
+    object nodes extends AdaptiveSparkPlanHelper
+    val plan = writes.get(0)
+    def count(pf: PartialFunction[SparkPlan, Unit]): Int = nodes.collect(plan)(pf).size
+    assert(count { case s: FileSourceScanExec
+        if s.relation.fileFormat.isInstanceOf[TextFileFormat] => } == 1, plan)
+    assert(count { case _: LocalTableScanExec => } == 0, plan)
+    assert(count { case _: SortAggregateExec => } == 0, plan)
+    assert(count { case _: ShuffleExchangeExec => } == 1, plan)
+    assert(count { case _: PartialTopKExec => } == 1, plan)
+    assert(count { case _: FinalTopKExec => } == 1, plan)
+    // one sort, the pick's (type, id, version, chunk, ...) — the write's
+    // type order rides on it
+    assert(count { case _: SortExec => } == 1, plan)
+    assert(count { case s: SortExec if s.sortOrder.size == 1 => } == 0, plan)
+  }
+
+  test("the in-page pick lands the least row of a PK, the row DOCUMENTS_LATEST keeps, on every lander") {
+    val x = """{"$TYPE":"W","DOCUMENT_ID":"a","$VERSION":1,"N":"x"}"""
+    val y = """{"$TYPE":"W","DOCUMENT_ID":"a","$VERSION":1,"N":"y"}"""
+    import spark.implicits._
+    val kept = Views.latest(Ingest.fromNdjsonLines(Seq(y, x).toDS(),
+      new java.sql.Timestamp(0L), 10000)).select("data").as[String].collect().toSeq
+    assert(kept.size == 1 && kept.head.contains("\"x\""))
+    def landedData(land: String): Seq[String] =
+      spark.read.schema(Landing.schema).parquet(land)
+        .select("data").as[String].collect().toSeq
+    for (page <- Seq(Seq(x, y), Seq(y, x))) {
+      val paged = tmp("pickpaged") + "/landing"
+      new SyncPipeline(spark, "", paged, tmp("stpickpaged"))
+        .syncFrom(new StubSource(Vector(page)))
+      val src = tmp("pickfile"); val filed = tmp("pickfiled") + "/landing"
+      writeNdjson(src, "f001.ndjson", page: _*)
+      new SyncPipeline(spark, src, filed, tmp("stpickfile")).syncOnce()
+      val streamSrc = tmp("pickstream"); val streamed = tmp("pickstreamed") + "/landing"
+      writeNdjson(streamSrc, "f001.ndjson", page: _*)
+      Streaming.landingStream(spark, streamSrc, streamed, tmp("pickckpt"))
+        .awaitTermination()
+      for ((lander, land) <- Seq("syncFrom" -> paged, "syncOnce" -> filed,
+          "landingStream" -> streamed))
+        assert(landedData(land) == kept, s"$lander over ${page.mkString(" | ")}")
+    }
+  }
+
+  test("syncFrom spools each page to the state dir and leaves no spool; a failed landing keeps the cursor") {
+    val base = tmp("spool"); val land = base + "/landing"; val state = tmp("stspool")
+    val spool = Paths.get(state, "page.ndjson")
+    val a = """{"$TYPE":"W","DOCUMENT_ID":"a","$VERSION":1,"N":"a1"}"""
+    val b = """{"$TYPE":"W","DOCUMENT_ID":"b","$VERSION":1,"N":"b1"}"""
+    val source = new StubSource(Vector(Seq(a)))
+    val p = new SyncPipeline(spark, "", land, state)
+    assert(p.syncFrom(source) == 1L)
+    assert(p.state.read() == "p1")
+    assert(!Files.exists(spool))
+
+    // a regular file in place of the landing dir makes the append throw
+    source.pages :+= Seq(b)
+    val aside = Paths.get(base, "landing.aside")
+    Files.move(Paths.get(land), aside)
+    Files.writeString(Paths.get(land), "not a directory")
+    intercept[Exception](p.syncFrom(source))
+    assert(p.state.read() == "p1")
+    assert(!Files.exists(spool))
+
+    Files.delete(Paths.get(land))
+    Files.move(aside, Paths.get(land))
+    assert(p.syncFrom(source) == 1L)
+    assert(p.state.read() == "p2")
+    assert(!Files.exists(spool))
+    assert(spark.read.schema(Landing.schema).parquet(land).select("id")
+      .collect().map(_.getString(0)).sorted.toSeq == Seq("a", "b"))
   }
 }

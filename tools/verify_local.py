@@ -111,4 +111,8 @@ if jpath:
                "total_dumped": len(report), "compare": "exact-value",
                "queries": report}, open(jpath, "w"), indent=1)
     print(f"wrote {jpath}")
+# close before exit: a connection left to interpreter teardown can end
+# the process with SIGABRT ("terminate called without an active
+# exception") after a clean summary
+con.close()
 sys.exit(1 if fail else 0)
