@@ -136,9 +136,11 @@ object Ingest {
     * append. The kept row is the least under [[Landing.pickOrder]]
     * (`row_number() = 1`), the row the store views keep, so the landed
     * rows are a function of the page. `batch_date` is not in the pick's
-    * key: one call stamps one `batchDate`. With `GraftExtensions`,
-    * `TopKRewrite` plans the pick as a map-side top-1, one exchange and
-    * one sort, and that sort also gives the write its `type` order.
+    * key: one call stamps one `batchDate`. On a session built with
+    * `GraftExtensions` (every `EngineSession`), `TopKRewrite` plans the
+    * pick as a map-side top-1, one exchange and one sort, and that sort
+    * also gives the write its `type` order; elsewhere it stays Spark's
+    * window, with the same rows.
     * The sync loop and the streaming sink both land through here.
     * Returns the rows parsed (documents plus chunk slices, before the
     * pick), observed in that same execution. A page that parses to

@@ -11,9 +11,9 @@ import Frag._
   * n-gram Jaccard via an inverted-index join.
   *
   * Scale design (the part that matters at 100 TB):
-  *  - signatures (minhash/simhash) are explode + codegen'd keyed
-  *    aggregations (map-side partial agg, no interpreted HOFs in the
-  *    hot path, per-element cost independent of document size);
+  *  - signatures (minhash/simhash) are fused per-row kernels
+  *    (plans.Minhash16/Simhash60: one md5 per shingle, no shuffle, no
+  *    interpreted HOFs in the hot path);
   *  - candidate generation NEVER does an O(n²) cross join: MinHash
   *    shuffles on (band_idx, band_hash), SimHash on 15-bit chunks
   *    (pigeonhole: 4 chunks guarantee recall for hamming ≤ 3), Jaccard
@@ -56,13 +56,8 @@ object Dedup {
     val reps = docFp(s, dir)
       .groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
-    // fused native shingler when GraftExtensions is installed; the
-    // composable HOF chain otherwise (identical output, oracle-checked)
-    val shingleExpr =
-      if (s.catalog.functionExists("shingles3")) "shingles3(text)"
-      else sLet(sTokens, "tk", sShingles)
     base.join(reps, "doc_id")
-      .selectExpr("doc_id", s"$shingleExpr as shs")
+      .selectExpr("doc_id", "shingles3(text) as shs")
       .filter("size(shs) > 0")
   }
 
@@ -71,8 +66,8 @@ object Dedup {
     * stays under ~30%, a realistic regime with a nonzero — and, because
     * the positions are md5-derived, fully deterministic — false-positive
     * set that the oracle reproduces. */
-  private[llm] val BloomM = 1 << 17
-  private[llm] val BloomK = 3
+  private[graft] val BloomM = 1 << 17
+  private[graft] val BloomK = 3
 
   /** doc_id, split bucket, distinct 8-gram set — shared by the x21
     * semi-join scan and the x61 bloom scan (one cached copy, and x21
@@ -86,46 +81,24 @@ object Dedup {
           s"${sLet(sTokens, "tk", sGrams8)} as gs")
     }
 
-  /** x61's body, with the path made explicit so the spec can run both
-    * forms on one session and assert equality: `native` uses the
-    * BloomBitsAgg bitset + codegen'd probe; the fallback is the
+  /** x61's body: the test grams fold into one BloomBitsAgg bitset,
+    * broadcast, and each train gram probes it with the codegen'd
+    * bloom_might_contain. BloomSpec checks it against the
     * positions-subset semi-join (the bloom's defining equivalence, and
     * the oracle's shape). */
-  private[graft] def bloomDecontam(
-      s: SparkSession, dir: String, native: Boolean): DataFrame = {
+  private[graft] def bloomDecontam(s: SparkSession, dir: String): DataFrame = {
     val m = BloomM; val k = BloomK
     val grams = splitGrams(s, dir)
     val trainDocs = grams.filter("bucket < 80").select("doc_id", "gs")
-    def posList(h: String) =
-      (0 until k).map(j => s"${sDerive(h, j)} % $m").mkString(", ")
-    val flagged =
-      if (native) {
-        val bloom = grams.filter("bucket >= 90")
-          .selectExpr("explode(gs) as g")
-          .selectExpr(s"${sH("g")} as h")
-          .agg(expr(s"bloom_bits(h, $m, $k)").as("bloom"))
-        trainDocs.selectExpr("doc_id", "explode(gs) as g")
-          .crossJoin(broadcast(bloom))
-          .selectExpr("doc_id", s"bloom_might_contain(bloom, ${sH("g")}, $k) as hit")
-          .filter("hit")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_flagged"))
-      } else {
-        // composable fallback (no extension): count how many of the k
-        // derived positions each train gram finds among the distinct
-        // test-set positions — `all k set` ≡ bloom membership
-        val tpos = grams.filter("bucket >= 90")
-          .selectExpr("explode(gs) as g").distinct()
-          .selectExpr(s"${sH("g")} as h")
-          .selectExpr(s"explode(array(${posList("h")})) as p")
-          .distinct()
-        trainDocs.selectExpr("doc_id", "explode(gs) as g")
-          .selectExpr("doc_id", "g", s"${sH("g")} as h")
-          .selectExpr("doc_id", "g", s"explode(array(${posList("h")})) as p")
-          .join(tpos, "p")
-          .groupBy("doc_id", "g").agg(count(lit(1)).as("nset"))
-          .filter(s"nset = $k")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_flagged"))
-      }
+    val bloom = grams.filter("bucket >= 90")
+      .selectExpr("explode(gs) as g")
+      .selectExpr(s"${sH("g")} as h")
+      .agg(expr(s"bloom_bits(h, $m, $k)").as("bloom"))
+    val flagged = trainDocs.selectExpr("doc_id", "explode(gs) as g")
+      .crossJoin(broadcast(bloom))
+      .selectExpr("doc_id", s"bloom_might_contain(bloom, ${sH("g")}, $k) as hit")
+      .filter("hit")
+      .groupBy("doc_id").agg(count(lit(1)).as("n_flagged"))
     trainDocs
       .selectExpr("doc_id", "cast(size(gs) as bigint) as n_grams")
       .join(flagged, Seq("doc_id"), "left")
@@ -165,32 +138,18 @@ object Dedup {
   private def dBandHash(b: Int) =
     dH(s"concat_ws(',', m${4 * b}, m${4 * b + 1}, m${4 * b + 2}, m${4 * b + 3})")
 
-  /** Spark minhash signature frame: doc_id, m0..m15. One md5 per
-    * exploded shingle, then 16 rotate-xor `min` aggregates in a single
-    * codegen'd aggregation (map-side partial agg, one shuffle on
-    * doc_id) — no interpreted higher-order functions in the hot path,
-    * and per-element cost independent of document size. */
+  /** Spark minhash signature frame: doc_id, m0..m15, from the fused
+    * minhash16 kernel: one md5 per shingle, 16 rotate-xor minima in
+    * registers, no shuffle. The persist boundary stops projection
+    * collapse from inlining (and so re-evaluating) minhash16 into all
+    * 16 columns; shared because x06, x07 and x35 all consume the
+    * signatures. */
   private def signatures(s: SparkSession, dir: String): DataFrame =
-    if (s.catalog.functionExists("minhash16")) {
-      // fused native form: one md5 per shingle, 16 minima in registers,
-      // no shuffle. The persist boundary stops projection collapse from
-      // inlining (and so re-evaluating) minhash16 into all 16 columns;
-      // shared because x06, x07 and x35 all consume the signatures.
-      Durable.tier(s, dir, "minhash_ms", "v1-s16") {
-        shingled(s, dir).selectExpr("doc_id", "minhash16(shs) as ms")
-      }
-        .selectExpr("doc_id" +:
-          (0 until Seeds).map(i => s"element_at(ms, ${i + 1}) as m$i"): _*)
-    } else {
-      // composable fallback: explode + 16 codegen'd min aggregates
-      val minima = (0 until Seeds).map(i =>
-        expr(s"min(${sDerive("h", i)})").as(s"m$i"))
-      shingled(s, dir)
-        .selectExpr("doc_id", "explode(shs) as sh")
-        .selectExpr("doc_id", s"${sH("sh")} as h")
-        .groupBy("doc_id")
-        .agg(minima.head, minima.tail: _*)
+    Durable.tier(s, dir, "minhash_ms", "v1-s16") {
+      shingled(s, dir).selectExpr("doc_id", "minhash16(shs) as ms")
     }
+      .selectExpr("doc_id" +:
+        (0 until Seeds).map(i => s"element_at(ms, ${i + 1}) as m$i"): _*)
 
   /** DURABLE (shingle → stats) tier over the RAW corpus: per distinct
     * 3-word shingle, its document frequency, first-seer doc (min
@@ -231,7 +190,7 @@ object Dedup {
     Durable.tier(s, dir, "shingle_df", "v1-w3-ws-lower") {
       t(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism)
-        .selectExpr("doc_id", "source", s"${sShinglesText(s)} as shs")
+        .selectExpr("doc_id", "source", s"$sShinglesText as shs")
         .selectExpr("doc_id", "source", "explode(shs) as sh")
         .groupBy("sh")
         .agg(count(lit(1)).as("df"),
@@ -287,35 +246,13 @@ object Dedup {
        |                   JOIN fs2 b ON p.doc_b = b.doc_id),
        |fs3 AS (SELECT * FROM fs2 WHERE doc_id NOT IN (SELECT doc_id FROM drp))""".stripMargin
 
-  /** Spark simhash over shingles: explode the shingle hashes and take a
-    * per-bit majority vote as 60 codegen'd conditional sums in ONE
-    * aggregation (map-side partial agg, one shuffle on doc_id), then
-    * assemble the 60-bit word in a single projection. This is the
-    * shape that scales: no per-row megaloop, so a document with 10^6
-    * shingles costs the same per-element work as a small one. */
+  /** Spark simhash over shingles: the fused simhash60 kernel takes the
+    * per-bit majority vote over the shingle hashes in one narrow map —
+    * no shuffle until the chunk join. */
   private def simhashed(s: SparkSession, dir: String): DataFrame =
-      Durable.tier(s, dir, "simhashed", "v1-b60") {
-    if (s.catalog.functionExists("simhash60"))
-      // fused native form: narrow map, no shuffle until the chunk join
-      shingled(s, dir)
-        .selectExpr("doc_id", "simhash60(shs) as simhash")
-    else {
-      // composable fallback: explode + 60 per-bit majority sums in one
-      // codegen'd aggregation (map-side partial agg, shuffle on doc_id)
-      val bitSums = (0 until 60).map(b =>
-        expr(s"sum(cast((shiftright(h, $b) & 1) as bigint))").as(s"c$b"))
-      val word = (0 until 60).map(b =>
-        s"if(2 * c$b > n, shiftleft(cast(1 as bigint), $b), cast(0 as bigint))")
-        .mkString(" + ")
-      shingled(s, dir)
-        .selectExpr("doc_id", "explode(shs) as sh")
-        .selectExpr("doc_id", s"${sH("sh")} as h")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n"), bitSums: _*)
-        .selectExpr("doc_id", s"$word as simhash")
-        // (cached by Shared.shared: hamming self-join sides + x08/x09/x24/x32)
+    Durable.tier(s, dir, "simhashed", "v1-b60") {
+      shingled(s, dir).selectExpr("doc_id", "simhash60(shs) as simhash")
     }
-  }
 
   /** x09's pair graph: simhash reps whose hamming distance ≤ 3, found
     * via the 4 × 15-bit pigeonhole chunk index (exact recall for the
@@ -557,7 +494,7 @@ object Dedup {
     // grows with the benchmark suite (a few GB broadcast once), never
     // with the corpus.
     "x61_bloom_decontam" -> { (s, dir) =>
-      bloomDecontam(s, dir, native = s.catalog.functionExists("bloom_bits"))
+      bloomDecontam(s, dir)
     },
 
     // NEAR-DUP CROSS-SPLIT DECONTAMINATION — x21/x61 catch verbatim
@@ -765,7 +702,7 @@ object Dedup {
       val trainEx = grams.filter("bucket < 90")
         .selectExpr("doc_id", "explode(gs) as g")
       val gated =
-        if (!fits && s.catalog.functionExists("bloom_bits")) {
+        if (!fits) {
           val m = gateBits(nEval)
           val bloom = bench.selectExpr(s"${sH("g")} as h")
             .agg(expr(s"bloom_bits(h, $m, $BloomK)").as("bloom"))
@@ -1057,15 +994,10 @@ object Dedup {
     // doc_id — never a global sort); output is one row per contaminated
     // train doc, bounded by the contamination, not the corpus.
     "x119_contamination_span" -> { (s, dir) =>
-      contaminationSpan(s, dir,
-        native = s.catalog.functionExists("bloom_bits"))
+      contaminationSpan(s, dir)
     },
   )
 
-  /** x119's body with the bloom-gate path explicit so the spec can run
-    * both forms on one session and assert bit-identity: the Bloom
-    * prefilter admits false positives, the exact semi-join removes
-    * them, so `native` may only change the plan, never the rows. */
   /** Bits for a results-INVISIBLE bloom gate (x119/x109 — an exact
     * semi-join confirms downstream, so m affects bytes-through-the-
     * exchange, never results): ~16 bits per inserted key at k=3 is
@@ -1141,8 +1073,11 @@ object Dedup {
           s"GRAFT_GATE_BROADCAST_KEYS must be a positive whole number, got '$v'"))
     }
 
-  private[graft] def contaminationSpan(
-      s: SparkSession, dir: String, native: Boolean,
+  /** x119's body with the broadcast bound explicit so the spec can run
+    * both sides of it on one session and assert bit-identity: the Bloom
+    * prefilter admits false positives, the exact semi-join removes
+    * them, so the bound may only change the plan, never the rows. */
+  private[graft] def contaminationSpan(s: SparkSession, dir: String,
       broadcastKeys: Long = GateBroadcastKeys): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val k = BloomK
@@ -1164,7 +1099,7 @@ object Dedup {
           |    i -> concat_ws(' ', slice(tk, i, 8)))
           |  else cast(array() as array<string>) end) as (p0, g)""".stripMargin)
     val gated =
-      if (native && !fits) {
+      if (!fits) {
         // large eval split: the exact join must shuffle, so thin the
         // corpus-side stream map-side first (guide §3.2)
         val m = gateBits(nEval)

@@ -32,19 +32,14 @@ object Frag {
   val sTokens = """split(trim(lower(text)), '\\s+')"""
   val dTokens = """string_split_regex(trim(lower(text)), '\s+')"""
 
-  /** Distinct 3-word shingles from a token-array column named `tk`. */
-  val sShingles: String =
-    """case when size(tk) >= 3
-      |  then array_distinct(transform(sequence(1, size(tk)-2),
-      |    i -> concat(element_at(tk,i), ' ', element_at(tk,i+1), ' ', element_at(tk,i+2))))
-      |  else cast(array() as array<string>) end""".stripMargin
+  /** DuckDB: distinct 3-word shingles from a token-array column `tk`. */
   val dShingles: String =
     """list_distinct(list_transform(range(1, greatest(len(tk)-2,0)+1),
       |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))""".stripMargin
 
-  /** The shingle projection over a `text` column: the fused native
-    * kernel (plans.Shingles3) when GraftExtensions is installed, the
-    * composable HOF twin otherwise (identical output, oracle-checked).
+  /** The shingle projection over a `text` column: the fused kernel
+    * (plans.Shingles3 — distinct 3-word shingles of [[sTokens]], in
+    * first-seen order; Round20Spec pins it to the composable HOF chain).
     * Shared by the equality-only shingle consumers (x48/x57/x64).
     *
     * DECISION RECORD (round 14, a shingle-key study at the 100× decade,
@@ -56,9 +51,7 @@ object Frag {
     * before it ships, so the md5 per instance is pure added CPU with
     * nothing left to save. The fused STRING shingler is the part that
     * pays (22.4 s HOF → 19.3 s fused on x64). */
-  def sShinglesText(s: org.apache.spark.sql.SparkSession): String =
-    if (s.catalog.functionExists("shingles3")) "shingles3(text)"
-    else sLet(sTokens, "tk", sShingles)
+  val sShinglesText = "shingles3(text)"
 
   /** SQL let-binding: evaluate `bind` ONCE per row and reference it as
     * lambda variable `v` in `body`. Catalyst's CollapseProject inlines
@@ -149,16 +142,13 @@ object Frag {
       java.lang.Long.parseLong(hex, 16)
     }
   }
-  private def rotParams(s: Int): (Int, Long, Long) = {
+  /** Seed s's (rotation, low-bit mask, xor constant) — the parameters
+    * plans.Minhash16 and plans.BloomBits hard-code. */
+  def rotParams(s: Int): (Int, Long, Long) = {
     val r = (7 * s + 5) % 59 + 1 // 1..59, never 0 or 60
     (r, (1L << r) - 1, seedConsts(s))
   }
-  /** Spark: derived seed-s hash of a 60-bit base hash expression `h`. */
-  def sDerive(h: String, s: Int): String = {
-    val (r, mask, c) = rotParams(s)
-    s"((shiftright($h, $r) | shiftleft($h & ${mask}L, ${60 - r})) ^ ${c}L)"
-  }
-  /** DuckDB: the same derivation. */
+  /** DuckDB: derived seed-s hash of a 60-bit base hash expression `h`. */
   def dDerive(h: String, s: Int): String = {
     val (r, mask, c) = rotParams(s)
     s"xor((($h >> $r) | (($h & $mask) << ${60 - r})), $c)"
@@ -189,10 +179,8 @@ object Frag {
     (1 to Dim).map(i => s"CAST($emb[$i] AS DOUBLE)*${planes(p)(i - 1)}.0")
       .mkString(" + ")
 
-  /** 4-bit band value from planes [4b, 4b+4): bit-packed projection signs. */
-  def sBand(emb: String, b: Int): String =
-    (0 until 4).map(j => s"if(${sProj(emb, 4 * b + j)} > 0, ${8 >> j}, 0)")
-      .mkString(" + ")
+  /** DuckDB: 4-bit band value from planes [4b, 4b+4), bit-packed
+    * projection signs (plans.SignBandsF32 computes all four bands). */
   def dBand(emb: String, b: Int): String =
     (0 until 4).map(j => s"(CASE WHEN ${dProj(emb, 4 * b + j)} > 0 THEN ${8 >> j} ELSE 0 END)")
       .mkString(" + ")

@@ -106,15 +106,10 @@ object Similarity {
         .selectExpr("vec_id", "embedding", s"${sSumSq("embedding")} as sq")
     }
 
-  /** Exact cosine between two (embedding, sq) sides, 6-dp bit-exact.
-    * Uses the native codegen'd CosineF32 when graft.plans
-    * .GraftExtensions is installed (identical IEEE fold order), else
-    * the interpreted HOF form. */
-  private def sCosIn(s: SparkSession): String =
-    if (s.catalog.functionExists("cosine_f32"))
-      sRound6("cosine_f32(ea, eb)")
-    else
-      sRound6(s"${sDot("ea", "eb")} / sqrt(sa * sb)")
+  /** Exact cosine between two (embedding, sq) sides, 6-dp bit-exact,
+    * through the codegen'd CosineF32 (the IEEE fold order of the
+    * DuckDB chain; CosineF32Spec pins it to the HOF fold). */
+  private def sCosIn: String = sRound6("cosine_f32(ea, eb)")
 
   /** Per-label centroid vectors (clabel, cv: array<double>, csq): exact
     * decimal means per dim, assembled in dim order — identical values
@@ -160,11 +155,8 @@ object Similarity {
   private[graft] def ivfTop2(s: SparkSession, dir: String): DataFrame =
     Durable.tier(s, dir, "ivf_top2", "v1-r4") {
       val cent = centroids(s, dir)
-      val dotExpr =
-        if (s.catalog.functionExists("dot_f32f64")) "dot_f32f64(embedding, cv)"
-        else "aggregate(zip_with(embedding, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
       withSq(s, dir).crossJoin(broadcast(cent))
-        .selectExpr("vec_id", "clabel", s"$dotExpr / sqrt(sq * csq) as cosc")
+        .selectExpr("vec_id", "clabel", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
         .groupBy("vec_id")
         .agg(expr("slice(transform(sort_array(collect_list(struct(-cosc as nc, clabel))), x -> x.clabel), 1, 4)").as("cl4"))
         .selectExpr("vec_id", "cl4", "slice(cl4, 1, 2) as cl2")
@@ -179,30 +171,16 @@ object Similarity {
     Durable.tier(s, dir, "pq_codes", "v1-ss8") {
       t(s, dir, "embeddings")
         .crossJoin(broadcast(pqCodebook(s, dir)))
-        .selectExpr("vec_id", "ss", "clabel", s"${sSubDist(s)} as d2")
+        .selectExpr("vec_id", "ss", "clabel", s"$sSubDist as d2")
         .groupBy("vec_id", "ss")
         .agg(expr("min(struct(d2, clabel))").as("m"))
         .selectExpr("vec_id", "ss", "m.clabel as code", "m.d2 as d2")
     }
 
   /** Squared L2 between the `ss`-th 8-dim slice of a float vector and a
-    * double codeword array — fused L2F32F64 when installed, HOF
-    * fallback with the identical sequential fold (the oracle's 8-term
-    * chain either way). */
-  private def sSubDist(s: SparkSession): String =
-    sL2In(s, "slice(embedding, ss * 8 + 1, 8)", "cw")
-
-  /** Squared L2 between a float vector (expression `vecE`) and a double
-    * centroid array — the fused codegen'd L2F32F64 when the extension
-    * is installed (the vectors × centroids product is THE hot loop of
-    * k-means/PQ; measured 144 s → linear at the 10× corpus), else the
-    * interpreted HOF with the identical left-to-right IEEE fold. */
-  private def sL2In(s: SparkSession, vecE: String, cvCol: String): String =
-    if (s.catalog.functionExists("l2_f32f64")) s"l2_f32f64($vecE, $cvCol)"
-    else
-      s"""aggregate(zip_with($vecE, $cvCol,
-         |  (x, c) -> (cast(x as double) - c) * (cast(x as double) - c)),
-         |  cast(0 as double), (acc, t) -> acc + t)""".stripMargin
+    * double codeword array, by the fused L2F32F64 (the oracle's 8-term
+    * chain). */
+  private def sSubDist: String = "l2_f32f64(slice(embedding, ss * 8 + 1, 8), cw)"
 
   /** Converged (2-iteration) Lloyd centroids from the deterministic
     * 8-seed init — shared tier: x51's inertia report and x111's
@@ -236,7 +214,7 @@ object Similarity {
   private def kmAssign(emb: DataFrame, cent: DataFrame): DataFrame =
     emb.crossJoin(broadcast(cent))
       .selectExpr("vec_id", "cl",
-        s"${sL2In(emb.sparkSession, "embedding", "cv")} as d2")
+        "l2_f32f64(embedding, cv) as d2")
       .groupBy("vec_id")
       .agg(expr("min(struct(d2, cl))").as("m"))
       .selectExpr("vec_id", "m.cl as cl", "m.d2 as d2")
@@ -252,23 +230,15 @@ object Similarity {
       .groupBy("cl")
       .agg(expr("transform(sort_array(collect_list(struct(dim, c))), x -> x.c)").as("cv"))
 
-  private def bandsExpr =
-    s"array(${(0 until 4).map(b => sBand("embedding", b)).mkString(", ")})"
-
-  /** Band-values expression: fused native SignBandsF32 when the
-    * extension is installed (one vector pass for all 16 planes), else
-    * the 16-fold HOF form — identical values either way. */
-  private def bandsIn(s: SparkSession): String =
-    if (s.catalog.functionExists("sign_bands_f32")) "sign_bands_f32(embedding)"
-    else bandsExpr
-
   /** Spark frame: vec_id, embedding, sq, bi, bv (4 rows per vector).
-    * Persisted: the 16 projection folds are worth computing once, and
-    * both sides of the candidate self-join read this frame. */
+    * The band values come from the fused SignBandsF32 (one vector pass
+    * for all 16 planes). Persisted: the 16 projection folds are worth
+    * computing once, and both sides of the candidate self-join read
+    * this frame. */
   private def withBands(s: SparkSession, dir: String): DataFrame =
     Shared.shared(s, dir, "withBands") {
       withSq(s, dir)
-        .selectExpr("vec_id", "embedding", "sq", s"posexplode(${bandsIn(s)}) as (bi, bv)")
+        .selectExpr("vec_id", "embedding", "sq", "posexplode(sign_bands_f32(embedding)) as (bi, bv)")
     }
 
   /** DuckDB CTEs: sq per vec + 4-band signature rows. */
@@ -315,7 +285,7 @@ object Similarity {
           col("sq").as("sb"))
       val scored = cands.crossJoin(broadcast(probes))
         .filter(col("query_id") =!= col("neighbor_id"))
-        .selectExpr("query_id", "neighbor_id", s"${sCosIn(s)} as cos_sim")
+        .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
       graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"), "cos_sim",
         Seq("neighbor_id"), TopK)
     }
@@ -342,7 +312,7 @@ object Similarity {
         col("embedding").as("ea"), col("sq").as("sa"))), "query_id")
       .join(sq.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("eb"), col("sq").as("sb")), "neighbor_id")
-      .selectExpr("query_id", "neighbor_id", s"${sCosIn(s)} as cos_sim")
+      .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
     graft.plans.TopKPerKey.topKDesc(scored2, Seq("query_id"), "cos_sim",
       Seq("neighbor_id"), TopK)
   }
@@ -364,7 +334,7 @@ object Similarity {
         col("embedding").as("ea"), col("sq").as("sa"))), "query_id")
       .join(sq.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("eb"), col("sq").as("sb")), "neighbor_id")
-      .selectExpr("query_id", "neighbor_id", s"${sCosIn(s)} as cos_sim")
+      .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
     graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"), "cos_sim",
       Seq("neighbor_id"), TopK)
   }
@@ -381,7 +351,7 @@ object Similarity {
     val pdist = t(s, dir, "embeddings").filter(QuerySet)
       .crossJoin(broadcast(cb))
       .selectExpr("vec_id as query_id", "ss as pss", "clabel as pcl",
-        s"${sSubDist(s)} as pd2")
+        s"$sSubDist as pd2")
     val adc = codes
       .join(broadcast(pdist), col("ss") === col("pss") &&
         col("code") === col("pcl") && col("vec_id") =!= col("query_id"))
@@ -417,7 +387,7 @@ object Similarity {
       val pdist = t(s, dir, "embeddings").filter(QuerySet)
         .crossJoin(broadcast(pqCodebook(s, dir)))
         .selectExpr("vec_id as pqid", "ss as pss", "clabel as pcl",
-          s"${sSubDist(s)} as pd2")
+          s"$sSubDist as pd2")
       pqCodes(s, dir).withColumnRenamed("vec_id", "neighbor_id")
         .join(broadcast(cand), Seq("neighbor_id"))
         .join(broadcast(pdist), col("query_id") === col("pqid") &&
@@ -472,7 +442,7 @@ object Similarity {
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("eb"),
         col("sq").as("sb"))
       .join(broadcast(candP), Seq("neighbor_id"))
-      .selectExpr("query_id", "neighbor_id", s"${sCosIn(s)} as cos_sim")
+      .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
     graft.plans.TopKPerKey.topKDesc(rr, Seq("query_id"), "cos_sim",
       Seq("neighbor_id"), TopK)
   }
@@ -508,7 +478,7 @@ object Similarity {
       val scored = cands.crossJoin(broadcast(anchors))
         .filter(col("n_label") =!= col("q_label"))
         .selectExpr("query_id", "q_label", "neighbor_id", "n_label",
-          s"${sCosIn(s)} as cos_sim")
+          s"$sCosIn as cos_sim")
       graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"), "cos_sim",
           Seq("neighbor_id"), 5)
         .selectExpr("query_id", "q_label", "rk", "neighbor_id", "n_label",
@@ -553,7 +523,7 @@ object Similarity {
           col("sq").as("sa")), "vec_a")
         .join(side.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
           col("sq").as("sb")), "vec_b")
-        .selectExpr("vec_a", "vec_b", s"${sCosIn(s)} as cos_sim")
+        .selectExpr("vec_a", "vec_b", s"$sCosIn as cos_sim")
         .filter("cos_sim >= 0.4")
         .orderBy("vec_a", "vec_b")
     },
@@ -646,12 +616,9 @@ object Similarity {
     "x36_semantic_dedup" -> { (s, dir) =>
       val cent = centroids(s, dir)
       val sq = withSq(s, dir)
-      val dotExpr =
-        if (s.catalog.functionExists("dot_f32f64")) "dot_f32f64(embedding, cv)"
-        else "aggregate(zip_with(embedding, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
       val scoredAll = sq.crossJoin(broadcast(cent))
         .selectExpr("vec_id", "embedding", "sq", "clabel",
-          s"$dotExpr / sqrt(sq * csq) as cosc")
+          "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
       // nearest-of-16-centroids assignment as ONE aggregation (min over
       // (-cosc, clabel) structs replays ORDER BY cosc DESC, clabel) —
       // no ranking exchange; embedding/sq are functionally dependent on
@@ -666,7 +633,7 @@ object Similarity {
         .join(members.select(col("vec_id").as("vb"), col("clabel"),
           col("embedding").as("eb"), col("sq").as("sb")), "clabel")
         .filter(col("va") < col("vb"))
-        .selectExpr("va", "vb", s"${sCosIn(s)} as cs")
+        .selectExpr("va", "vb", s"$sCosIn as cs")
         .filter("cs >= 0.4")
       val keeper = pairs.groupBy(col("vb").as("vec_id"))
         .agg(min(col("va")).as("keeper"))
@@ -693,7 +660,7 @@ object Similarity {
         .select(col("vec_id").as("neighbor_id"), col("embedding").as("eb"),
           col("sq").as("sb"))
       val scored = cands.crossJoin(broadcast(probes))
-        .selectExpr("query_id", "neighbor_id", s"${sCosIn(s)} as cos_sim")
+        .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
       val nn = graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"),
         "cos_sim", Seq("neighbor_id"), TopK)
       val votes = nn
@@ -832,7 +799,7 @@ object Similarity {
     "x111_kmeans_silhouette" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val two = emb.crossJoin(broadcast(km2Cent(s, dir)))
-        .selectExpr("vec_id", "cl", s"${sL2In(s, "embedding", "cv")} as d2")
+        .selectExpr("vec_id", "cl", "l2_f32f64(embedding, cv) as d2")
         .groupBy("vec_id")
         .agg(expr("slice(sort_array(collect_list(struct(d2, cl))), 1, 2)")
           .as("t2"))
@@ -962,13 +929,10 @@ object Similarity {
         .selectExpr("cl2[0] as cell").groupBy("cell")
         .agg(count(lit(1)).as("n_standing"))
       val cent = centroids(s, dir)
-      val dotE =
-        if (s.catalog.functionExists("dot_f32f64")) "dot_f32f64(embedding, cv)"
-        else "aggregate(zip_with(embedding, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
       val asg = withSq(s, dir).filter("vec_id % 97 = 0")
         .selectExpr("vec_id + 1000000000 as vec_id", "embedding", "sq")
         .crossJoin(broadcast(cent))
-        .selectExpr("vec_id", "clabel", s"$dotE / sqrt(sq * csq) as cosc")
+        .selectExpr("vec_id", "clabel", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
         .groupBy("vec_id")
         .agg(expr("min(struct(-cosc as nc, clabel))").as("m"))
         .selectExpr("vec_id", "m.clabel as cell")
@@ -1018,7 +982,7 @@ object Similarity {
             col("sq").as("sa"))), "eval_id")
         .join(sq.select(col("vec_id").as("train_id"),
           col("embedding").as("eb"), col("sq").as("sb")), "train_id")
-        .selectExpr("train_id", "eval_id", s"${sCosIn(s)} as cos_sim")
+        .selectExpr("train_id", "eval_id", s"$sCosIn as cos_sim")
         .filter("cos_sim >= 0.4")
         .groupBy("train_id")
         .agg(count(lit(1)).as("n_eval_near"),
@@ -1247,7 +1211,7 @@ object Similarity {
       val emb = t(s, dir, "embeddings")
       emb.crossJoin(broadcast(labelCentroidArrays(s, dir)))
         .selectExpr("vec_id", "label", "cl",
-          s"${sL2In(s, "embedding", "cv")} as d2")
+          "l2_f32f64(embedding, cv) as d2")
         .groupBy("vec_id", "label")
         .agg(max(expr("case when cl = label then d2 end")).as("down"),
           expr("min(case when cl <> label then struct(d2, cl) end)").as("m"))
@@ -1516,7 +1480,7 @@ object Similarity {
           "vec_a")
         .join(sq.selectExpr("vec_id as vec_b", "embedding as eb", "sq as sb"),
           "vec_b")
-        .selectExpr("vec_a", "vec_b", s"${sCosIn(s)} as cos_sim")
+        .selectExpr("vec_a", "vec_b", s"$sCosIn as cos_sim")
       // each side's usual neighborhood: exact-decimal mean of its K
       // standing out-edge scores (every node has exactly K)
       val deg = nndescentEdges(s, dir, iters = 2)
@@ -1895,7 +1859,7 @@ object Similarity {
         sq.selectExpr("vec_id as dst", "embedding as eb", "sq as sb")
           .crossJoin(broadcast(probes))
           .filter(col("dst") =!= col("src"))
-          .selectExpr("src", "dst", s"${sCosIn(s)} as cos"),
+          .selectExpr("src", "dst", s"$sCosIn as cos"),
         Seq("src"), "cos", Seq("dst"), GraphK)
       .select(col("src"), col("dst"), lit(true).as("hit0"))
       .localCheckpoint()
@@ -2012,7 +1976,7 @@ object Similarity {
       .join(probes, "src")
       .join(corpus.selectExpr("vec_id as dst", "embedding as eb",
         "sq as sb"), "dst")
-      .selectExpr("src", "dst", s"${sCosIn(s)} as cos")
+      .selectExpr("src", "dst", s"$sCosIn as cos")
     var visited = score(entries).localCheckpoint()
     val trace = scala.collection.mutable.ArrayBuffer(visited)
     // The frontier is NOT checkpointed: it is consumed exactly once
@@ -2082,7 +2046,7 @@ object Similarity {
       .join(probes, "src")
       .join(corpus.selectExpr("vec_id as dst", "embedding as eb",
         "sq as sb"), "dst")
-      .selectExpr("pk", "src", "dst", s"${sCosIn(s)} as cos")
+      .selectExpr("pk", "src", "dst", s"$sCosIn as cos")
     def fold(scored: DataFrame): DataFrame = {
       val ranked = graft.plans.TopKPerKey.topKDesc(scored,
         Seq("pk", "src"), "cos", Seq("dst"), maxB)
@@ -2215,7 +2179,7 @@ object Similarity {
             "sq as sb")
           .crossJoin(broadcast(probes))
           .filter(col("orig_id") =!= col("src"))
-          .selectExpr("src", "dst", s"${sCosIn(s)} as cos_sim"),
+          .selectExpr("src", "dst", s"$sCosIn as cos_sim"),
         Seq("src"), "cos_sim", Seq("dst"), TopK)
       .select(col("src"), col("dst"), col("rk").as("erk"))
       .localCheckpoint()
@@ -2314,7 +2278,7 @@ object Similarity {
               "sq as sb")
             .crossJoin(broadcast(probes))
             .filter(col("orig_id") =!= col("src"))
-            .selectExpr("src", "dst", s"${sCosIn(s)} as cos_sim"),
+            .selectExpr("src", "dst", s"$sCosIn as cos_sim"),
           Seq("src"), "cos_sim", Seq("dst"), TopK)
         .select(col("src"), col("dst"), col("rk").as("erk"))
         .localCheckpoint()
@@ -2472,11 +2436,8 @@ object Similarity {
   private[graft] def quantizerMargin(s: SparkSession, dir: String): DataFrame =
     Durable.tier(s, dir, "quantizer_margin", "v1") {
       val cent = centroids(s, dir)
-      val dotE =
-        if (s.catalog.functionExists("dot_f32f64")) "dot_f32f64(embedding, cv)"
-        else "aggregate(zip_with(embedding, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
       withSq(s, dir).crossJoin(broadcast(cent))
-        .selectExpr("vec_id", "clabel", s"$dotE / sqrt(sq * csq) as cosc")
+        .selectExpr("vec_id", "clabel", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
         .groupBy("vec_id")
         .agg(expr("sort_array(collect_list(struct(-cosc as nc, clabel)))").as("a"))
         .selectExpr("element_at(a, 1).clabel as cell",
@@ -2542,12 +2503,9 @@ object Similarity {
           s"${sH("concat(cell, ':', vec_id)")} as hk"),
         Seq("cell"), "hk", Seq("dst"), 4)
       .select("cell", "dst")
-    val dotE =
-      if (s.catalog.functionExists("dot_f32f64")) "dot_f32f64(ea, cv)"
-      else "aggregate(zip_with(ea, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
     val rout = graft.plans.TopKPerKey.topKDesc(
         probes.crossJoin(broadcast(cent))
-          .selectExpr("src", "cl", s"$dotE / sqrt(sa * csq) as cosc"),
+          .selectExpr("src", "cl", "dot_f32f64(ea, cv) / sqrt(sa * csq) as cosc"),
         Seq("src"), "cosc", Seq("cl"), 2)
       .selectExpr("src", "cl as cell")
     rout.join(broadcast(cell4), "cell").select("src", "dst").distinct()
@@ -2572,12 +2530,9 @@ object Similarity {
       .selectExpr("cl", "cv",
         "aggregate(cv, cast(0 as double), (acc, x) -> acc + x * x) as csq")
       .localCheckpoint()
-    def dotE(vec: String) =
-      if (s.catalog.functionExists("dot_f32f64")) s"dot_f32f64($vec, cv)"
-      else s"aggregate(zip_with($vec, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
     val asg = s10.select("vec_id", "embedding", "sq")
       .crossJoin(broadcast(cent))
-      .selectExpr("vec_id", "cl", s"${dotE("embedding")} / sqrt(sq * csq) as cosc")
+      .selectExpr("vec_id", "cl", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
       .groupBy("vec_id")
       .agg(expr("min(struct(-cosc as nc, cl))").as("m"))
       .selectExpr("vec_id", "m.cl as cell")
@@ -2814,7 +2769,7 @@ object Similarity {
         .selectExpr("embedding as eb", "sq as sb")
       sq.selectExpr("vec_id", "embedding as ea", "sq as sa")
         .crossJoin(broadcast(c))
-        .selectExpr("vec_id", s"1.0d - ${sCosIn(s)} as d")
+        .selectExpr("vec_id", s"1.0d - $sCosIn as d")
     }
     var center = 0L // deterministic seed: the min id
     var mind: DataFrame = null
@@ -2859,7 +2814,7 @@ object Similarity {
     pairs
       .join(corpus.selectExpr("vec_id as src", "embedding as ea", "sq as sa"), "src")
       .join(corpus.selectExpr("vec_id as dst", "embedding as eb", "sq as sb"), "dst")
-      .selectExpr("src", "dst", s"${sCosIn(s)} as cos")
+      .selectExpr("src", "dst", s"$sCosIn as cos")
 
   /** NN-Descent edge lists (src, dst, cos) after `iters` local-join
     * rounds. The canonical 2-round graph is a SHARED tier — it is the

@@ -34,24 +34,18 @@ object TextAnalysis {
     * x65/x71/x74/x76/x83/x85/x90/x92/x97/x100/x130 all start here) —
     * with an index root configured, a fresh session loads it instead
     * of re-tokenizing the corpus. Version-keyed by the tokenizer
-    * contract (lowercase, trim, `\s+` split — the fused tokenize_tf
-    * and the composable twin produce identical rows, oracle-checked,
-    * so they share one version); a tokenizer change must bump it. */
+    * contract (lowercase, trim, `\s+` split — TokenizeTfSpec pins the
+    * fused tokenize_tf to the composable split + count); a tokenizer
+    * change must bump it. */
   private def docTf(s: SparkSession, dir: String): DataFrame =
     graft.queries.Durable.tier(s, dir, "doc_tf", "v1-ws-lower") {
       // the within-doc combine is fused into the scan (tokenize_tf's
       // map<token,tf> IS the groupBy(doc_id, token) result), so the
       // tier builds with NO shuffle at all — map keys are unique per
       // row by construction
-      if (s.catalog.functionExists("tokenize_tf"))
-        docs(s, dir)
-          .selectExpr("doc_id", "explode(tokenize_tf(text)) as (token, tf)")
-          .filter(col("token") =!= "")
-      else // composable twin when the extension isn't installed
-        docs(s, dir)
-          .selectExpr("doc_id", s"explode($sTokens) as token")
-          .filter(col("token") =!= "")
-          .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+      docs(s, dir)
+        .selectExpr("doc_id", "explode(tokenize_tf(text)) as (token, tf)")
+        .filter(col("token") =!= "")
     }
 
   /** DURABLE per-document token statistics — (doc_id, source,
@@ -66,28 +60,18 @@ object TextAnalysis {
     * per run. Fourth instance of the doc_tf/shingle_df/doc_fp move;
     * tier-eligible by the SCALE.md rule (per-document, six consumers,
     * version-keyed by the tokenizer contract, fingerprint-invalidated).
-    * Built from the fused tokenize_tf map when installed (size(m) IS
-    * the distinct count, sum(values) the token count — no token array
-    * ever materializes); composable twin otherwise (kernel equality is
-    * oracle- and TokenizeTfSpec-pinned). */
+    * Built from the fused tokenize_tf map (size(m) IS the distinct
+    * count, sum(values) the token count — no token array ever
+    * materializes; kernel equality is oracle- and TokenizeTfSpec-pinned). */
   private[llm] def docStats(s: SparkSession, dir: String): DataFrame =
     graft.queries.Durable.tier(s, dir, "doc_stats", "v1-ws-lower") {
-      if (s.catalog.functionExists("tokenize_tf"))
-        docs(s, dir)
-          .selectExpr("doc_id", "source",
-            "cast(length(text) as bigint) as n_chars_raw",
-            "tokenize_tf(text) as m")
-          .selectExpr("doc_id", "source", "n_chars_raw",
-            "aggregate(map_values(m), cast(0 as bigint), (acc, x) -> acc + x) as n_tokens",
-            "cast(size(m) as bigint) as n_distinct")
-      else
-        docs(s, dir)
-          .selectExpr("doc_id", "source",
-            "cast(length(text) as bigint) as n_chars_raw",
-            s"$sTokens as tk")
-          .selectExpr("doc_id", "source", "n_chars_raw",
-            "cast(size(tk) as bigint) as n_tokens",
-            "cast(size(array_distinct(tk)) as bigint) as n_distinct")
+      docs(s, dir)
+        .selectExpr("doc_id", "source",
+          "cast(length(text) as bigint) as n_chars_raw",
+          "tokenize_tf(text) as m")
+        .selectExpr("doc_id", "source", "n_chars_raw",
+          "aggregate(map_values(m), cast(0 as bigint), (acc, x) -> acc + x) as n_tokens",
+          "cast(size(m) as bigint) as n_distinct")
     }
 
   /** The x03 quality algebra over [[docStats]]' integers — one shared
@@ -337,26 +321,15 @@ object TextAnalysis {
     // digit / space / other characters over the lowercased text, and
     // the alpha-floor pass flag (encoding damage shows up as an
     // "other" spike long before any token statistic moves). Pure
-    // per-row regex counting — codegen'd map, zero shuffle, linear in
-    // input splits. Integer counts into divisions ⇒ exact.
+    // per-row character census (the fused charclass_counts, one pass;
+    // CosineF32Spec pins it to the 4-regex-pass chain) — codegen'd
+    // map, zero shuffle, linear in input splits. Integer counts into
+    // divisions ⇒ exact.
     "x72_script_profile" -> { (s, dir) =>
-      // fused one-pass census when GraftExtensions is installed; the
-      // 4-regex-pass composable chain otherwise (identical output —
-      // CharClassSpec proves bit parity)
-      val counts =
-        if (s.catalog.functionExists("charclass_counts"))
-          docs(s, dir)
-            .selectExpr("doc_id", "charclass_counts(lower(text)) as c")
-            .selectExpr("doc_id", "c.n_chars as n_chars", "c.n_alpha as n_alpha",
-              "c.n_digit as n_digit", "c.n_space as n_space")
-        else docs(s, dir)
-          .selectExpr("doc_id", "lower(text) as lt")
-          .selectExpr("doc_id",
-            "cast(length(lt) as bigint) as n_chars",
-            "cast(length(regexp_replace(lt, '[^a-z]', '')) as bigint) as n_alpha",
-            "cast(length(regexp_replace(lt, '[^0-9]', '')) as bigint) as n_digit",
-            "cast(length(regexp_replace(lt, '[^ ]', '')) as bigint) as n_space")
-      counts
+      docs(s, dir)
+        .selectExpr("doc_id", "charclass_counts(lower(text)) as c")
+        .selectExpr("doc_id", "c.n_chars as n_chars", "c.n_alpha as n_alpha",
+          "c.n_digit as n_digit", "c.n_space as n_space")
         .selectExpr("doc_id", "n_chars", "n_alpha", "n_digit", "n_space",
           "n_chars - n_alpha - n_digit - n_space as n_other",
           sRound6("cast(n_alpha as double) / cast(n_chars as double)") + " as alpha_frac",
@@ -379,31 +352,15 @@ object TextAnalysis {
     // heavy hitters via the SpaceSaving sketch (plans.SpaceSavingTopK):
     // bounded per-partition state instead of shuffling every distinct
     // key; capacity 64 > the corpus vocabulary, so counts are exact and
-    // the oracle checks them. Falls back to groupBy+window top-k (same
-    // output) when GraftExtensions is not installed.
+    // the oracle checks them.
     "x16_topk_tokens" -> { (s, dir) =>
-      val tok = docs(s, dir)
+      docs(s, dir)
         .selectExpr("explode(split(trim(lower(text)), '\\\\s+')) as token")
-      if (s.catalog.functionExists("topk_freq"))
-        tok.selectExpr("topk_freq(token, 10, 64) as tops")
-          .selectExpr("posexplode(tops) as (rank, t)")
-          .selectExpr("cast(rank as bigint) as rank", "t.item as token",
-            "t.cnt as n")
-          .orderBy("rank")
-      else {
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.functions._
-        // fallback only (extension installed ⇒ the sketch path above):
-        // the global window ranks the vocabulary-sized count frame, not
-        // the corpus — the single partition holds distinct tokens only
-        tok.groupBy("token").agg(count(lit(1)).as("n"))
-          .withColumn("rank",
-            (row_number().over(Window.orderBy(col("n").desc, col("token"))) - 1)
-              .cast("long"))
-          .filter(col("rank") < 10)
-          .select("rank", "token", "n")
-          .orderBy("rank")
-      }
+        .selectExpr("topk_freq(token, 10, 64) as tops")
+        .selectExpr("posexplode(tops) as (rank, t)")
+        .selectExpr("cast(rank as bigint) as rank", "t.item as token",
+          "t.cnt as n")
+        .orderBy("rank")
     },
     // deterministic train/val/test split: hash the stable doc_id (never
     // random() — reproducible across runs, machines, and engines) into
@@ -897,7 +854,7 @@ object TextAnalysis {
         .agg(count(lit(1)).as("n_novel"))
       docs(s, dir)
         .selectExpr("doc_id",
-          s"cast(size(${sShinglesText(s)}) as bigint) as n_shingles")
+          s"cast(size($sShinglesText) as bigint) as n_shingles")
         .join(novel, Seq("doc_id"), "left")
         .selectExpr("doc_id", "n_shingles",
           "coalesce(n_novel, cast(0 as bigint)) as n_novel")
@@ -1142,7 +1099,11 @@ object TextAnalysis {
     // bounded heaps ship ≤ k·sources·partitions rows to the exchange
     // instead of the corpus — the shape that survives a 10⁹-document
     // crawl with a heavy-tailed domain distribution. The only float
-    // op after ranking is one division on identical operands.
+    // op is one division on identical operands. It runs before the
+    // ranking so the top-k input is x75's own frame: x81 ranks the
+    // same (doc_id, source, qm) frame by the same window and
+    // ExactRank caches that ranking until dropTransient, and a cached
+    // match would replace the top-k with a scan of the full ranking.
     "x75_source_cap" -> { (s, dir) =>
       val d = docStats(s, dir)
         .selectExpr("doc_id", "source",
@@ -1153,9 +1114,9 @@ object TextAnalysis {
           // (double→bigint cast semantics differ: Spark truncates,
           // DuckDB rounds — so never cast a float product directly)
           "cast(cast(dr * ls as decimal(16,6)) * 1000000 as bigint) as qm")
+        .withColumn("quality", expr("cast(qm as double) / 1000000.0d"))
       graft.plans.TopKPerKey.topKDesc(d, Seq("source"), "qm", Seq("doc_id"), 10)
-        .selectExpr("source", "rk", "doc_id",
-          "cast(qm as double) / 1000000.0d as quality")
+        .select("source", "rk", "doc_id", "quality")
         .orderBy("source", "rk")
     },
 
@@ -1417,27 +1378,15 @@ object TextAnalysis {
     // no shuffle until the 8-row aggregate); md5 ties are impossible,
     // so the argmax is deterministic on both engines. The map runs the
     // fused codegen kernel (hrw_assign: running argmax in registers,
-    // one md5 per worker) when the extension is installed; the
-    // composable HOF chain — same hashes, same first-max-wins — is the
-    // fallback, which pays interpreted lambdas plus three array
-    // re-traversals per row (measured 36.8× the job floor at the 100×
-    // decade — the reason the kernel exists).
+    // one md5 per worker); the composable HOF chain — same hashes, same
+    // first-max-wins, Round20Spec's oracle — paid interpreted lambdas
+    // plus three array re-traversals per row (measured 36.8× the job
+    // floor at the 100× decade — the reason the kernel exists).
     "x86_rendezvous_shards" -> { (s, dir) =>
-      val base = Tables.t(s, dir, "documents").select("doc_id")
-      val assigned =
-        if (s.catalog.functionExists("hrw_assign"))
-          base.selectExpr(
-            "hrw_assign(cast(doc_id as string), 8) as a8",
-            "hrw_assign(cast(doc_id as string), 7) as a7")
-        else base
-          .selectExpr(
-            s"transform(sequence(0, 7), w -> ${sH("concat(cast(doc_id as string), ':', cast(w as string))")}) as sc")
-          .selectExpr("sc", "array_max(sc) as m8",
-            "array_max(slice(sc, 1, 7)) as m7")
-          .selectExpr(
-            "element_at(filter(sequence(0, 7), w -> element_at(sc, w + 1) = m8), 1) as a8",
-            "element_at(filter(sequence(0, 6), w -> element_at(sc, w + 1) = m7), 1) as a7")
-      assigned
+      Tables.t(s, dir, "documents")
+        .selectExpr(
+          "hrw_assign(cast(doc_id as string), 8) as a8",
+          "hrw_assign(cast(doc_id as string), 7) as a7")
         // both per-worker tallies in ONE corpus pass: each row emits its
         // 8-worker and 7-worker assignment as two counted events (an
         // explode of a 2-struct array, not a self-union re-scanning the

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * `bloom_bits(hash, m, k)` folds a column of 60-bit base hashes into
   * one m-bit bitset (`array<bigint>`, m/64 words): each input sets k
   * positions derived from the base hash by the same rotate-xor family
-  * as the minhash seeds (`graft.llm.Frag.sDerive`), so an engine
+  * as the minhash seeds (`graft.llm.Frag.rotParams`), so an engine
   * without this aggregate — or a DuckDB oracle — can reproduce every
   * bit with plain SQL. Partial aggregation ships one fixed-size bitset
   * per partition and merge is a word-wise OR, so building the filter
@@ -123,12 +123,10 @@ case class BloomMightContain(left: Expression, right: Expression, seeds: Int)
 }
 
 object BloomBits {
-  // rotation/mask/xor parameters identical to graft.llm.Frag.sDerive —
-  // the oracle recomputes positions with the dDerive SQL twin
-  private val params: Array[(Int, Long, Long)] = Array.tabulate(16) { s =>
-    val r = (7 * s + 5) % 59 + 1
-    (r, (1L << r) - 1, graft.llm.Frag.seedConsts(s))
-  }
+  // the minhash seeds' rotation/mask/xor parameters — the oracle
+  // recomputes positions with the dDerive SQL twin
+  private val params: Array[(Int, Long, Long)] =
+    Array.tabulate(16)(graft.llm.Frag.rotParams)
 
   /** Bit position of base hash `h` under seed `s` in an m-bit filter.
     * `h` is 60-bit non-negative (Frag.sH), the rotation stays inside 60

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Character-class census of a string in ONE fused pass.
   *
-  * `charclass_counts(text)` ≡ the composable form x72 falls back to —
+  * `charclass_counts(text)` ≡ the composable form (CosineF32Spec's oracle) —
   * `length(t)` plus three `length(regexp_replace(t, '[^…]', ''))`
   * counts — which walks the text FOUR times through the regex engine
   * and allocates three scratch strings per row. This is a single
@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Returns `struct<n_chars, n_alpha, n_digit, n_space: bigint>`; the
   * "other" class is derivable (n_chars − the rest), matching the
-  * fallback exactly for any UTF-8 input.
+  * composable form exactly for any UTF-8 input.
   */
 case class CharClassCounts(child: Expression) extends UnaryExpression {
 

@@ -1,7 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -77,85 +78,68 @@ case class CosineF32(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session extension registering graft's native functions; install with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
-  * Queries fall back to the composable HOF form (same numerics) when
-  * the extension is absent, so nothing hard-depends on it. */
+/** Session extension registering graft's native functions and the
+  * top-k plan rules; install with
+  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
+  * (every `EngineSession` does). A session built elsewhere gets the
+  * functions from [[GraftExtensions.install]] when it enters the engine
+  * (`SparkEntry.queries`, the streaming gates); without the plan rules
+  * it plans Spark's stock window for top-k, which gives the same rows. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_f32"),
-      new ExpressionInfo(classOf[CosineF32].getName, "cosine_f32"),
-      (children: Seq[Expression]) => CosineF32(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("topk_freq"),
-      new ExpressionInfo(classOf[SpaceSavingTopK].getName, "topk_freq"),
-      (children: Seq[Expression]) => SpaceSavingTopK.create(children)))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash16"),
-      new ExpressionInfo(classOf[Minhash16].getName, "minhash16"),
-      (children: Seq[Expression]) => Minhash16(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[Simhash60].getName, "simhash60"),
-      (children: Seq[Expression]) => Simhash60(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("shingles3"),
-      new ExpressionInfo(classOf[Shingles3].getName, "shingles3"),
-      (children: Seq[Expression]) => Shingles3(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("hrw_assign"),
-      new ExpressionInfo(classOf[HrwAssign].getName, "hrw_assign"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2 && children(1).foldable,
-          "hrw_assign(key, n) — n must be a literal")
-        HrwAssign(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("sign_bands_f32"),
-      new ExpressionInfo(classOf[SignBandsF32].getName, "sign_bands_f32"),
-      (children: Seq[Expression]) =>
-        SignBandsF32(children.head, graft.llm.Frag.planes)))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_f32f64"),
-      new ExpressionInfo(classOf[DotF32F64].getName, "dot_f32f64"),
-      (children: Seq[Expression]) => DotF32F64(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("l2_f32f64"),
-      new ExpressionInfo(classOf[L2F32F64].getName, "l2_f32f64"),
-      (children: Seq[Expression]) => L2F32F64(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("charclass_counts"),
-      new ExpressionInfo(classOf[CharClassCounts].getName, "charclass_counts"),
-      (children: Seq[Expression]) => CharClassCounts(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("tokenize_tf"),
-      new ExpressionInfo(classOf[TokenizeTf].getName, "tokenize_tf"),
-      (children: Seq[Expression]) => TokenizeTf(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_bits"),
-      new ExpressionInfo(classOf[BloomBitsAgg].getName, "bloom_bits"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3, "bloom_bits(hash, m, k)")
-        def lit(e: Expression): Int = {
-          require(e.foldable, "bloom_bits m/k must be literals")
-          e.eval(null).asInstanceOf[Number].intValue()
-        }
-        BloomBitsAgg(children.head, lit(children(1)), lit(children(2)))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3, "bloom_might_contain(bloom, hash, k)")
-        require(children(2).foldable, "bloom_might_contain k must be a literal")
-        BloomMightContain(children(0), children(1),
-          children(2).eval(null).asInstanceOf[Number].intValue())
-      }))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     // whole-operator extension: two-phase top-k-per-key (partial heaps
     // before the exchange — see graft.plans.TopKPerKey), plus the
     // optimizer rule that routes the stock row_number+filter idiom to it
     ext.injectPlannerStrategy(_ => TopKPerKey.TopKStrategy)
     ext.injectOptimizerRule(_ => TopKRewrite())
+  }
+}
+
+object GraftExtensions {
+  private def lit(e: Expression, what: String): Int = {
+    require(e.foldable, s"$what must be a literal")
+    e.eval(null).asInstanceOf[Number].intValue()
+  }
+
+  private def fn(name: String, cls: Class[_])(build: FunctionBuilder) =
+    (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** Every graft function as (name, info, builder). */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("cosine_f32", classOf[CosineF32])(c => CosineF32(c(0), c(1))),
+    fn("topk_freq", classOf[SpaceSavingTopK])(SpaceSavingTopK.create),
+    fn("minhash16", classOf[Minhash16])(c => Minhash16(c.head)),
+    fn("simhash60", classOf[Simhash60])(c => Simhash60(c.head)),
+    fn("shingles3", classOf[Shingles3])(c => Shingles3(c.head)),
+    fn("hrw_assign", classOf[HrwAssign]) { c =>
+      require(c.size == 2 && c(1).foldable,
+        "hrw_assign(key, n) — n must be a literal")
+      HrwAssign(c(0), c(1))
+    },
+    fn("sign_bands_f32", classOf[SignBandsF32])(c =>
+      SignBandsF32(c.head, graft.llm.Frag.planes)),
+    fn("dot_f32f64", classOf[DotF32F64])(c => DotF32F64(c(0), c(1))),
+    fn("l2_f32f64", classOf[L2F32F64])(c => L2F32F64(c(0), c(1))),
+    fn("charclass_counts", classOf[CharClassCounts])(c => CharClassCounts(c.head)),
+    fn("tokenize_tf", classOf[TokenizeTf])(c => TokenizeTf(c.head)),
+    fn("bloom_bits", classOf[BloomBitsAgg]) { c =>
+      require(c.size == 3, "bloom_bits(hash, m, k)")
+      BloomBitsAgg(c.head, lit(c(1), "bloom_bits m"), lit(c(2), "bloom_bits k"))
+    },
+    fn("bloom_might_contain", classOf[BloomMightContain]) { c =>
+      require(c.size == 3, "bloom_might_contain(bloom, hash, k)")
+      BloomMightContain(c(0), c(1), lit(c(2), "bloom_might_contain k"))
+    })
+
+  /** Registers every graft function `s` lacks — idempotent, and a no-op
+    * on a session built with the extension. Functions only: the top-k
+    * rules change plans, never rows, so a foreign session keeps its
+    * planner. */
+  def install(s: SparkSession): Unit = {
+    val reg = s.sessionState.functionRegistry
+    functions.foreach { case (id, info, build) =>
+      if (reg.lookupFunction(id).isEmpty) reg.registerFunction(id, info, build)
+    }
   }
 }

@@ -11,10 +11,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * `minhash16(shingles)` ≡ the distributed form (explode → h60 per
   * shingle → 16 rotate-xor `min` aggregates): one md5 per shingle, 16
   * derived-seed minima tracked in registers — no shuffle, no
-  * re-traversal per seed. Seed derivation is exactly
-  * `graft.llm.Frag.sDerive` (rot60 + xor with the md5-derived
-  * constants), so signatures are identical across the fused, the
-  * composable, and the DuckDB forms.
+  * re-traversal per seed. Seed derivation is rot60 + xor with the
+  * md5-derived constants of `graft.llm.Frag.rotParams`, the same as
+  * the DuckDB oracle's `dDerive`, so signatures are identical across
+  * the fused, the composable (Minhash16Spec) and the DuckDB forms.
   */
 case class Minhash16(child: Expression) extends UnaryExpression {
 
@@ -38,11 +38,8 @@ case class Minhash16(child: Expression) extends UnaryExpression {
 }
 
 object Minhash16 {
-  // rotation/mask/xor parameters identical to graft.llm.Frag.sDerive
-  private val params: Array[(Int, Long, Long)] = Array.tabulate(16) { s =>
-    val r = (7 * s + 5) % 59 + 1
-    (r, (1L << r) - 1, graft.llm.Frag.seedConsts(s))
-  }
+  private val params: Array[(Int, Long, Long)] =
+    Array.tabulate(16)(graft.llm.Frag.rotParams)
 
   def compute(shingles: ArrayData): GenericArrayData = {
     val md = java.security.MessageDigest.getInstance("MD5")

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -195,39 +195,15 @@ object TopKPerKey {
 
   /** Public entry: top `k` rows per `keyCols` by `orderCol` descending,
     * ties broken by `tiebreakCols` ascending (making the order total);
-    * adds a 1-based bigint `rk`. Uses the native two-phase operator
-    * when GraftExtensions is installed, the equivalent window form
-    * otherwise — identical output either way. */
+    * adds a 1-based bigint `rk`. Written as the stock window idiom:
+    * [[TopKRewrite]] plans it as the two-phase operator (and leaves it a
+    * window on float keys, which it must normalize). */
   def topKDesc(df: DataFrame, keyCols: Seq[String], orderCol: String,
       tiebreakCols: Seq[String], k: Int): DataFrame = {
     require(k > 0, s"top-k requires k > 0, got $k")
-    val spark = df.sparkSession
-    // Float/double grouping keys would bypass Spark's
-    // NormalizeFloatingNumbers rule in the native path (-0.0 vs 0.0 and
-    // NaN bit patterns could hash to different partitions / rank as
-    // distinct keys); route those to the window form, which normalizes.
-    val floatKey = keyCols.exists { c =>
-      df.schema.find(_.name.equalsIgnoreCase(c)).exists(f =>
-        f.dataType == org.apache.spark.sql.types.FloatType ||
-          f.dataType == org.apache.spark.sql.types.DoubleType)
-    }
-    if (!floatKey &&
-        spark.sessionState.planner.extraPlanningStrategies.contains(TopKStrategy)) {
-      val analyzed = df.queryExecution.analyzed
-      def attr(n: String): Attribute = analyzed.output
-        .find(_.name.equalsIgnoreCase(n))
-        .getOrElse(throw new IllegalArgumentException(
-          s"column $n not in ${analyzed.output.map(_.name)}"))
-      val order = SortOrder(attr(orderCol), Descending) +:
-        tiebreakCols.map(c => SortOrder(attr(c), Ascending))
-      val rank = AttributeReference("rk", LongType, nullable = false)()
-      org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
-        TopKPerKeyNode(keyCols.map(attr), order, k, rank, analyzed))
-    } else {
-      val w = Window.partitionBy(keyCols.map(col): _*)
-        .orderBy(col(orderCol).desc +: tiebreakCols.map(col(_).asc): _*)
-      df.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= k)
-    }
+    val w = Window.partitionBy(keyCols.map(col): _*)
+      .orderBy(col(orderCol).desc +: tiebreakCols.map(col(_).asc): _*)
+    df.withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= k)
   }
 }

@@ -27,7 +27,7 @@ import TopKPerKey.TopKPerKeyNode
   *  - exactly one window expression, and it is `row_number()` with the
   *    default running frame;
   *  - partition keys are non-float attributes (float keys would bypass
-  *    NormalizeFloatingNumbers — same guard as `topKDesc`);
+  *    NormalizeFloatingNumbers);
   *  - the rank is bounded by one `<=` / `<` / `= 1` conjunct against an
   *    integer literal; remaining conjuncts are re-applied on top (rank
   *    values are identical, so residual predicates see the same input);

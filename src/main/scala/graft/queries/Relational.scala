@@ -241,16 +241,8 @@ object Relational {
     // Expand plan would funnel raw rows through the 31 hot token keys
     // (measured 11 s vs 2 s at a 10× corpus).
     "r23_top_tokens" -> { (s, dir) =>
-      val base = t(s, dir, "documents")
-      val perDoc =
-        if (s.catalog.functionExists("tokenize_tf"))
-          base.selectExpr("doc_id",
-            "explode(tokenize_tf(text)) as (token, n_in_doc)")
-        else // composable twin when the extension isn't installed
-          base.selectExpr("doc_id",
-              "explode(split(trim(lower(text)), '\\\\s+')) as token")
-            .groupBy(col("token"), col("doc_id")).agg(cnt.as("n_in_doc"))
-      perDoc
+      t(s, dir, "documents")
+        .selectExpr("doc_id", "explode(tokenize_tf(text)) as (token, n_in_doc)")
         .groupBy(col("token"))
         .agg(sum(col("n_in_doc")).as("n"), cnt.as("n_docs"))
         .orderBy(col("n").desc, col("token"))

@@ -206,13 +206,14 @@ object Streaming {
     * scales with ingest parallelism alone. The static side re-resolves
     * per micro-batch (same slowly-changing-dimension behavior as
     * [[enrichEvents]]), which is how a refreshed benchmark suite takes
-    * effect without restarting the stream. Requires GraftExtensions
-    * (`bloom_might_contain`). */
+    * effect without restarting the stream. Installs graft's functions
+    * (`bloom_might_contain`) on the stream's session first. */
   def scrubStream(
       docs: DataFrame, // streaming: (doc_id, text)
       bloom: DataFrame, // static one-row: (bloom: array<bigint>)
       seeds: Int = 3): DataFrame = {
     import graft.llm.Frag._
+    graft.plans.GraftExtensions.install(docs.sparkSession)
     docs.crossJoin(broadcast(bloom))
       .selectExpr("doc_id", "text",
         s"${sLet(sTokens, "tk", sGrams8)} as gs", "bloom")
@@ -284,8 +285,8 @@ object Streaming {
   /** Streaming near-dup candidate gate — the LSH banding recall arm of
     * the batch x07 pipeline applied at ingest time: each incoming doc
     * computes its 16-seed minhash signature and 4 band hashes MAP-SIDE
-    * (the same md5-derived hash family the batch index uses, fused
-    * `minhash16` when the extension is installed) and probes the
+    * (the same md5-derived hash family the batch index uses, through
+    * the fused `minhash16`) and probes the
     * standing band index through four broadcast left joins against its
     * per-bucket min-rep reduction (one row per (band, bucket), so the
     * joins can never grow the stream) — no stream shuffle, no state.
@@ -306,25 +307,19 @@ object Streaming {
     * [[ingestGateStream]]: adds `e0..e3` (per-band standing-index min
     * rep, null = no bucket hit) to `docs`, preserving every input
     * column. Four broadcast left joins against per-bucket min-rep
-    * reductions — no stream shuffle, no state. */
+    * reductions — no stream shuffle, no state. Installs graft's
+    * functions first: the stream may come from a session built
+    * without `GraftExtensions`. */
   private def withBandHits(docs: DataFrame, bandIndex: DataFrame): DataFrame = {
     import graft.llm.Frag._
-    val s = docs.sparkSession
-    val shingleE =
-      if (s.catalog.functionExists("shingles3")) "shingles3(text)"
-      else sLet(sTokens, "tk", sShingles)
-    val sigE =
-      if (s.catalog.functionExists("minhash16")) "minhash16(shs)"
-      else "array(" + (0 until 16).map(i =>
-        s"array_min(transform(shs, sh0 -> ${sDerive(sH("sh0"), i)}))")
-        .mkString(", ") + ")"
+    graft.plans.GraftExtensions.install(docs.sparkSession)
     def bh(b: Int) = sH(s"concat_ws(',', element_at(ms, ${4 * b + 1}), " +
       s"element_at(ms, ${4 * b + 2}), element_at(ms, ${4 * b + 3}), " +
       s"element_at(ms, ${4 * b + 4}))")
     var cur = docs
-      .withColumn("shs", expr(shingleE))
+      .withColumn("shs", expr("shingles3(text)"))
       .withColumn("ms",
-        expr(s"case when size(shs) > 0 then $sigE else null end"))
+        expr("case when size(shs) > 0 then minhash16(shs) else null end"))
     for (b <- 0 until 4) {
       val idx = bandIndex.filter(col("bi") === b)
         .groupBy("bh").agg(min(col("e_of")).as(s"e$b"))

@@ -52,9 +52,39 @@ class BloomSpec extends SparkSpec {
   }
 
   test("x61 native bitset path ≡ composable positions-subset fallback") {
-    val ext = graft.llm.Dedup.bloomDecontam(spark, sf001, native = true)
+    import graft.llm.Frag._
+    import org.apache.spark.sql.functions.{count, lit}
+    val ext = graft.llm.Dedup.bloomDecontam(spark, sf001)
       .collect().map(_.toSeq).toSeq
-    val fb = graft.llm.Dedup.bloomDecontam(spark, sf001, native = false)
+    // the oracle: count how many of the k derived positions each train
+    // gram finds among the distinct test-set positions — `all k set` ≡
+    // bloom membership (x61's splitGrams rebuilt from its Frag parts)
+    val m = graft.llm.Dedup.BloomM; val k = graft.llm.Dedup.BloomK
+    def posList(h: String) =
+      (0 until k).map(j => s"${KernelOracles.sDerive(h, j)} % $m").mkString(", ")
+    val grams = graft.queries.Tables.t(spark, sf001, "documents")
+      .selectExpr("doc_id", s"${sSplitBucket("doc_id")} as bucket",
+        s"${sLet(sTokens, "tk", sGrams8)} as gs")
+    val trainDocs = grams.filter("bucket < 80").select("doc_id", "gs")
+    val tpos = grams.filter("bucket >= 90")
+      .selectExpr("explode(gs) as g").distinct()
+      .selectExpr(s"${sH("g")} as h")
+      .selectExpr(s"explode(array(${posList("h")})) as p")
+      .distinct()
+    val flagged = trainDocs.selectExpr("doc_id", "explode(gs) as g")
+      .selectExpr("doc_id", "g", s"${sH("g")} as h")
+      .selectExpr("doc_id", "g", s"explode(array(${posList("h")})) as p")
+      .join(tpos, "p")
+      .groupBy("doc_id", "g").agg(count(lit(1)).as("nset"))
+      .filter(s"nset = $k")
+      .groupBy("doc_id").agg(count(lit(1)).as("n_flagged"))
+    val fb = trainDocs
+      .selectExpr("doc_id", "cast(size(gs) as bigint) as n_grams")
+      .join(flagged, Seq("doc_id"), "left")
+      .selectExpr("doc_id", "n_grams",
+        "coalesce(n_flagged, cast(0 as bigint)) as n_flagged",
+        "coalesce(n_flagged, cast(0 as bigint)) > 0 as flagged")
+      .orderBy("doc_id")
       .collect().map(_.toSeq).toSeq
     assert(ext == fb)
   }

@@ -73,10 +73,9 @@ class CosineF32Spec extends SparkSpec {
 
   test("sign_bands_f32 matches the composable HOF band expressions") {
     import spark.implicits._
-    import graft.llm.Frag
     val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .limit(50)
-    val hof = s"array(${(0 until 4).map(b => Frag.sBand("embedding", b)).mkString(", ")})"
+    val hof = s"array(${(0 until 4).map(b => KernelOracles.sBand("embedding", b)).mkString(", ")})"
     val rows = df.selectExpr("sign_bands_f32(embedding) as native", s"$hof as hof")
       .collect()
     rows.foreach { r =>
@@ -85,9 +84,8 @@ class CosineF32Spec extends SparkSpec {
   }
 
   test("shingles3 matches the composable tokenize+shingle+distinct chain") {
-    import graft.llm.Frag
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(100)
-    val hof = Frag.sLet(Frag.sTokens, "tk", Frag.sShingles)
+    val hof = KernelOracles.sShinglesHof
     val rows = df.selectExpr("shingles3(text) as native", s"$hof as hof").collect()
     rows.foreach { r =>
       assert(r.getSeq[String](0) == r.getSeq[String](1))

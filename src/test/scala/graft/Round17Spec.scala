@@ -80,18 +80,15 @@ class Round17Spec extends SparkSpec {
       "adjacent P+Q runs merge; the far P repeat is a second island")
   }
 
-  test("x119: broadcast, bloom-gated and plain-shuffle paths are bit-identical") {
-    val broadcastPath = graft.llm.Dedup.contaminationSpan(spark, dir,
-      native = true).collect().toSeq
+  test("x119: broadcast and bloom-gated paths are bit-identical") {
+    val broadcastPath = graft.llm.Dedup.contaminationSpan(spark, dir)
+      .collect().toSeq
     // broadcastKeys = 0 forces the large-eval fallback: bloom gate +
-    // shuffle semi-join (native) / plain shuffle semi-join (oracle shape)
+    // shuffle semi-join
     val bloomPath = graft.llm.Dedup.contaminationSpan(spark, dir,
-      native = true, broadcastKeys = 0L).collect().toSeq
-    val plain = graft.llm.Dedup.contaminationSpan(spark, dir,
-      native = false, broadcastKeys = 0L).collect().toSeq
-    assert(broadcastPath == plain)
-    assert(bloomPath == plain)
-    assert(plain.nonEmpty)
+      broadcastKeys = 0L).collect().toSeq
+    assert(bloomPath == broadcastPath)
+    assert(broadcastPath.nonEmpty)
   }
 
   test("x29: above the broadcast bound the pair members take a plain join, same rows") {
@@ -127,7 +124,7 @@ class Round17Spec extends SparkSpec {
   }
 
   test("x119: fallback bloom gate plan probes map-side (broadcast, no corpus gram shuffle before the gate)") {
-    val plan = graft.llm.Dedup.contaminationSpan(spark, dir, native = true,
+    val plan = graft.llm.Dedup.contaminationSpan(spark, dir,
         broadcastKeys = 0L)
       .queryExecution.executedPlan.toString
     assert(plan.contains("bloom_might_contain"), "codegen probe present")
@@ -137,7 +134,7 @@ class Round17Spec extends SparkSpec {
   }
 
   test("x119: default path broadcasts the exact semi-join — no bloom, no gram shuffle") {
-    val plan = graft.llm.Dedup.contaminationSpan(spark, dir, native = true)
+    val plan = graft.llm.Dedup.contaminationSpan(spark, dir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("bloom_might_contain"),
       "broadcast exact join supersedes the bloom gate when the eval set fits")

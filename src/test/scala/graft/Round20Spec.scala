@@ -53,9 +53,8 @@ class Round20Spec extends SparkSpec {
   }
 
   test("x48/x57/x64 ride the fused string shingler; fused == composable HOF chain") {
-    // the fused kernel must be in the analyzed plans (extensions are
-    // installed in the spec session), and the HOF fallback must be
-    // value-identical so extension-less sessions stay oracle-green
+    // the fused kernel must be in the analyzed plans, and it must be
+    // value-identical to the composable HOF chain it replaced
     for (q <- Seq("x48_source_overlap", "x57_novelty", "x64_dedup_pressure")) {
       val plan = SparkEntry.queries(q)(spark, sf001)
         .queryExecution.analyzed.toString
@@ -64,7 +63,7 @@ class Round20Spec extends SparkSpec {
     val d = graft.queries.Tables.t(spark, sf001, "documents")
     val fused = d.selectExpr("doc_id", "shingles3(text) as shs")
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    val hof = d.selectExpr("doc_id", s"${sLet(sTokens, "tk", sShingles)} as shs")
+    val hof = d.selectExpr("doc_id", s"${KernelOracles.sShinglesHof} as shs")
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(fused.nonEmpty && fused == hof,
       "fused shingles3 != composable HOF chain")
@@ -72,7 +71,7 @@ class Round20Spec extends SparkSpec {
     import org.apache.spark.sql.functions.{count, lit}
     val viaFused = SparkEntry.queries("x64_dedup_pressure")(spark, sf001)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaHof = d.selectExpr(s"${sLet(sTokens, "tk", sShingles)} as shs")
+    val viaHof = d.selectExpr(s"${KernelOracles.sShinglesHof} as shs")
       .selectExpr("explode(shs) as sh")
       .groupBy("sh").agg(count(lit(1)).as("df"))
       .groupBy("df").agg(count(lit(1)).as("n"))

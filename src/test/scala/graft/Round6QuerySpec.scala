@@ -187,9 +187,8 @@ class Round6QuerySpec extends SparkSpec {
     // fractions partition the total mass (rounded per row)
     assert(math.abs(rows.map(_.getDouble(3)).sum - 1.0) < rows.length * 1e-6)
     // Σ n_shingles = corpus distinct shingle count; Σ mass = (doc, shingle) pairs
-    import graft.llm.Frag._
     val ex = graft.queries.Tables.t(spark, sf001, "documents")
-      .selectExpr(s"explode(${sLet(sTokens, "tk", sShingles)}) as sh")
+      .selectExpr(s"explode(${KernelOracles.sShinglesHof}) as sh")
     assert(rows.map(_.getLong(1)).sum == ex.distinct().count())
     assert(rows.map(_.getLong(2)).sum == ex.count())
   }

@@ -26,6 +26,28 @@ class SpaceSavingSpec extends SparkSpec {
     assert(rows.head.getLong(1) >= 1000L) // SpaceSaving only over-estimates
   }
 
+  test("topk_freq ≡ groupBy + window top-k when capacity covers the vocabulary (sf0.001)") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val tok = graft.queries.Tables.t(spark, sf001, "documents")
+      .selectExpr("explode(split(trim(lower(text)), '\\\\s+')) as token")
+    val vocab = tok.distinct().count()
+    assert(vocab <= 64, s"capacity 64 must cover the vocabulary ($vocab)")
+    val sketch = tok.selectExpr("topk_freq(token, 10, 64) as tops")
+      .selectExpr("posexplode(tops) as (rank, t)")
+      .selectExpr("cast(rank as bigint) as rank", "t.item as token", "t.cnt as n")
+      .orderBy("rank").collect().toSeq
+    val window = tok.groupBy("token").agg(count(lit(1)).as("n"))
+      .withColumn("rank",
+        (row_number().over(Window.orderBy(col("n").desc, col("token"))) - 1)
+          .cast("long"))
+      .filter(col("rank") < 10)
+      .select("rank", "token", "n")
+      .orderBy("rank").collect().toSeq
+    assert(sketch.size == 10)
+    assert(sketch == window)
+  }
+
   test("topk_freq ignores nulls") {
     import spark.implicits._
     val rows = Seq(Some("a"), None, Some("a"), None).toDF("x")

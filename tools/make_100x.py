@@ -10,7 +10,7 @@ dimensions).
 
 Usage: python3 tools/make_100x.py [src_sfdir] [out_dir]
 Then:  SPARK_GRAFT_SF_DIR=<out_dir> sbt "runMain graft.Bench"
-       (or graft.RunOne <query> <out_dir> 2 for per-query slopes)
+       (or graft.Dev run <query> <out_dir> 2 for per-query slopes)
 """
 import duckdb, os, sys
 
