@@ -1,5 +1,6 @@
 package graft
 
+import graft.index.GraphIndex
 import graft.model.SchemaCodec
 import graft.pipeline.SyncPipeline
 import org.apache.spark.sql.SparkSession
@@ -188,51 +189,16 @@ object Main {
     spark.stop()
   }
 
-  /** `compact_index`'s testable body: compute the compacted standing
-    * graph and install it under `indexDir` — through the EXACT tier
-    * keys the walk resolves (`nnd_edges` + recomputed `nnd_ud` +
-    * `tombstones`, via Similarity.installCompacted), plus the segment-
-    * labeled audit copy as `nnd_edges_compacted`. The index root conf
-    * is pointed at `indexDir` for the duration (and restored), so the
-    * resident graph being compacted is LOADED from the durable tier
-    * under that very root instead of rebuilt in-session. Returns a
+  /** `compact_index`'s testable body: read the optional batch files
+    * (--deletes: vec_id; --inserts: vec_id, embedding) and run one
+    * compaction cycle into `indexDir` (GraphIndex.compact). Returns a
     * one-line human summary (segment counts + installed path). */
   private[graft] def compactIndex(spark: SparkSession, corpus: String,
       indexDir: String, deletes: Option[String], inserts: Option[String],
-      hops: Int): String = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val prevRoot = spark.conf.getOption("spark.graft.indexDir")
-    spark.conf.set("spark.graft.indexDir", indexDir)
-    try {
-      val vict = deletes match {
-        case Some(p) => broadcast(
-          spark.read.parquet(p).select(col("vec_id").as("v")).localCheckpoint())
-        case None => graft.llm.Similarity.defaultVictims(spark, corpus)
-      }
-      val batch = inserts match {
-        case Some(p) => spark.read.parquet(p)
-          .selectExpr("vec_id as src", "embedding as ea",
-            "aggregate(zip_with(embedding, embedding, (x, y) -> " +
-              "cast(x as double) * cast(y as double)), cast(0 as double), " +
-              "(acc, t) -> acc + t) as sa")
-          .localCheckpoint()
-        case None => graft.llm.Similarity.defaultInsertBatch(spark, corpus)
-      }
-      val g = graft.llm.Similarity
-        .compactedEdges(spark, corpus, vict, batch, hops)
-        .localCheckpoint() // one computation: counted below AND installed
-      val counts = g.groupBy("segment").count().collect()
-        .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
-      val path = graft.queries.Durable.install(spark, indexDir, corpus,
-        "nnd_edges_compacted", "v1", g)
-      graft.llm.Similarity.installCompacted(spark, corpus, indexDir, g,
-        vict, batch)
-      s"compacted standing graph installed at $path ($counts)"
-    } finally prevRoot match {
-      case Some(r) => spark.conf.set("spark.graft.indexDir", r)
-      case None    => spark.conf.unset("spark.graft.indexDir")
-    }
-  }
+      hops: Int): String =
+    GraphIndex.compact(spark, corpus, indexDir,
+      deletes.map(spark.read.parquet(_).selectExpr("vec_id as v")),
+      inserts.map(p => GraphIndex.probeRows(spark.read.parquet(p))), hops)
 
   /** `--seed` resolution for `ann_search` (round 15). Explicit values
     * are VALIDATED — hash|ivf only; a typo ('IVF', 'ifv') is a usage
@@ -273,10 +239,9 @@ object Main {
         // is intent, and the gauge is the evidence. No gauge installed
         // ⇒ trust residency (never build a corpus pass inside a point
         // lookup).
-        if (entries.isEmpty &&
-          graft.llm.Similarity.ivfTiersFresh(spark, corpus) &&
-          graft.llm.Similarity.quantizerGauge(spark, corpus)
-            .forall(_ >= graft.llm.Similarity.QuantizerMarginThreshold)) "ivf"
+        if (entries.isEmpty && GraphIndex.ivfTiersFresh(spark, corpus) &&
+          GraphIndex.quantizerGauge(spark, corpus)
+            .forall(_ >= GraphIndex.QuantizerMarginThreshold)) "ivf"
         else "hash"
     }
 
@@ -287,22 +252,17 @@ object Main {
       ids: Option[String], probesFile: Option[String], hops: Int,
       k: Int, b: Int = 5, e: Int = 8,
       seed: String = "hash"): Seq[String] = {
-    val sq = "aggregate(zip_with(embedding, embedding, (x, y) -> " +
-      "cast(x as double) * cast(y as double)), cast(0 as double), " +
-      "(acc, t) -> acc + t)"
-    val probes = probesFile match {
+    val rows = probesFile match {
       case Some(p) => spark.read.parquet(p)
-        .selectExpr("vec_id as src", "embedding as ea", s"$sq as sa")
       case None =>
         val idList = ids.getOrElse("0").split(",").map(_.trim.toLong)
         graft.queries.Tables.t(spark, corpus, "embeddings")
           .filter(org.apache.spark.sql.functions.col("vec_id")
             .isin(idList: _*))
-          .selectExpr("vec_id as src", "embedding as ea", s"$sq as sa")
     }
-    graft.llm.Similarity
-      .annSearch(spark, corpus, probes.localCheckpoint(), hops, k, b, e,
-        seed)
+    GraphIndex
+      .annSearch(spark, corpus, GraphIndex.probeRows(rows).localCheckpoint(),
+        hops, k, b, e, seed)
       .collect()
       .map(r => f"${r.getLong(0)}%d ${r.getLong(1)}%d ${r.getLong(2)}%d ${r.getDouble(3)}%.6f")
       .toSeq

@@ -66,7 +66,7 @@ object StreamDecade {
         .agg(expr("bloom_bits(h, 4096, 3) as bloom"))
         .localCheckpoint()
       // graph tiers: one throwaway insert forces nnd_edges + nnd_ud
-      graft.llm.Similarity.insertEdges(spark, dir,
+      graft.index.GraphIndex.insertEdges(spark, dir,
         insertBatch.limit(1), hops = 1).count()
       val standingSec = (System.nanoTime() - t0) / 1e9
       // ── the timed per-batch legs (min of 3 — each rep is one
@@ -76,7 +76,7 @@ object StreamDecade {
           .ingestGateStream(gateBatch, fpStore, bands, bloom).count()
       }
       val insertSec = timeMin(3) {
-        graft.llm.Similarity.insertEdges(spark, dir, insertBatch, hops = 2)
+        graft.index.GraphIndex.insertEdges(spark, dir, insertBatch, hops = 2)
           .count()
       }
       println(f"""{"dir":"$dir","corpus_docs":$nDocs,"standing_sec":$standingSec%.2f,"gate_batch":$nGate,"gate_sec":$gateSec%.3f,"insert_batch":$nIns,"insert_sec":$insertSec%.3f}""")

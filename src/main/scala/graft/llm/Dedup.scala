@@ -275,57 +275,22 @@ object Dedup {
   }
 
   /** Connected components over [[simhashPairs]] as (doc, lbl) — lbl =
-    * min doc_id in the component; only docs in ≥ 1 pair appear.
-    * Distributed min-label propagation; eager localCheckpoint per round
-    * truncates lineage so each round plans against materialized
-    * partitions (without it Catalyst re-analyzes a plan that grows with
-    * every iteration and the loop goes quadratic in rounds). The
-    * improvement flag rides in the same pass, so the convergence probe
-    * is a filter over checkpointed data — one distributed job per
-    * round, one boolean to the driver.
+    * min doc_id in the component; only docs in ≥ 1 pair appear. The
+    * min-label loop is [[graft.index.GraphIndex.minLabels]] (x122's),
+    * run to the fixpoint with its cheap `isEmpty` convergence test.
     *
     * Shared-tier frame: the converged cluster assignment is reused by
     * x24/x32/x52/x73 (and transitively by every canonical-mapping
     * consumer) — in a real dedup campaign it IS a persisted table, so
     * the propagation loop runs once per corpus, not once per report. */
   private def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    Shared.shared(s, dir, "cluster_labels")(clusterLabelsBuild(s, dir))
-
-  private def clusterLabelsBuild(s: SparkSession, dir: String): DataFrame = {
-    val pairs = simhashPairs(s, dir).select("doc_a", "doc_b")
-    val edges = pairs
-      .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst")
-      .localCheckpoint()
-    // The propagation loop runs on pair-graph-sized frames — orders of
-    // magnitude smaller than the corpus (LSH candidates, not documents).
-    // Size the loop's shuffle width to the graph, not the corpus: at the
-    // corpus width every round is ~100 near-empty tasks of pure
-    // scheduling overhead (measured 2.2s → 0.9s for x32 at sf0.1). At
-    // true scale the same rule applies — the width should track
-    // |pair graph| / target-partition-size, which is why it is derived
-    // from the edge frame, not hardcoded to the session default.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val loopParts = math.min(prevParts.toInt,
-      math.max(2, (edges.count() / 100000L).toInt)).toString
-    s.conf.set("spark.sql.shuffle.partitions", loopParts)
-    try {
-      var labels = edges.select(col("src").as("doc")).distinct()
-        .withColumn("lbl", col("doc")).localCheckpoint()
-      var converged = false
-      while (!converged) {
-        val prop = edges.join(labels.withColumnRenamed("doc", "src"), "src")
-          .groupBy(col("dst").as("doc")).agg(min(col("lbl")).as("nlbl"))
-        val next = labels.join(prop, Seq("doc"), "left")
-          .selectExpr("doc", "least(lbl, coalesce(nlbl, lbl)) as lbl",
-            "coalesce(nlbl, lbl) < lbl as improved")
-          .localCheckpoint()
-        converged = next.filter(col("improved")).isEmpty
-        labels = next.drop("improved")
-      }
-      labels
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-  }
+    Shared.shared(s, dir, "cluster_labels") {
+      val pairs = simhashPairs(s, dir)
+        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      graft.index.GraphIndex.minLabels(s,
+        graft.index.GraphIndex.undirected(pairs).localCheckpoint(), "doc",
+        maxRounds = Int.MaxValue, countChanged = false)._1
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, MapType}
 
 /** Exact 1-based global rank under a total order, with NO global
   * window (the `ntile().over(Window.orderBy(...))` plan funnels the
@@ -23,13 +24,30 @@ import org.apache.spark.sql.functions._
   * Used by r38's exact distributed NTILE and x56's deterministic
   * training-shard assignment. */
 object ExactRank {
+
+  /** The narrow-frame contract of both ranks: the input is persisted
+    * twice until `Shared.dropTransient`, so it must carry ids and sort
+    * columns only. An array or map column (an embedding, a token list)
+    * fails here, by name; rank the ids and join the payload back. */
+  private def requireNarrow(df: DataFrame, op: String): Unit = {
+    val wide = df.schema.fields.collect {
+      case f if f.dataType.isInstanceOf[ArrayType] ||
+        f.dataType.isInstanceOf[MapType] => f.name
+    }
+    require(wide.isEmpty,
+      s"ExactRank.$op takes a narrow frame (ids and sort columns); " +
+        s"array/map columns ${wide.mkString(", ")} would be persisted " +
+        "twice — rank the ids and join the payload back")
+  }
+
   def withGlobalRank(df: DataFrame, sortCols: Seq[Column]): DataFrame = {
+    requireNarrow(df, "withGlobalRank")
     val s = df.sparkSession
     // RangePartitioner SAMPLES its child in a separate job before the
     // shuffle reads it again — an expensive input (e.g. x73's corpus
     // tokenize + quality score) would be computed twice per action.
     // Materialize the input once; sampling and shuffle both read the
-    // cached copy. CALLERS MUST PASS NARROW FRAMES (id + sort cols):
+    // cached copy. Callers pass narrow frames (requireNarrow):
     // Shared.temp persists whatever it gets, and both this copy and the
     // repartitioned one below stay cached until dropTransient — a wide
     // input would hold double its footprint for the query's lifetime
@@ -76,6 +94,7 @@ object ExactRank {
     * construction. */
   def withGlobalCumsum(df: DataFrame, sortCols: Seq[Column],
       valueCol: Column): DataFrame = {
+    requireNarrow(df, "withGlobalCumsum")
     val s = df.sparkSession
     // same sampling-pass materialization as withGlobalRank
     val pre = Shared.temp(df.withColumn("__v", valueCol.cast("bigint")))

@@ -58,7 +58,7 @@ object Streaming {
   /** Streaming graph-index maintenance — x124's insertion primitive in
     * the sync loop: each micro-batch of newly-embedded vectors is
     * beam-search-inserted against the FROZEN standing kNN index
-    * (`llm.Similarity.insertEdges` — the shared tiers are built once
+    * (`index.GraphIndex.insertEdges` — the shared tiers are built once
     * and resolved per batch like every other stream-static side), and
     * the resulting edge lists append to an output store a periodic
     * compaction folds into the index. The walk is ITERATIVE
@@ -107,11 +107,9 @@ object Streaming {
     * (batch, batchId) twice leaves ONE copy of its edge lists. */
   private[graft] def insertEdgeBatch(batch: DataFrame, standingDir: String,
       outPath: String, hops: Int, batchId: Long): Unit = {
-    import graft.llm.Frag.sSumSq
     if (!batch.isEmpty) {
-      val probes = batch.selectExpr("vec_id as src", "embedding as ea",
-        s"${sSumSq("embedding")} as sa").localCheckpoint()
-      graft.llm.Similarity
+      val probes = graft.index.GraphIndex.probeRows(batch).localCheckpoint()
+      graft.index.GraphIndex
         .insertEdges(batch.sparkSession, standingDir, probes, hops)
         .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
         .write.mode("overwrite")

@@ -11,7 +11,7 @@ class AnnSearchSpec extends SparkSpec {
       .filter("vec_id < 8")
       .selectExpr("vec_id as src", "embedding as ea",
         "aggregate(zip_with(embedding, embedding, (x, y) -> cast(x as double) * cast(y as double)), cast(0 as double), (acc, t) -> acc + t) as sa")
-    val mine = graft.llm.Similarity
+    val mine = graft.index.GraphIndex
       .annSearch(spark, sf001, probes, hops = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val x121 = SparkEntry.queries("x121_graph_beam_search")(spark, sf001)
@@ -85,9 +85,9 @@ class AnnSearchSpec extends SparkSpec {
     // routing margin — installing it flips the default back to hash
     // (measured evidence beats tier-residency intent); explicit --seed
     // ivf stays honored
-    graft.llm.Similarity.quantizerMargin(s2, sf001).count()
-    val g = graft.llm.Similarity.quantizerGauge(s2, sf001)
-    assert(g.exists(_ < graft.llm.Similarity.QuantizerMarginThreshold),
+    graft.index.GraphIndex.quantizerMargin(s2, sf001).count()
+    val g = graft.index.GraphIndex.quantizerGauge(s2, sf001)
+    assert(g.exists(_ < graft.index.GraphIndex.QuantizerMarginThreshold),
       s"hash-geometry gauge should read below threshold: $g")
     assert(Main.resolveSeed(s2, sf001, None, None) == "hash",
       "a measured-low gauge must veto the ivf default")
@@ -108,7 +108,7 @@ class AnnSearchSpec extends SparkSpec {
         s"margin out of range: $r")
     }
     val weighted = rows.map(r => r.getLong(1) * r.getDouble(3)).sum / n
-    assert(weighted < graft.llm.Similarity.QuantizerMarginThreshold,
+    assert(weighted < graft.index.GraphIndex.QuantizerMarginThreshold,
       s"isotropic corpus should gauge below 0.2, got $weighted")
   }
 
@@ -121,7 +121,7 @@ class AnnSearchSpec extends SparkSpec {
       .filter("vec_id < 64")
       .selectExpr("vec_id as src", "embedding as ea",
         "aggregate(zip_with(embedding, embedding, (x, y) -> cast(x as double) * cast(y as double)), cast(0 as double), (acc, t) -> acc + t) as sa")
-    val res = graft.llm.Similarity
+    val res = graft.index.GraphIndex
       .annSearch(spark, sf001, probes, hops = 2, k = 5, seed = "ivf")
       .collect()
     assert(res.nonEmpty)

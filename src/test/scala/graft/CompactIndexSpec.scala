@@ -42,9 +42,9 @@ class CompactIndexSpec extends SparkSpec {
     val gDisk = spark.read.parquet(Files.list(java.nio.file.Paths.get(root))
       .iterator().next().toString + "/nnd_edges_compacted__v1/data.parquet")
       .select("src", "dst", "cos")
-    val gMem = graft.llm.Similarity.compactedEdges(spark, sf001,
-        graft.llm.Similarity.defaultVictims(spark, sf001),
-        graft.llm.Similarity.defaultInsertBatch(spark, sf001), hops = 2)
+    val gMem = graft.index.GraphIndex.compactedEdges(spark, sf001,
+        graft.index.GraphIndex.defaultVictims(spark, sf001),
+        graft.index.GraphIndex.defaultInsertBatch(spark, sf001), hops = 2)
       .select("src", "dst", "cos")
     def walk(edges: org.apache.spark.sql.DataFrame): Array[String] = {
       // undirected 1-hop neighborhood walk from the surviving probes:
@@ -75,7 +75,7 @@ class CompactIndexSpec extends SparkSpec {
         "aggregate(zip_with(embedding, embedding, (x, y) -> " +
           "cast(x as double) * cast(y as double)), cast(0 as double), " +
           "(acc, t) -> acc + t) as sa").localCheckpoint()
-    val hits = graft.llm.Similarity.annSearch(s2, sf001, probes,
+    val hits = graft.index.GraphIndex.annSearch(s2, sf001, probes,
       hops = 2, k = 10).collect()
     assert(hits.nonEmpty)
     // the default cycle tombstones vec_id % 89 == 0: none may surface
@@ -91,7 +91,7 @@ class CompactIndexSpec extends SparkSpec {
     assert(ud != null && ud._1 >= 1 && ud._2 == 0,
       s"post-cycle session rebuilt nnd_ud instead of loading: $ud")
     // the loaded standing graph IS the compacted one: no edge touches a victim
-    val g = graft.llm.Similarity.nndescentEdges(s2, sf001, iters = 2)
+    val g = graft.index.GraphIndex.nndescentEdges(s2, sf001, iters = 2)
     assert(g.filter("dst % 89 = 0").count() == 0,
       "engine-resolved standing graph still has edges into victims")
   }

@@ -60,7 +60,7 @@ class DurableTiersSpec extends SparkSpec {
     val s1 = spark.newSession()
     s1.conf.set("spark.graft.indexDir", root)
     Durable.stats.clear()
-    val built = graft.llm.Similarity.nndescentEdges(s1, sf001, iters = 2)
+    val built = graft.index.GraphIndex.nndescentEdges(s1, sf001, iters = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(identity)
     val m0 = Durable.stats.get("nnd_edges")
@@ -74,7 +74,7 @@ class DurableTiersSpec extends SparkSpec {
     val s2 = spark.newSession()
     s2.conf.set("spark.graft.indexDir", root)
     Durable.stats.clear()
-    val loaded = graft.llm.Similarity.nndescentEdges(s2, sf001, iters = 2)
+    val loaded = graft.index.GraphIndex.nndescentEdges(s2, sf001, iters = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(identity)
     val m1 = Durable.stats.get("nnd_edges")
@@ -228,7 +228,7 @@ class DurableTiersSpec extends SparkSpec {
     val s1 = spark.newSession()
     s1.conf.set("spark.graft.indexDir", root)
     Durable.stats.clear()
-    graft.llm.Similarity.nndescentEdges(s1, corpus, iters = 2).count()
+    graft.index.GraphIndex.nndescentEdges(s1, corpus, iters = 2).count()
     assert(Durable.stats.get("nnd_edges")._2 == 1)
     // rewrite the corpus (mtime + size change)
     val f = Paths.get(s"$corpus/embeddings.parquet")
@@ -241,7 +241,7 @@ class DurableTiersSpec extends SparkSpec {
     val s2 = spark.newSession()
     s2.conf.set("spark.graft.indexDir", root)
     Durable.stats.clear()
-    graft.llm.Similarity.nndescentEdges(s2, corpus, iters = 2).count()
+    graft.index.GraphIndex.nndescentEdges(s2, corpus, iters = 2).count()
     val m = Durable.stats.get("nnd_edges")
     assert(m._2 == 1 && m._1 == 0,
       s"stale tier served after a corpus rewrite: $m")
@@ -250,7 +250,7 @@ class DurableTiersSpec extends SparkSpec {
   test("no index root configured: the layer is transparent (in-session build, nothing written)") {
     val s1 = spark.newSession() // no spark.graft.indexDir
     Durable.stats.clear()
-    val rows = graft.llm.Similarity.nndescentEdges(s1, sf001, iters = 2).count()
+    val rows = graft.index.GraphIndex.nndescentEdges(s1, sf001, iters = 2).count()
     assert(rows > 0)
     // stats may record the build, but nothing may be on disk: root(s)
     // is None so loadOrBuild never ran

@@ -163,16 +163,16 @@ class Round17Spec extends SparkSpec {
   }
 
   test("x120: the descent descends — local-join rounds never lose recall, and gain it here") {
-    val r0 = recallOf(graft.llm.Similarity
+    val r0 = recallOf(graft.index.GraphIndex
       .nndescentGraph(spark, sf001, iters = 0).collect())
-    val r2 = recallOf(graft.llm.Similarity
+    val r2 = recallOf(graft.index.GraphIndex
       .nndescentGraph(spark, sf001, iters = 2).collect())
     assert(r2 >= r0, s"recall fell: init $r0 -> 2 rounds $r2")
     assert(r2 > r0, s"2 local-join rounds must improve on random init ($r0)")
   }
 
   test("x120: top-K folds ride the native bounded-heap operator") {
-    val plan = graft.llm.Similarity.nndescentGraph(spark, sf001, iters = 1)
+    val plan = graft.index.GraphIndex.nndescentGraph(spark, sf001, iters = 1)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartialTopK") && plan.contains("FinalTopK"),
       "per-node K-list selection must be the two-phase native top-k")
@@ -199,16 +199,16 @@ class Round17Spec extends SparkSpec {
     // visited set, so top-K recall is monotone by construction — assert
     // the implementation preserves that, and that 2 hops actually beat
     // the entry points on this corpus (the graph is navigable).
-    val r0 = recallOf(graft.llm.Similarity
+    val r0 = recallOf(graft.index.GraphIndex
       .graphBeamSearch(spark, sf001, hops = 0).collect())
-    val r2 = recallOf(graft.llm.Similarity
+    val r2 = recallOf(graft.index.GraphIndex
       .graphBeamSearch(spark, sf001, hops = 2).collect())
     assert(r2 >= r0, s"recall fell: entries $r0 -> 2 hops $r2")
     assert(r2 > r0, s"2 hops must improve on raw entry points ($r0)")
   }
 
   test("x121: frontier and answer folds ride the native bounded-heap operator") {
-    val plan = graft.llm.Similarity.graphBeamSearch(spark, sf001, hops = 1)
+    val plan = graft.index.GraphIndex.graphBeamSearch(spark, sf001, hops = 1)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartialTopK") && plan.contains("FinalTopK"),
       "per-probe beam/answer selection must be the two-phase native top-k")
@@ -217,7 +217,7 @@ class Round17Spec extends SparkSpec {
   test("beamWalk: the per-probe candidate bound is an enforced invariant, not an average") {
     // the 100 TB claim, asserted: visited(probe) ≤ E entries + per hop
     // at most B frontier nodes × the ρ-capped undirected degree (2K).
-    // STRUCTURAL since round 11: beamWalk folds the scored entry visits
+    // STRUCTURAL since round 11: the walk folds the scored entry visits
     // to the top-B hop-1 frontier, so hop 1 obeys the same B·2K bound
     // as every later hop (previously all E entries expanded and the
     // bound held only through incidental candidate overlap — a latent
@@ -228,7 +228,8 @@ class Round17Spec extends SparkSpec {
       .filter("vec_id < 8")
       .selectExpr("vec_id as src", "embedding as ea",
         "aggregate(zip_with(embedding, embedding, (x, y) -> cast(x as double) * cast(y as double)), cast(0 as double), (acc, t) -> acc + t) as sa")
-    val visited = graft.llm.Similarity.beamWalk(spark, sf001, probes, hops)
+    val visited = graft.index.GraphIndex.standingWalk(spark, sf001, probes,
+      graft.index.GraphIndex.standingEntries(spark, sf001, probes), hops).last
     val perProbe = visited.groupBy("src").count().collect()
       .map(_.getLong(1))
     val bound = E + hops * B * cap
@@ -259,9 +260,9 @@ class Round17Spec extends SparkSpec {
   }
 
   test("x122: more rounds can only merge components, never split them") {
-    val c1 = graft.llm.Similarity.graphComponents(spark, sf001, rounds = 1)
+    val c1 = graft.index.GraphIndex.graphComponents(spark, sf001, rounds = 1)
       .collect().length
-    val c8 = graft.llm.Similarity.graphComponents(spark, sf001, rounds = 8)
+    val c8 = graft.index.GraphIndex.graphComponents(spark, sf001, rounds = 8)
       .collect().length
     assert(c8 <= c1, s"component count rose with rounds: $c1 -> $c8")
   }
@@ -284,7 +285,7 @@ class Round17Spec extends SparkSpec {
   }
 
   test("x124: hops never lose found-originals — insertion navigability is monotone") {
-    def found(h: Int): Int = graft.llm.Similarity
+    def found(h: Int): Int = graft.index.GraphIndex
       .graphInsert(spark, sf001, hops = h).collect()
       .count(_.getBoolean(4))
     val f0 = found(0); val f2 = found(2)
@@ -294,7 +295,7 @@ class Round17Spec extends SparkSpec {
   test("x123: in-degree histogram masses match the graph exactly") {
     val rows = SparkEntry.queries("x123_graph_hubness")(spark, sf001).collect()
     val n = spark.read.parquet(s"$sf001/embeddings.parquet").count()
-    val edges = graft.llm.Similarity.nndescentEdges(spark, sf001, iters = 2)
+    val edges = graft.index.GraphIndex.nndescentEdges(spark, sf001, iters = 2)
       .count()
     assert(rows.map(_.getLong(1)).sum == n, "histogram covers every node")
     assert(rows.map(r => r.getLong(0) * r.getLong(1)).sum == edges,

@@ -15,7 +15,7 @@ class Round18Spec extends SparkSpec {
   // ── x127 graph tombstone repair ──
 
   private lazy val edges: Array[(Long, Long, Double)] =
-    graft.llm.Similarity.nndescentEdges(spark, sf001, iters = 2)
+    graft.index.GraphIndex.nndescentEdges(spark, sf001, iters = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
   private def isVictim(id: Long): Boolean = id % 89 == 0
 
@@ -160,18 +160,18 @@ class Round18Spec extends SparkSpec {
     // the hierarchical claim isolated: with ZERO layer-0 hops, the
     // layer-0 candidates are exactly the entry points — coarse-walk
     // guidance must beat x121's hash-random seeds on a clustered corpus
-    val guided = recallOf(graft.llm.Similarity
+    val guided = recallOf(graft.index.GraphIndex
       .hierBeamSearch(spark, sf001, hops1 = 2, hops0 = 0).collect())
-    val random = recallOf(graft.llm.Similarity
+    val random = recallOf(graft.index.GraphIndex
       .graphBeamSearch(spark, sf001, hops = 0).collect())
     assert(guided > random,
       s"coarse guidance must beat random entries: guided $guided vs random $random")
   }
 
   test("x129: layer-0 hops only add visited candidates — recall monotone in hops0") {
-    val r0 = recallOf(graft.llm.Similarity
+    val r0 = recallOf(graft.index.GraphIndex
       .hierBeamSearch(spark, sf001, hops1 = 2, hops0 = 0).collect())
-    val r2 = recallOf(graft.llm.Similarity
+    val r2 = recallOf(graft.index.GraphIndex
       .hierBeamSearch(spark, sf001, hops1 = 2, hops0 = 2).collect())
     assert(r2 >= r0, s"recall fell with layer-0 hops: $r0 -> $r2")
   }
@@ -358,16 +358,39 @@ class Round18Spec extends SparkSpec {
 
   // ── round 13: the K=10 standing-degree decision, evidence-locked ──
 
+  /** The standing-degree study: a fresh 2-round graph at degree `k`,
+    * its 2K-capped adjacency and the depth-2 walk from 8 hash seeds at
+    * beam `b`, graded @GraphK against brute force in the same geometry
+    * — built from the index module's pieces, no shared tier touched. */
+  private def walkRecall(k: Int, b: Int): Double = {
+    import graft.index.GraphIndex._
+    import org.apache.spark.sql.functions._
+    val sq = graft.llm.Similarity.withSq(spark, sf001)
+    val ud = cappedUd(nndescentEdgesOn(sq, iters = 2, k = k).localCheckpoint(),
+      2 * k).localCheckpoint()
+    val probes = sq.filter("vec_id < 8")
+      .selectExpr("vec_id as src", "embedding as ea", "sq as sa")
+    val truth = graft.plans.TopKPerKey.topKDesc(
+        sq.selectExpr("vec_id as dst", "embedding as eb", "sq as sb")
+          .crossJoin(broadcast(probes))
+          .filter(col("dst") =!= col("src"))
+          .selectExpr("src", "dst", s"${graft.llm.Similarity.sCosIn} as cos"),
+        Seq("src"), "cos", Seq("dst"), GraphK)
+      .select(col("src"), col("dst"), lit(true).as("hit0"))
+    val visited = walk(sq, ud, probes, hashEntries(probes, sq, "8", dense = false),
+      hops = 2, b = b).last
+    graft.plans.TopKPerKey.topKDesc(visited, Seq("src"), "cos", Seq("dst"), GraphK)
+      .join(truth, Seq("src", "dst"), "left")
+      .agg((sum(when(col("hit0"), 1L).otherwise(0L)).cast("double") /
+        count(lit(1)).cast("double")).as("r"))
+      .head().getDouble(0)
+  }
+
   test("standing degree K=10 materially outperforms the K=5 predecessor on the identical walk") {
-    // walkRecallExperiment builds a FRESH graph at (k, T) and grades
-    // the standard depth-2 walk @GraphK against the exact tier — the
-    // apples-to-apples comparison behind the round-13 degree bump
+    // a FRESH graph per degree, the standard depth-2 walk graded @GraphK
+    // — the apples-to-apples comparison behind the round-13 degree bump
     // (sf0.1 measured: K=5 13.75%@10 vs K=10 26.25%@10 at B=10).
-    def at(k: Int): Double = {
-      val r = graft.llm.Similarity
-        .walkRecallExperiment(spark, sf001, iters = 2, k = k)
-      r.split("B10 = ").last.toDouble
-    }
+    def at(k: Int): Double = walkRecall(k, b = 10)
     val k5 = at(5); val k10 = at(10)
     assert(k10 > k5,
       s"K=10 standing graph must beat K=5 on the same walk: $k10 vs $k5")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.col
-
 /** Round-14 regressions: the IVF-seeded walk (x136) — the seeding
   * lever the clustered-geometry recall study exposed.
   *
@@ -64,8 +62,8 @@ class Round21Spec extends SparkSpec {
     import graft.llm.Frag._
     val s = spark
     val full = graft.queries.Tables.t(s, sf001, "embeddings")
-    // rebuild the slice exactly as ivfSeededWalk does (clustered
-    // geometry, dense ids, label carried)
+    // rebuild the slice as ivfSeededWalk does (clustered geometry,
+    // dense ids, label carried)
     val clustered = full.selectExpr("vec_id", "label",
       s"""transform(sequence(0, ${Dim - 1}), i -> cast(
          |  (case when ${sH("concat('cent:', cast(label as string), ':', cast(i as string))")} % 2 = 0
@@ -75,14 +73,10 @@ class Round21Spec extends SparkSpec {
          |  as float)) as embedding""".stripMargin)
       .selectExpr("vec_id", "label", "embedding",
         s"aggregate(embedding, cast(0 as double), (acc, x) -> acc + cast(x as double) * cast(x as double)) as sq")
-    val s10 = graft.queries.ExactRank.withGlobalRank(
-        clustered.filter("vec_id % 10 = 0"),
-        Seq(col("vec_id")))
-      .selectExpr("rank - 1 as vec_id", "vec_id as orig_id", "label",
-        "embedding", "sq")
+    val s10 = graft.index.GraphIndex.denseSlice(clustered.filter("vec_id % 10 = 0"))
     val probes = clustered.filter("vec_id < 8")
       .selectExpr("vec_id as src", "embedding as ea", "sq as sa")
-    val ent = graft.llm.Similarity.ivfEntries(spark, s10, probes)
+    val ent = graft.index.GraphIndex.ivfEntries(s10, probes)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(ent.nonEmpty, "ivf entries empty")
     val perProbe = ent.groupBy(_._1).view.mapValues(_.length)
