@@ -35,7 +35,6 @@ object Bench {
     * pass 2 is steady-state, not cache replay. */
   def runAll(spark: SparkSession, sfDir: String,
       queries: Map[String, (SparkSession, String) => DataFrame],
-      isolate: Boolean = true,
       trace: Boolean = false,
       reps: Int = 1,
       onProgress: (Map[String, QueryResult], Map[String, String]) => Unit =
@@ -69,16 +68,15 @@ object Bench {
               System.err.println(s"[bench] FAILED $name: ${failures(name)}")
           } finally sc.clearJobGroup()
           // Drop per-query temporaries between queries AND between
-          // passes (GRAFT_BENCH_ISOLATE=0 keeps everything). Measured
-          // at sf0.1/91 queries: blunt accumulation 48.9s vs isolation
-          // 42.1s — ~50 cached entries make every action pay
+          // passes. Measured at sf0.1/91 queries: blunt accumulation
+          // 48.9s vs isolation 42.1s — ~50 cached entries make every action pay
           // CacheManager plan-canonicalization lookups against deep
           // plans. The Shared.shared tier (shingle sets, embedding
           // norms, landing dedup — ~10 small entries) survives: those
           // are the engine's materialized intermediate tables, the
           // analogue of the warehouse-resident base tables DuckDB
           // amortizes its repeated CTEs against.
-          if (isolate) graft.queries.Shared.dropTransient()
+          graft.queries.Shared.dropTransient()
           // incremental checkpoint of everything measured so far — a
           // mid-pass crash (driver OOM, kill) leaves a valid partial
           // artifact instead of zeroing the run
@@ -182,7 +180,6 @@ object Bench {
       } catch { case _: Throwable => () }
     }
     val (results, failures) = runAll(spark, sfDir, benchQueries,
-      isolate = !sys.env.get("GRAFT_BENCH_ISOLATE").contains("0"),
       trace = trace, reps = reps,
       onProgress = (res, fails) => writeDetail(res, fails))
     val total = ms(if (results.nonEmpty) results.values.map(_.sec).sum else 0.0)

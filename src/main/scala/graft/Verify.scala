@@ -44,7 +44,7 @@ object Verify {
       } catch { case e: Throwable =>
         failed += name
         System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
-      }
+      } finally graft.queries.Shared.dropTransient()
     }
     // every dumped query must be checkable: oracle SQL, or explicitly
     // declared rows-only (the sketch queries whose outputs are

@@ -1,8 +1,9 @@
 package graft.index
 
 import graft.llm.Frag.{sH, sRound6, sSumSq}
-import graft.llm.Similarity.{centroids, exactTopk, ivfTop2, sCosIn, withSq,
-  withSqClustered, QuerySet, TopK}
+import graft.index.VectorIndex.{cellCos, cellOrder, centroids, cvArrays,
+  dimMean, exactTopk, ivfTop2, nearestCell, sCosIn, withSq, withSqClustered,
+  QuerySet, TopK}
 import graft.plans.TopKPerKey.topKDesc
 import graft.queries.{Durable, ExactRank, Shared}
 import graft.queries.Tables.t
@@ -515,9 +516,7 @@ object GraphIndex {
           s"${sH("concat(cell, ':', vec_id)")} as hk"),
         Seq("cell"), "hk", Seq("dst"), 4)
       .select("cell", "dst")
-    val rout = topKDesc(
-        probes.crossJoin(broadcast(cent))
-          .selectExpr("src", "cl", "dot_f32f64(ea, cv) / sqrt(sa * csq) as cosc"),
+    val rout = topKDesc(cellCos(probes, cent, Seq("src"), "cl", "ea", "sa"),
         Seq("src"), "cosc", Seq("cl"), 2)
       .selectExpr("src", "cl as cell")
     rout.join(broadcast(cell4), "cell").select("src", "dst").distinct()
@@ -539,20 +538,9 @@ object GraphIndex {
     * centroids, each slice vector's argmax-cosine cell. No self filter:
     * src is a probe id and dst a dense index. Returns (src, dst). */
   private[graft] def ivfEntries(s10: DataFrame, probes: DataFrame): DataFrame = {
-    val cent = s10.selectExpr("label", "posexplode(embedding) as (dim, v)")
-      .groupBy("label", "dim")
-      .agg((sum(col("v").cast("double").cast(DecimalType(20, 8))).cast("double") /
-        count(lit(1)).cast("double")).as("c"))
-      .groupBy(col("label").as("cl"))
-      .agg(expr("transform(sort_array(collect_list(struct(dim, c))), x -> x.c)").as("cv"))
-      .selectExpr("cl", "cv",
-        "aggregate(cv, cast(0 as double), (acc, x) -> acc + x * x) as csq")
-      .localCheckpoint()
-    val asg = s10.select("vec_id", "embedding", "sq")
-      .crossJoin(broadcast(cent))
-      .selectExpr("vec_id", "cl", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
-      .groupBy("vec_id")
-      .agg(expr("min(struct(-cosc as nc, cl))").as("m"))
+    val cent = cvArrays(dimMean(s10, Seq("label")), "label", "cl").localCheckpoint()
+    val asg = nearestCell(
+        cellCos(s10.select("vec_id", "embedding", "sq"), cent, Seq("vec_id"), "cl"), "cl")
       .selectExpr("vec_id", "m.cl as cell")
     ivfRoutedEntries(cent, asg, probes)
   }
@@ -571,10 +559,9 @@ object GraphIndex {
     * cosines into decimal means. Durable: [[quantizerGauge]] reads it. */
   private[graft] def quantizerMargin(s: SparkSession, dir: String): DataFrame =
     Durable.tier(s, dir, "quantizer_margin", "v1") {
-      withSq(s, dir).crossJoin(broadcast(centroids(s, dir)))
-        .selectExpr("vec_id", "clabel", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
+      cellCos(withSq(s, dir), centroids(s, dir), Seq("vec_id"))
         .groupBy("vec_id")
-        .agg(expr("sort_array(collect_list(struct(-cosc as nc, clabel)))").as("a"))
+        .agg(expr(s"sort_array(collect_list(${cellOrder("clabel")}))").as("a"))
         .selectExpr("element_at(a, 1).clabel as cell",
           sRound6("-element_at(a, 1).nc") + " as m1",
           sRound6("(-element_at(a, 1).nc) - (-element_at(a, 2).nc)") + " as marg")

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.index.GraphIndex
+import graft.index.VectorIndex._
 import graft.queries.{Durable, Shared}
 import graft.queries.Tables.t
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -9,219 +10,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import Frag._
 
-/** [EXT] Similarity search over the `embeddings` table (64-dim float
-  * vectors): brute-force cosine top-k (the exactness baseline),
-  * sign-LSH (random-hyperplane) bucketed ANN (the scale path), LSH
-  * near-duplicate pair mining, and per-label centroid aggregation.
-  *
-  * Scale design:
-  *  - dot products / norms are per-row sequential folds over the 64
-  *    slots (codegen'd HOFs, no UDF, no shuffle);
-  *  - brute-force top-k broadcasts the tiny query set (broadcast
-  *    nested-loop join — each executor streams its share of the
-  *    corpus once); at 100 TB this is the pattern for "score corpus
-  *    against k probes";
-  *  - the ANN path buckets on 4 × 4-bit hyperplane-sign bands
-  *    (OR-amplified LSH): candidate generation is an equi-join on
-  *    (band_idx, band_value) — shuffle keyed on uniformly-distributed
-  *    buckets, never O(n²);
-  *  - hyperplanes are deterministic md5-derived ±1 literals (Frag
-  *    .planes) embedded in both the Spark plan and the DuckDB oracle;
-  *  - centroids: posexplode + (label, dim) groupBy with exact decimal
-  *    partial aggregation — the distributed vector-mean pattern.
-  *
-  * The sign-LSH scheme is random-hyperplane hashing (Charikar, STOC
-  * 2002) with OR-amplification across bands (Mining of Massive
-  * Datasets ch.3); the bucketed-ANN shape mirrors IVF-style inverted
-  * lists (Jégou et al., PAMI 2011) with LSH buckets as the coarse
-  * quantizer.
+/** [EXT] Similarity-search queries over the `embeddings` table (64-dim
+  * float vectors). Each entry composes the indexes of `graft.index`:
+  * [[VectorIndex]] (exact, IVF, PQ, sign-LSH, k-means — x11–x116) and
+  * [[GraphIndex]] (x120–x138). `oracleSql` holds each query's DuckDB
+  * replay; the sign-LSH planes, exact-decimal means and dim-order folds
+  * are the same literals and orders on both sides.
   */
 object Similarity {
-
-  private[graft] val QuerySet = "vec_id < 8"
-  private[graft] val TopK = 10
 
   /** x116 per-cluster sample budget — fixed at any corpus size (the
     * balanced-sampling contract: the epoch mix, not the corpus, sets
     * the budget). */
   private val SampleCap = 25
-
-  /** embeddings + per-row sum-of-squares (norm² — computed once).
-    * repartition: the test corpus is one parquet file = one input
-    * split; shared: every similarity query starts from this frame. */
-  private[graft] def withSq(s: SparkSession, dir: String): DataFrame =
-    Shared.shared(s, dir, "withSq") {
-      t(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .selectExpr("vec_id", "embedding", s"${sSumSq("embedding")} as sq")
-    }
-
-  /** CLUSTERED synthetic geometry — the second evaluation fixture for
-    * the ANN operating-point decisions. The corpus's `embedding`
-    * column is hash-derived and therefore ~isotropic: the regime where
-    * graph/IVF recall is inherently poor and every tuning curve
-    * (x106/x126/x132/x134) is measured at its hardest. Real embedding
-    * corpora are CLUSTERED, so the knobs frozen on hash vectors need a
-    * second reading on clustered geometry before anyone trusts them at
-    * 100 TB. This derives one deterministically from the same table:
-    * center_l = a random ±1 hypercube vertex per label (md5 sign of
-    * ('cent:', label, dim) — 8 mutually near-orthogonal centers), plus
-    * uniform per-(vec, dim) hash-noise scaled by 0.6. Within-label
-    * cosine ≈ 0.8, cross-label ≈ 0 — a realistic mixture. Every term
-    * is the shared md5 primitive + IEEE double ops in one fixed
-    * expression tree, so the DuckDB twin ([[dSqC]]) reproduces the
-    * vectors bit-for-bit (float32 final cast on both sides). */
-  private def sClusteredEmb: String =
-    s"""transform(sequence(0, ${Frag.Dim - 1}), i -> cast(
-       |  (case when ${sH("concat('cent:', cast(label as string), ':', cast(i as string))")} % 2 = 0
-       |     then cast(-1 as double) else cast(1 as double) end)
-       |  + cast(0.6 as double) * ((cast(${sH("concat('cn:', cast(vec_id as string), ':', cast(i as string))")} as double)
-       |      / cast(1152921504606846976 as double)) * cast(2 as double) - cast(1 as double))
-       |  as float))""".stripMargin
-
-  /** The clustered twin of [[withSq]] (vec_id, embedding, sq). */
-  private[graft] def withSqClustered(s: SparkSession, dir: String): DataFrame =
-    Shared.shared(s, dir, "withSqC") {
-      t(s, dir, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
-        .selectExpr("vec_id", s"$sClusteredEmb as embedding")
-        .selectExpr("vec_id", "embedding", s"${sSumSq("embedding")} as sq")
-    }
-
-  /** Exact cosine between two (embedding, sq) sides, 6-dp bit-exact,
-    * through the codegen'd CosineF32 (the IEEE fold order of the
-    * DuckDB chain; CosineF32Spec pins it to the HOF fold). */
-  private[graft] def sCosIn: String = sRound6("cosine_f32(ea, eb)")
-
-  /** Per-label centroid vectors (clabel, cv: array<double>, csq): exact
-    * decimal means per dim, assembled in dim order — identical values
-    * in Spark and DuckDB, so centroid-based plans stay oracle-exact. */
-  private[graft] def centroids(s: SparkSession, dir: String): DataFrame =
-    Durable.tier(s, dir, "centroids", "v1") {
-      t(s, dir, "embeddings")
-        .selectExpr("label", "posexplode(embedding) as (dim, v)")
-        .groupBy("label", "dim")
-        .agg((sum(col("v").cast("double").cast(DecimalType(20, 8))).cast("double") /
-          count(lit(1)).cast("double")).as("c"))
-        .groupBy(col("label").as("clabel"))
-        .agg(expr("transform(sort_array(collect_list(struct(dim, c))), x -> x.c)").as("cv"))
-        .selectExpr("clabel", "cv",
-          "aggregate(cv, cast(0 as double), (acc, x) -> acc + x * x) as csq")
-    }
-
-  /** PQ codebook: 8 subspaces × one 8-dim mean codeword per label (the
-    * label partition stands in for a per-subspace k-means, exactly as
-    * the label centroids stand in for the IVF coarse quantizer in x17).
-    * Means are exact decimals ⇒ identical across engines. */
-  private[graft] def pqCodebook(s: SparkSession, dir: String): DataFrame =
-    Durable.tier(s, dir, "pqCodebook", "v1-ss8") {
-      t(s, dir, "embeddings")
-        .selectExpr("label", "posexplode(embedding) as (dim, v)")
-        .groupBy(col("label"), col("dim"))
-        .agg((sum(col("v").cast("double").cast(DecimalType(20, 8))).cast("double") /
-          count(lit(1)).cast("double")).as("c"))
-        .selectExpr("label as clabel", "dim div 8 as ss", "dim % 8 as j", "c")
-        .groupBy("clabel", "ss")
-        .agg(expr("transform(sort_array(collect_list(struct(j, c))), x -> x.c)").as("cw"))
-    }
-
-  /** IVF coarse routing table: per vector, its top-4 centroid cells by
-    * cosine, exposed as `cl4` (full routing depth, for the x106 nprobe
-    * sweep) and `cl2` (its 2-prefix — the assignment AND the default
-    * probe routing). Shared tier: x17, x62 (through x17's pipeline),
-    * the x101 composite and x106 all read it, one cached copy; the
-    * extra two slots cost nothing (the 16 cells are already collected
-    * and sorted per vector). Sort key struct(-cosc, clabel) replays the
-    * oracle's ORDER BY cosc DESC, clabel tie-break (double negation is
-    * an exact sign flip). */
-  private[graft] def ivfTop2(s: SparkSession, dir: String): DataFrame =
-    Durable.tier(s, dir, "ivf_top2", "v1-r4") {
-      val cent = centroids(s, dir)
-      withSq(s, dir).crossJoin(broadcast(cent))
-        .selectExpr("vec_id", "clabel", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
-        .groupBy("vec_id")
-        .agg(expr("slice(transform(sort_array(collect_list(struct(-cosc as nc, clabel))), x -> x.clabel), 1, 4)").as("cl4"))
-        .selectExpr("vec_id", "cl4", "slice(cl4, 1, 2) as cl2")
-    }
-
-  /** PQ code table (vec_id, ss, code) — the corpus encoded
-    * subspace-by-subspace to its nearest codeword. Shared tier: x49's
-    * ADC scan and the x101 composite read the same codes. Built by one
-    * broadcast cross-join with the 80-row codebook, collapsed
-    * immediately by a map-side min-struct aggregation. */
-  private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame =
-    Durable.tier(s, dir, "pq_codes", "v1-ss8") {
-      t(s, dir, "embeddings")
-        .crossJoin(broadcast(pqCodebook(s, dir)))
-        .selectExpr("vec_id", "ss", "clabel", s"$sSubDist as d2")
-        .groupBy("vec_id", "ss")
-        .agg(expr("min(struct(d2, clabel))").as("m"))
-        .selectExpr("vec_id", "ss", "m.clabel as code", "m.d2 as d2")
-    }
-
-  /** Squared L2 between the `ss`-th 8-dim slice of a float vector and a
-    * double codeword array, by the fused L2F32F64 (the oracle's 8-term
-    * chain). */
-  private def sSubDist: String = "l2_f32f64(slice(embedding, ss * 8 + 1, 8), cw)"
-
-  /** Converged (2-iteration) Lloyd centroids from the deterministic
-    * 8-seed init — shared tier: x51's inertia report and x111's
-    * silhouette gauge both read the SAME 8-row centroid frame, so the
-    * two Lloyd iterations (the expensive part: two corpus passes each)
-    * run once per corpus, not once per query. */
-  private def km2Cent(s: SparkSession, dir: String): DataFrame =
-    Shared.shared(s, dir, "km2_cent") {
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val init = emb.filter(QuerySet)
-        .selectExpr("vec_id as cl",
-          "transform(embedding, x -> cast(x as double)) as cv")
-      var cent = init
-      for (_ <- 1 to 2)
-        cent = kmUpdate(emb, kmAssign(emb, cent))
-      cent
-    }
-
-  /** The converged assignment (vec_id, cl, d2) over [[km2Cent]] —
-    * shared tier: x51's inertia and x112's purity/NMI audit read the
-    * same frame, so the final assignment pass also runs once. */
-  private def km2Asg(s: SparkSession, dir: String): DataFrame =
-    Shared.shared(s, dir, "km2_asg") {
-      kmAssign(t(s, dir, "embeddings").select("vec_id", "embedding"),
-        km2Cent(s, dir))
-    }
-
-  /** One Lloyd assignment: nearest centroid by squared L2 (ties to the
-    * smaller cluster id). Broadcast centroids; the cross product is
-    * collapsed immediately by a map-side min-struct aggregation. */
-  private def kmAssign(emb: DataFrame, cent: DataFrame): DataFrame =
-    emb.crossJoin(broadcast(cent))
-      .selectExpr("vec_id", "cl",
-        "l2_f32f64(embedding, cv) as d2")
-      .groupBy("vec_id")
-      .agg(expr("min(struct(d2, cl))").as("m"))
-      .selectExpr("vec_id", "m.cl as cl", "m.d2 as d2")
-
-  /** One Lloyd update: exact decimal mean per (cluster, dim), assembled
-    * back into centroid arrays (empty clusters simply drop out). */
-  private def kmUpdate(emb: DataFrame, asg: DataFrame): DataFrame =
-    emb.join(asg.select("vec_id", "cl"), "vec_id")
-      .selectExpr("cl", "posexplode(embedding) as (dim, v)")
-      .groupBy("cl", "dim")
-      .agg((sum(col("v").cast("double").cast(DecimalType(20, 8))).cast("double") /
-        count(lit(1)).cast("double")).as("c"))
-      .groupBy("cl")
-      .agg(expr("transform(sort_array(collect_list(struct(dim, c))), x -> x.c)").as("cv"))
-
-  /** Spark frame: vec_id, embedding, sq, bi, bv (4 rows per vector).
-    * The band values come from the fused SignBandsF32 (one vector pass
-    * for all 16 planes). Persisted: the 16 projection folds are worth
-    * computing once, and both sides of the candidate self-join read
-    * this frame. */
-  private def withBands(s: SparkSession, dir: String): DataFrame =
-    Shared.shared(s, dir, "withBands") {
-      withSq(s, dir)
-        .selectExpr("vec_id", "embedding", "sq", "posexplode(sign_bands_f32(embedding)) as (bi, bv)")
-    }
 
   /** DuckDB CTEs: sq per vec + 4-band signature rows. */
   private val dSq =
@@ -233,201 +34,6 @@ object Similarity {
            .mkString("\n  UNION ALL\n")})""".stripMargin
   private val dCos: String =
     dRound6(s"(${dDot("a.embedding", "b.embedding")}) / sqrt(a.sq * b.sq)")
-
-  /** Per-label centroid ARRAYS (label cl, 64-slot double cv) — x14's
-    * exact-decimal means assembled in dim order. Shared tier: ≤ |labels|
-    * rows, the broadcast side of every assignment-shaped pass (x82
-    * margins, x87 affinity). */
-  private def labelCentroidArrays(s: SparkSession, dir: String): DataFrame =
-    Shared.shared(s, dir, "label_centroids") {
-      t(s, dir, "embeddings")
-        .selectExpr("label", "posexplode(embedding) as (dim, v)")
-        .groupBy("label", "dim")
-        .agg((sum(col("v").cast("double").cast(DecimalType(20, 8))).cast("double") /
-          count(lit(1)).cast("double")).as("c"))
-        .groupBy(col("label").as("cl"))
-        .agg(expr("transform(sort_array(collect_list(struct(dim, c))), x -> x.c)").as("cv"))
-    }
-
-  /** Exact brute-force top-k ground truth (query_id, neighbor_id,
-    * cos_sim, rk) — broadcast the probe set, stream the corpus, native
-    * two-phase top-k (per-partition bounded heaps: the exchange carries
-    * ≤ k rows per probe per partition, not every scored corpus row).
-    * Shared tier: x11 IS this frame, and x62's recall harness and
-    * x102's truncation eval both grade against it — one cached copy
-    * instead of three brute-force corpus scans. */
-  private[graft] def exactTopk(s: SparkSession, dir: String): DataFrame =
-    Durable.tier(s, dir, "exact_topk", s"v1-k$TopK") {
-      val corpus = withSq(s, dir)
-      val probes = corpus.filter(QuerySet)
-        .select(col("vec_id").as("query_id"), col("embedding").as("ea"),
-          col("sq").as("sa"))
-      val cands = corpus
-        .select(col("vec_id").as("neighbor_id"), col("embedding").as("eb"),
-          col("sq").as("sb"))
-      val scored = cands.crossJoin(broadcast(probes))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
-      graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"), "cos_sim",
-        Seq("neighbor_id"), TopK)
-    }
-
-  /** IVF 2-probe top-k core (unordered): coarse routing from the
-    * shared ivf_top2 frame — top-2 of 16 centroids per vector collapses
-    * into ONE codegen'd aggregation (collect 16 structs, sort
-    * in-register, slice), no ranking exchange — then exact cosine +
-    * native top-k within the probe's 2 inverted lists. */
-  private def ivfTopkCore(s: SparkSession, dir: String): DataFrame = {
-    val sq = withSq(s, dir)
-    val top2 = ivfTop2(s, dir)
-    val assign = top2
-      .selectExpr("vec_id as neighbor_id", "cl2[0] as clabel")
-    val probes = top2.filter(col("vec_id") < 8)
-      .selectExpr("vec_id as query_id", "explode(cl2) as clabel")
-    // broadcast the tiny probe routing into the assignment stream (the
-    // inverted lists never shuffle to meet the probes)
-    val cand = broadcast(probes).join(assign, "clabel")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val scored2 = cand
-      .join(broadcast(sq.select(col("vec_id").as("query_id"),
-        col("embedding").as("ea"), col("sq").as("sa"))), "query_id")
-      .join(sq.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("eb"), col("sq").as("sb")), "neighbor_id")
-      .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
-    graft.plans.TopKPerKey.topKDesc(scored2, Seq("query_id"), "cos_sim",
-      Seq("neighbor_id"), TopK)
-  }
-
-  /** Sign-LSH top-k core (unordered): candidates share any 4-bit band,
-    * candidate IDs deduped BEFORE the vectors join back (the shuffle
-    * moves id pairs, not embedding arrays), exact cosine + top-k. */
-  private def lshTopkCore(s: SparkSession, dir: String): DataFrame = {
-    val all = withBands(s, dir)
-    val sq = withSq(s, dir)
-    val cand = all.filter(QuerySet)
-      .select(col("vec_id").as("query_id"), col("bi"), col("bv"))
-      .join(all.select(col("vec_id").as("neighbor_id"), col("bi"), col("bv")),
-        Seq("bi", "bv"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val scored = cand
-      .join(broadcast(sq.select(col("vec_id").as("query_id"),
-        col("embedding").as("ea"), col("sq").as("sa"))), "query_id")
-      .join(sq.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("eb"), col("sq").as("sb")), "neighbor_id")
-      .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
-    graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"), "cos_sim",
-      Seq("neighbor_id"), TopK)
-  }
-
-  /** PQ-ADC top-k core (unordered): per-probe 8×10 distance table
-    * broadcast into the codes-only corpus scan (the embedding payload
-    * never moves), decimal-summed ADC, ranked ascending by distance
-    * (negated for the descending native top-k). */
-  private def pqTopkCore(s: SparkSession, dir: String): DataFrame = {
-    val cb = pqCodebook(s, dir)
-    val codes = pqCodes(s, dir)
-    // columns renamed up front — both sides descend from the same
-    // shared codebook plan, so unrenamed ss/clabel would be ambiguous
-    val pdist = t(s, dir, "embeddings").filter(QuerySet)
-      .crossJoin(broadcast(cb))
-      .selectExpr("vec_id as query_id", "ss as pss", "clabel as pcl",
-        s"$sSubDist as pd2")
-    val adc = codes
-      .join(broadcast(pdist), col("ss") === col("pss") &&
-        col("code") === col("pcl") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("pd2"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(expr("cast(pd2 as decimal(24,12))")).cast("double").as("adc"))
-    graft.plans.TopKPerKey.topKDesc(
-        adc.withColumn("nadc", -col("adc")),
-        Seq("query_id"), "nadc", Seq("neighbor_id"), TopK)
-      .selectExpr("query_id", "neighbor_id",
-        sRound6("adc") + " as adc_dist", "rk")
-  }
-
-  /** IVFADC distance frame (query_id, neighbor_id, adc): IVF routing
-    * bounds WHICH vectors are scored (the probe's 2 cells), PQ codes
-    * bound WHAT is read per scored vector (8 B). The candidate list is
-    * probe-bounded, so it BROADCASTS into the streaming code scan —
-    * the corpus-sized codes frame never shuffles on the join key.
-    * Shared tier: x101's ranking and x103's re-ranking both read it —
-    * one ADC scan serves both. */
-  private def ivfpqAdc(s: SparkSession, dir: String): DataFrame =
-    Shared.shared(s, dir, "ivfpq_adc") {
-      val top2 = ivfTop2(s, dir)
-      val assign = top2.selectExpr("vec_id as neighbor_id", "cl2[0] as cell")
-      val probes = top2.filter(QuerySet)
-        .selectExpr("vec_id as query_id", "explode(cl2) as cell")
-      // probe routing is probes×nprobe rows — broadcast it into the
-      // corpus-sized assignment stream (explicit: the hint also keeps
-      // the cached frame's stored plan deterministic pre-AQE)
-      val cand = broadcast(probes).join(assign, "cell")
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select("query_id", "neighbor_id").distinct()
-      val pdist = t(s, dir, "embeddings").filter(QuerySet)
-        .crossJoin(broadcast(pqCodebook(s, dir)))
-        .selectExpr("vec_id as pqid", "ss as pss", "clabel as pcl",
-          s"$sSubDist as pd2")
-      pqCodes(s, dir).withColumnRenamed("vec_id", "neighbor_id")
-        .join(broadcast(cand), Seq("neighbor_id"))
-        .join(broadcast(pdist), col("query_id") === col("pqid") &&
-          col("ss") === col("pss") && col("code") === col("pcl"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(sum(expr("cast(pd2 as decimal(24,12))")).cast("double").as("adc"))
-    }
-
-  /** IVF+PQ composite top-k core (unordered): the shared ADC frame
-    * ranked by the native bounded-heap top-k. */
-  private def ivfpqTopkCore(s: SparkSession, dir: String): DataFrame =
-    graft.plans.TopKPerKey.topKDesc(
-        ivfpqAdc(s, dir).withColumn("nadc", -col("adc")),
-        Seq("query_id"), "nadc", Seq("neighbor_id"), TopK)
-      .selectExpr("query_id", "neighbor_id",
-        sRound6("adc") + " as adc_dist", "rk")
-
-  /** The five ANN methods' ordered top-k lists as one frame (method,
-    * query_id, neighbor_id, rk) — shared tier: x62 (set-level recall)
-    * and x110 (rank-level MRR/NDCG) grade the SAME retrievals, so the
-    * five method cores run once per corpus, not once per harness. */
-  private def annMethodTopk(s: SparkSession, dir: String): DataFrame =
-    Shared.shared(s, dir, "ann_method_topk") {
-      Seq("ivf" -> ivfTopkCore _, "ivfadcr" -> ivfadcrTopkCore _,
-          "ivfpq" -> ivfpqTopkCore _, "lsh" -> lshTopkCore _,
-          "pq" -> pqTopkCore _)
-        .map { case (m, core) => core(s, dir)
-          .select(lit(m).as("method"), col("query_id"), col("neighbor_id"),
-            col("rk")) }
-        .reduce(_ union _)
-    }
-
-  /** Candidates re-ranked per probe before the final cut (x103). */
-  private val RerankK = 30
-
-  /** IVFADC+R top-k core (unordered): the top-RerankK ADC candidates
-    * per probe are re-ranked by EXACT cosine over their full vectors.
-    * The candidate list (probes × k′ ids joined with the broadcast
-    * probe vectors) broadcasts into one corpus stream, so the full-
-    * vector fetch reads k′ payloads per probe without a shuffle. */
-  private def ivfadcrTopkCore(s: SparkSession, dir: String): DataFrame = {
-    val cand = graft.plans.TopKPerKey.topKDesc(
-        ivfpqAdc(s, dir).withColumn("nadc", -col("adc")),
-        Seq("query_id"), "nadc", Seq("neighbor_id"), RerankK)
-      .select("query_id", "neighbor_id")
-    val sq = withSq(s, dir)
-    val probes = sq.filter(QuerySet)
-      .select(col("vec_id").as("query_id"), col("embedding").as("ea"),
-        col("sq").as("sa"))
-    val candP = cand.join(broadcast(probes), "query_id")
-    val rr = sq
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("eb"),
-        col("sq").as("sb"))
-      .join(broadcast(candP), Seq("neighbor_id"))
-      .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
-    graft.plans.TopKPerKey.topKDesc(rr, Seq("query_id"), "cos_sim",
-      Seq("neighbor_id"), TopK)
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -451,16 +57,8 @@ object Similarity {
       val corpus = t(s, dir, "embeddings")
         .selectExpr("vec_id", "label", "embedding",
           s"${sSumSq("embedding")} as sq")
-      val anchors = corpus.filter(QuerySet)
-        .select(col("vec_id").as("query_id"), col("label").as("q_label"),
-          col("embedding").as("ea"), col("sq").as("sa"))
-      val cands = corpus
-        .select(col("vec_id").as("neighbor_id"), col("label").as("n_label"),
-          col("embedding").as("eb"), col("sq").as("sb"))
-      val scored = cands.crossJoin(broadcast(anchors))
-        .filter(col("n_label") =!= col("q_label"))
-        .selectExpr("query_id", "q_label", "neighbor_id", "n_label",
-          s"$sCosIn as cos_sim")
+      val scored = bruteForce(corpus, corpus,
+        Some(col("n_label") =!= col("q_label")), Seq("label"))
       graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"), "cos_sim",
           Seq("neighbor_id"), 5)
         .selectExpr("query_id", "q_label", "rk", "neighbor_id", "n_label",
@@ -494,18 +92,13 @@ object Similarity {
         .select("vec_id")
       val reps = Shared.temp(withBands(s, dir)
         .join(broadcast(repIds), "vec_id"))
-      val cand = reps.select(col("vec_id").as("vec_a"), col("bi"), col("bv"))
-        .join(reps.select(col("vec_id").as("vec_b"), col("bi"), col("bv")),
-          Seq("bi", "bv"))
-        .filter(col("vec_a") < col("vec_b"))
-        .select("vec_a", "vec_b").distinct()
+      val cand = bandCandidates(
+        reps.select(col("vec_id").as("vec_a"), col("bi"), col("bv")),
+        reps.select(col("vec_id").as("vec_b"), col("bi"), col("bv")),
+        Some(col("vec_a") < col("vec_b")), Seq("vec_a", "vec_b"))
       val side = reps.select("vec_id", "embedding", "sq").dropDuplicates("vec_id")
-      cand
-        .join(side.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-          col("sq").as("sa")), "vec_a")
-        .join(side.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-          col("sq").as("sb")), "vec_b")
-        .selectExpr("vec_a", "vec_b", s"$sCosIn as cos_sim")
+      scorePairs(cand, "vec_a" -> side, "vec_b" -> side, bcastA = false,
+          Seq("vec_a", "vec_b"))
         .filter("cos_sim >= 0.4")
         .orderBy("vec_a", "vec_b")
     },
@@ -596,18 +189,12 @@ object Similarity {
     // (k-means k) far exceeds partitions, so the cluster-keyed shuffle
     // balances; with only 10 label-clusters here AQE absorbs the skew.
     "x36_semantic_dedup" -> { (s, dir) =>
-      val cent = centroids(s, dir)
-      val sq = withSq(s, dir)
-      val scoredAll = sq.crossJoin(broadcast(cent))
-        .selectExpr("vec_id", "embedding", "sq", "clabel",
-          "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
-      // nearest-of-16-centroids assignment as ONE aggregation (min over
-      // (-cosc, clabel) structs replays ORDER BY cosc DESC, clabel) —
-      // no ranking exchange; embedding/sq are functionally dependent on
+      val scoredAll = cellCos(withSq(s, dir), centroids(s, dir),
+        Seq("vec_id", "embedding", "sq"))
+      // nearest-of-16-centroids assignment as ONE aggregation — no
+      // ranking exchange; embedding/sq are functionally dependent on
       // vec_id, so first() is deterministic here.
-      val members = Shared.temp(scoredAll
-        .groupBy("vec_id")
-        .agg(expr("min(struct(-cosc as nc, clabel))").as("m"),
+      val members = Shared.temp(nearestCell(scoredAll, "clabel",
           first(col("embedding")).as("embedding"), first(col("sq")).as("sq"))
         .selectExpr("vec_id", "m.clabel as clabel", "embedding", "sq"))
       val pairs = members.select(col("vec_id").as("va"), col("clabel"),
@@ -635,14 +222,7 @@ object Similarity {
     "x42_knn_classify" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
       val corpus = withSq(s, dir)
-      val probes = corpus.filter(QuerySet)
-        .select(col("vec_id").as("query_id"), col("embedding").as("ea"),
-          col("sq").as("sa"))
-      val cands = corpus.filter(s"not ($QuerySet)")
-        .select(col("vec_id").as("neighbor_id"), col("embedding").as("eb"),
-          col("sq").as("sb"))
-      val scored = cands.crossJoin(broadcast(probes))
-        .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
+      val scored = bruteForce(corpus, corpus.filter(s"not ($QuerySet)"), None)
       val nn = graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"),
         "cos_sim", Seq("neighbor_id"), TopK)
       val votes = nn
@@ -780,8 +360,7 @@ object Similarity {
     // its neighbor (merge candidate); s → 1 is well-separated.
     "x111_kmeans_silhouette" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val two = emb.crossJoin(broadcast(km2Cent(s, dir)))
-        .selectExpr("vec_id", "cl", "l2_f32f64(embedding, cv) as d2")
+      val two = kmDist(emb, km2Cent(s, dir))
         .groupBy("vec_id")
         .agg(expr("slice(sort_array(collect_list(struct(d2, cl))), 1, 2)")
           .as("t2"))
@@ -910,13 +489,10 @@ object Similarity {
       val standing = ivfTop2(s, dir)
         .selectExpr("cl2[0] as cell").groupBy("cell")
         .agg(count(lit(1)).as("n_standing"))
-      val cent = centroids(s, dir)
-      val asg = withSq(s, dir).filter("vec_id % 97 = 0")
+      val batch = withSq(s, dir).filter("vec_id % 97 = 0")
         .selectExpr("vec_id + 1000000000 as vec_id", "embedding", "sq")
-        .crossJoin(broadcast(cent))
-        .selectExpr("vec_id", "clabel", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
-        .groupBy("vec_id")
-        .agg(expr("min(struct(-cosc as nc, clabel))").as("m"))
+      val asg = nearestCell(cellCos(batch, centroids(s, dir), Seq("vec_id")),
+          "clabel")
         .selectExpr("vec_id", "m.clabel as cell")
       standing
         .join(asg.groupBy("cell").agg(count(lit(1)).as("n_new0")),
@@ -952,19 +528,14 @@ object Similarity {
       // the probe quadratic at the 100× decade (2.5 s → 249 s, caught
       // and fixed by measurement — see SCALE.md)
       val evalPred = "vec_id % 50 = 0 and vec_id < 4000"
-      val cand = broadcast(all.filter(evalPred)
-          .select(col("vec_id").as("eval_id"), col("bi"), col("bv")))
-        .join(all.filter(s"not ($evalPred)")
+      val cand = bandCandidates(
+        broadcast(all.filter(evalPred)
+          .select(col("vec_id").as("eval_id"), col("bi"), col("bv"))),
+        all.filter(s"not ($evalPred)")
           .select(col("vec_id").as("train_id"), col("bi"), col("bv")),
-          Seq("bi", "bv"))
-        .select("train_id", "eval_id").distinct()
-      cand
-        .join(broadcast(sq.filter(evalPred)
-          .select(col("vec_id").as("eval_id"), col("embedding").as("ea"),
-            col("sq").as("sa"))), "eval_id")
-        .join(sq.select(col("vec_id").as("train_id"),
-          col("embedding").as("eb"), col("sq").as("sb")), "train_id")
-        .selectExpr("train_id", "eval_id", s"$sCosIn as cos_sim")
+        None, Seq("train_id", "eval_id"))
+      scorePairs(cand, "eval_id" -> sq.filter(evalPred), "train_id" -> sq,
+          bcastA = true, Seq("train_id", "eval_id"))
         .filter("cos_sim >= 0.4")
         .groupBy("train_id")
         .agg(count(lit(1)).as("n_eval_near"),
@@ -1065,18 +636,11 @@ object Similarity {
     // the assignment stream — the inverted lists never shuffle.
     "x106_nprobe_curve" -> { (s, dir) =>
       val top4 = ivfTop2(s, dir)
-      val assign = top4.selectExpr("vec_id as neighbor_id", "cl4[0] as cell")
       val exact = exactTopk(s, dir).select("query_id", "neighbor_id")
       val nEx = exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
       val nTot = t(s, dir, "embeddings").agg(count(lit(1)).as("n_corpus"))
       val perNp = Seq(1, 2, 4).map { np =>
-        val probes = top4.filter(QuerySet)
-          .selectExpr("vec_id as query_id",
-            s"explode(slice(cl4, 1, $np)) as cell")
-        val cand = broadcast(probes).join(assign, "cell")
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select("query_id", "neighbor_id").distinct()
-        cand
+        ivfCandidates(top4, "cl4", Some(np), "cell")
           .join(exact.withColumn("hit", lit(1)),
             Seq("query_id", "neighbor_id"), "left")
           .groupBy("query_id")
@@ -1124,14 +688,8 @@ object Similarity {
     // per-label centroids: distributed vector mean via posexplode +
     // exact decimal partial aggregation on (label, dim)
     "x14_label_centroids" -> { (s, dir) =>
-      t(s, dir, "embeddings")
-        .selectExpr("label", "posexplode(embedding) as (dim, v)")
-        .groupBy(col("label"), col("dim"))
-        .agg(
-          (sum(col("v").cast("double").cast(DecimalType(20, 8))).cast("double") /
-            count(lit(1)).cast("double")).as("centroid"),
-          count(lit(1)).as("n"))
-        .selectExpr("label", "cast(dim as bigint) as dim", "centroid", "n")
+      dimMean(t(s, dir, "embeddings"), Seq("label"), count(lit(1)).as("n"))
+        .selectExpr("label", "cast(dim as bigint) as dim", "c as centroid", "n")
         .orderBy("label", "dim")
     },
 
@@ -1153,11 +711,7 @@ object Similarity {
         .selectExpr("vec_id",
           "case when rank <= n_total div 2 then 0 else 1 end as h")
       val withH = emb.join(ranked, "vec_id")
-      val cents = withH
-        .selectExpr("label", "h", "posexplode(embedding) as (dim, v)")
-        .groupBy("label", "h", "dim")
-        .agg((sum(col("v").cast("double").cast(DecimalType(20, 8))).cast("double") /
-          count(lit(1)).cast("double")).as("c"))
+      val cents = dimMean(withH, Seq("label", "h"))
       val delta = cents.filter(col("h") === 0)
         .select(col("label"), col("dim"), col("c").as("c0"))
         .join(cents.filter(col("h") === 1)
@@ -1191,13 +745,13 @@ object Similarity {
     // codegen. Ties break to the smaller label on both engines.
     "x82_centroid_margin" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      emb.crossJoin(broadcast(labelCentroidArrays(s, dir)))
-        .selectExpr("vec_id", "label", "cl",
+      emb.crossJoin(broadcast(centroids(s, dir)))
+        .selectExpr("vec_id", "label", "clabel",
           "l2_f32f64(embedding, cv) as d2")
         .groupBy("vec_id", "label")
-        .agg(max(expr("case when cl = label then d2 end")).as("down"),
-          expr("min(case when cl <> label then struct(d2, cl) end)").as("m"))
-        .selectExpr("vec_id", "label", "m.cl as nearest_other",
+        .agg(max(expr("case when clabel = label then d2 end")).as("down"),
+          expr("min(case when clabel <> label then struct(d2, clabel) end)").as("m"))
+        .selectExpr("vec_id", "label", "m.clabel as nearest_other",
           sRound6("down") + " as d_own2",
           sRound6("m.d2") + " as d_other2",
           sRound6("m.d2 - down") + " as margin",
@@ -1236,15 +790,15 @@ object Similarity {
     // a pair with high centroid cosine / small centroid L2 is where
     // mislabels concentrate and where a classifier needs margin): for
     // every unordered label pair, the cosine and L2 between their
-    // centroids. The corpus is reduced ONCE by the shared x14
-    // aggregation; this query itself joins |labels|² rows — constant
+    // centroids. The corpus is reduced ONCE by the shared `centroids`
+    // tier; this query itself joins |labels|² rows — constant
     // work at any corpus width. Folds run left-to-right in dim order
     // on both engines (the dDot discipline), so cosine and distance
     // see identical bits before the one rounding.
     "x87_label_affinity" -> { (s, dir) =>
-      val cents = labelCentroidArrays(s, dir)
-      val a = cents.select(col("cl").as("label_a"), col("cv").as("va"))
-      val b = cents.select(col("cl").as("label_b"), col("cv").as("vb"))
+      val cents = centroids(s, dir)
+      val a = cents.select(col("clabel").as("label_a"), col("cv").as("va"))
+      val b = cents.select(col("clabel").as("label_b"), col("cv").as("vb"))
       a.crossJoin(broadcast(b))
         .filter(col("label_a") < col("label_b"))
         .selectExpr("label_a", "label_b",
@@ -1434,15 +988,10 @@ object Similarity {
         .join(lab.filter("label % 2 = 1").select("vec_id"),
           Seq("vec_id"), "left_semi")
         .select(col("vec_id").as("vec_b"), col("bi"), col("bv"))
-      val cand = ba.join(bb, Seq("bi", "bv"))
-        .select("vec_a", "vec_b").distinct()
+      val cand = bandCandidates(ba, bb, None, Seq("vec_a", "vec_b"))
       val sq = withSq(s, dir)
-      val scored = cand
-        .join(sq.selectExpr("vec_id as vec_a", "embedding as ea", "sq as sa"),
-          "vec_a")
-        .join(sq.selectExpr("vec_id as vec_b", "embedding as eb", "sq as sb"),
-          "vec_b")
-        .selectExpr("vec_a", "vec_b", s"$sCosIn as cos_sim")
+      val scored = scorePairs(cand, "vec_a" -> sq, "vec_b" -> sq,
+        bcastA = false, Seq("vec_a", "vec_b"))
       // each side's usual neighborhood: exact-decimal mean of its K
       // standing out-edge scores (every node has exactly K)
       val deg = GraphIndex.nndescentEdges(s, dir, iters = 2)

@@ -41,6 +41,12 @@ import org.apache.spark.sql.types.LongType
   */
 object TopKPerKey {
 
+  /** Map-side retained-row budget per partition of [[PartialTopKExec]]. */
+  val MaxPartialRows: Int = 1 << 20
+
+  /** Map-side heap (distinct key) ceiling per partition. */
+  val MaxPartialKeys: Int = 131072
+
   /** Logical node: child's rows, top k per `keys` under `order` (a
     * TOTAL order — supply tiebreakers), plus a 1-based `rank` column. */
   final case class TopKPerKeyNode(
@@ -68,10 +74,10 @@ object TopKPerKey {
   /** Map-side pruning: keeps at most k rows per key per partition —
     * every row it drops is beaten by ≥ k same-key rows in the same
     * partition, so the global top k per key is untouched. Memory is
-    * capped by a ROW budget, not a key count: at most
-    * `graft.topk.maxPartialRows` retained rows per partition (default
-    * 2^20 ≈ 100 MB of UnsafeRows), i.e. maxRows/k heaps (a
-    * `graft.topk.maxPartialKeys` ceiling still applies); rows for keys
+    * capped by a ROW budget, not a key count: at most [[MaxPartialRows]]
+    * retained rows per partition (2^20 ≈ 100 MB of UnsafeRows), i.e.
+    * maxRows/k heaps (floored at 1024, capped at [[MaxPartialKeys]]);
+    * rows for keys
     * beyond the cap pass through UNPRUNED — still correct
     * (FinalTopKExec ranks and cuts), just without the shuffle saving
     * for the overflow keys. Partial pruning is an optimization, never
@@ -96,11 +102,8 @@ object TopKPerKey {
       val keyExprs = keys
       val sortOrder = order
       val limit = k
-      val maxRows = conf.getConfString("graft.topk.maxPartialRows",
-        (1 << 20).toString).toInt
-      val maxKeys = math.min(
-        conf.getConfString("graft.topk.maxPartialKeys", "131072").toInt,
-        math.max(1024, maxRows / math.max(1, k)))
+      val maxKeys = math.min(MaxPartialKeys,
+        math.max(1024, MaxPartialRows / math.max(1, k)))
       child.execute().mapPartitions({ iter =>
         val keyProj = UnsafeProjection.create(keyExprs, childOutput)
         val ord = RowOrdering.create(sortOrder, childOutput)

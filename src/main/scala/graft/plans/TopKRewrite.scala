@@ -70,6 +70,31 @@ case class TopKRewrite() extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond, child) => rewrite(cond, child).getOrElse(f)
+  }.transformUp {
+    case p @ Project(list, node: TopKPerKeyNode) => longRank(p, list, node)
+  }
+
+  /** The optimizer unwraps `cast(rank as long) <= k` to an int bound
+    * before this rule sees it, so the rank comes back as
+    * `cast(rank as int)` under the caller's `cast(... as long)`. The
+    * rank is ≤ k ≤ [[MaxK]], so that round trip is the identity: read
+    * the long rank directly, and fold a projection that only renames
+    * it into the node. */
+  private def longRank(p: Project, list: Seq[NamedExpression],
+      node: TopKPerKeyNode): LogicalPlan = {
+    val r = node.rank.exprId
+    val direct = list.map(_.transform {
+      case Cast(Cast(a: Attribute, IntegerType, _, _), LongType, _, _)
+        if a.exprId == r => a
+    }.asInstanceOf[NamedExpression])
+    direct match {
+      case init :+ (al @ Alias(a: Attribute, nm))
+          if a.exprId == r && init == node.child.output =>
+        node.copy(rank =
+          AttributeReference(nm, LongType, nullable = false)(exprId = al.exprId))
+      case _ if direct == list => p
+      case _ => Project(direct, node)
+    }
   }
 
   private def rewrite(cond: Expression, child: LogicalPlan): Option[LogicalPlan] = {

@@ -63,7 +63,7 @@ class AnnSearchSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft_seed").toString
     val s1 = spark.newSession()
     s1.conf.set("spark.graft.indexDir", root)
-    graft.llm.Similarity.ivfTop2(s1, sf001).count() // installs centroids + ivf_top2
+    graft.index.VectorIndex.ivfTop2(s1, sf001).count() // installs centroids + ivf_top2
     val s2 = spark.newSession() // fresh session: only the DISK copy counts
     s2.conf.set("spark.graft.indexDir", root)
     assert(Main.resolveSeed(s2, sf001, None, None) == "ivf",

@@ -8,8 +8,7 @@ class BenchSpec extends SparkSpec {
   test("failures reported and excluded; job/stage counts recorded") {
     val (res, failed) = Bench.runAll(spark, sf001, Map(
       "ok_q" -> ((s, d) => graft.queries.Tables.t(s, d, "region")),
-      "boom_q" -> ((_, _) => throw new RuntimeException("synthetic failure"))),
-      isolate = false)
+      "boom_q" -> ((_, _) => throw new RuntimeException("synthetic failure"))))
     assert(res.keySet == Set("ok_q"))
     assert(failed.keySet == Set("boom_q"))
     assert(failed("boom_q").contains("synthetic failure"))
@@ -23,7 +22,7 @@ class BenchSpec extends SparkSpec {
     var calls = 0
     val (res, failed) = Bench.runAll(spark, sf001, Map(
       "q" -> ((s, d) => { calls += 1; graft.queries.Tables.t(s, d, "region") })),
-      isolate = false, reps = 2)
+      reps = 2)
     assert(failed.isEmpty)
     assert(calls == 2, s"expected 2 reps, saw $calls plan builds")
     val q = res("q")

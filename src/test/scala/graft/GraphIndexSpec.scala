@@ -53,10 +53,10 @@ class GraphIndexSpec extends SparkSpec {
     // the one curve whose beam differs per pk: the walk folds to the
     // widest beam and cuts each pk at rk <= B(pk). A fold that cut every
     // pk at the widest beam would give B=1 and B=5 the B=10 walk.
-    val probes = graft.llm.Similarity.withSq(spark, sf001).filter("vec_id < 8")
+    val probes = graft.index.VectorIndex.withSq(spark, sf001).filter("vec_id < 8")
       .selectExpr("vec_id as src", "embedding as ea", "sq as sa")
     val entries = ivfServingEntries(spark, sf001, probes)
-    val truth = graft.llm.Similarity.exactTopk(spark, sf001)
+    val truth = graft.index.VectorIndex.exactTopk(spark, sf001)
       .filter(s"rk <= $GraphK").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val reference = Seq(1, 5, 10).map { b =>

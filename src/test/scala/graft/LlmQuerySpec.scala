@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Boundary fixtures for the round-3 [EXT] queries: sliding-window
-  * chunking (x38), stratified reservoir (x37), semantic dedup (x36),
-  * and the sufficient-statistics regression's order-independence (r51). */
+  * chunking (x38), stratified reservoir (x37) and the sufficient-
+  * statistics regression's order-independence (r51); semantic dedup
+  * (x36) is checked in VectorIndexSpec. */
 class LlmQuerySpec extends SparkSpec {
 
   test("x38 sliding chunks: cover every token, clamp the last window") {
@@ -39,20 +40,6 @@ class LlmQuerySpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     perLang.foreach { case (lang, n) =>
       assert(n.toLong == math.min(20L, langSizes(lang)))
-    }
-  }
-
-  test("x36 semantic dedup: canonical ids are cluster-internal minima") {
-    val rows = graft.llm.Similarity.queries("x36_semantic_dedup")(spark, sf001)
-      .collect()
-    assert(rows.nonEmpty)
-    val cluster = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-    rows.foreach { r =>
-      val (vid, canon, kept) = (r.getLong(0), r.getLong(2), r.getBoolean(3))
-      assert(canon <= vid) // canonical is never a later vector
-      assert(kept == (canon == vid))
-      // canonical target lives in the same cluster
-      assert(cluster(canon) == cluster(vid))
     }
   }
 

@@ -221,52 +221,6 @@ class Round10Spec extends SparkSpec {
       "no word was compressed by any merge")
   }
 
-  test("x101 IVF+PQ composite ≡ in-memory ADC over the routed candidate cells") {
-    val emb = graft.queries.Tables.t(spark, sf001, "embeddings")
-      .selectExpr("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val top2 = graft.llm.Similarity.ivfTop2(spark, sf001)
-      .selectExpr("vec_id", "transform(cl2, c -> cast(c as bigint)) as cl2")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toVector).toMap
-    val codes = graft.llm.Similarity.pqCodes(spark, sf001)
-      .selectExpr("vec_id", "cast(ss as bigint) as ss", "cast(code as bigint) as code")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val cw = graft.llm.Similarity.pqCodebook(spark, sf001)
-      .selectExpr("cast(clabel as bigint) as clabel", "cast(ss as bigint) as ss", "cw")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Double](2).toArray)
-      .toMap
-    // engine-contract arithmetic: left-to-right 8-term double fold for
-    // each subspace distance, decimal(24,12) HALF_UP per term, exact
-    // decimal sum across subspaces
-    def pd2(q: Long, ss: Long, cl: Long): Double = {
-      val e = emb(q); val c = cw((cl, ss))
-      var acc = 0.0; var j = 0
-      while (j < 8) {
-        val d = e((ss * 8 + j).toInt).toDouble - c(j); acc += d * d; j += 1
-      }
-      acc
-    }
-    def adc(q: Long, n: Long): Double =
-      (0L until 8L).map(ss => BigDecimal(pd2(q, ss, codes((n, ss))))
-        .setScale(12, BigDecimal.RoundingMode.HALF_UP)).sum.toDouble
-    val ref = (0L until 8L).flatMap { q =>
-      val cells = top2(q).toSet
-      val cand = top2.keys.filter(n => n != q && cells.contains(top2(n)(0)))
-      cand.map(n => (n, adc(q, n))).toSeq
-        .sortBy { case (n, d) => (d, n) }.take(10).zipWithIndex
-        .map { case ((n, d), i) => (q, n, round6(d), i + 1L) }
-    }
-    val out = graft.llm.Similarity.queries("x101_ivfpq_ann")(spark, sf001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    assert(out.length == ref.length, s"${out.length} vs ${ref.length} rows")
-    out.zip(ref).foreach { case (o, e) => assert(o == e, s"$o != $e") }
-    // the composite genuinely restricts: at least one probe's candidate
-    // pool is smaller than the corpus (else the IVF routing is vacuous)
-    assert((0L until 8L).exists(q =>
-      top2.count { case (n, c) => n != q && top2(q).contains(c(0)) } <
-        emb.size - 1), "IVF routing restricted nothing")
-  }
-
   test("x102 matryoshka eval matches an in-memory truncation reference") {
     val embs = graft.queries.Tables.t(spark, sf001, "embeddings")
       .selectExpr("vec_id", "embedding").collect()

@@ -75,7 +75,7 @@ class Round13Spec extends SparkSpec {
     // MSE must be <= the MSE of assigning every vector its own label's
     // codeword (one candidate among the minimized set)
     val ownLabel = spark.read.parquet(s"$sf001/embeddings.parquet")
-      .join(graft.llm.Similarity.pqCodebook(spark, sf001)
+      .join(graft.index.VectorIndex.pqCodebook(spark, sf001)
         .withColumnRenamed("clabel", "label"), Seq("label"))
       .selectExpr("ss",
         "aggregate(zip_with(slice(embedding, ss * 8 + 1, 8), cw, " +

@@ -365,7 +365,7 @@ class Round18Spec extends SparkSpec {
   private def walkRecall(k: Int, b: Int): Double = {
     import graft.index.GraphIndex._
     import org.apache.spark.sql.functions._
-    val sq = graft.llm.Similarity.withSq(spark, sf001)
+    val sq = graft.index.VectorIndex.withSq(spark, sf001)
     val ud = cappedUd(nndescentEdgesOn(sq, iters = 2, k = k).localCheckpoint(),
       2 * k).localCheckpoint()
     val probes = sq.filter("vec_id < 8")
@@ -374,7 +374,7 @@ class Round18Spec extends SparkSpec {
         sq.selectExpr("vec_id as dst", "embedding as eb", "sq as sb")
           .crossJoin(broadcast(probes))
           .filter(col("dst") =!= col("src"))
-          .selectExpr("src", "dst", s"${graft.llm.Similarity.sCosIn} as cos"),
+          .selectExpr("src", "dst", s"${graft.index.VectorIndex.sCosIn} as cos"),
         Seq("src"), "cos", Seq("dst"), GraphK)
       .select(col("src"), col("dst"), lit(true).as("hit0"))
     val visited = walk(sq, ud, probes, hashEntries(probes, sq, "8", dense = false),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session; specs
@@ -20,7 +21,12 @@ object TestSpark {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+/** Per-query temporaries (`Shared.temp`) end with their test, as they
+  * end with their query in `Bench`, `Dev` and `Verify`: a frame left
+  * cached would be substituted into any later test's equal subtree. */
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = TestSpark.spark
+  override def afterEach(): Unit =
+    try super.afterEach() finally graft.queries.Shared.dropTransient()
   def sf001 = "/root/testdata/sf0.001"
 }

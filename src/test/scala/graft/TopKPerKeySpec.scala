@@ -65,36 +65,38 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("partial-key cap overflow degrades to pass-through, output unchanged") {
-    import spark.implicits._
-    spark.conf.set("graft.topk.maxPartialKeys", "1") // force overflow
-    try {
-      val df = Seq(
-        ("a", 1L, 3.0), ("b", 2L, 5.0), ("c", 3L, 7.0),
-        ("a", 4L, 9.0), ("b", 5L, 1.0), ("c", 6L, 2.0)
-      ).toDF("key", "id", "v").repartition(2)
-      val out = TopKPerKey.topKDesc(df, Seq("key"), "v", Seq("id"), 1)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      assert(out == Set(("a", 4L), ("b", 2L), ("c", 3L)))
-    } finally spark.conf.set("graft.topk.maxPartialKeys", "131072")
+    // one partition with more distinct keys than the heap ceiling: keys
+    // past it stream through unpruned and the final phase cuts them
+    val n = TopKPerKey.MaxPartialKeys + 5000
+    val df = spark.range(0L, 2L * n, 1L, 1)
+      .selectExpr(s"id % $n as key", "id", "cast(id * 7 % 11 as double) as v")
+    val native = TopKPerKey.topKDesc(df, Seq("key"), "v", Seq("id"), 1)
+      .select("key", "id")
+    // top-1 by (v desc, id asc) as an aggregate: no top-k operator involved
+    val expected = df.groupBy("key")
+      .agg(max(struct(col("v"), (-col("id")).as("nid"))).as("m"))
+      .selectExpr("key", "-m.nid as id")
+    assert(native.count() == n)
+    assert(native.exceptAll(expected).isEmpty && expected.exceptAll(native).isEmpty)
   }
 
   test("row budget caps heap count at wide k; output unchanged") {
     import spark.implicits._
     // the 100x lesson: memory must be bounded in ROWS (keys×k), not
     // keys — at k=40 the old key-count cap retained 5.2M rows per
-    // partition. The floor is 1024 keys, so 2000 keys with a 1-row
-    // budget exercises the overflow pass-through at wide k.
-    spark.conf.set("graft.topk.maxPartialRows", "1")
-    try {
-      val df = (0L until 2000L).flatMap(key =>
-        (0L until 3L).map(j => (key, key * 3 + j, (j * 17 % 7).toDouble)))
-        .toDF("key", "id", "v").repartition(4)
-      val native = TopKPerKey.topKDesc(df, Seq("key"), "v", Seq("id"), 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-      val win = windowForm(df, "key", "v", "id", 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-      assert(native == win && native.size == 4000)
-    } finally spark.conf.unset("graft.topk.maxPartialRows")
+    // partition. At k = 2048 the row budget allows 2^20 / 2048 = 512
+    // heaps, floored at 1024, so 2000 keys in one partition take the
+    // overflow pass-through; every group is smaller than k, so every
+    // row survives with its in-group rank.
+    val rows = (0L until 2000L).flatMap(key =>
+      (0L until 3L).map(j => (key, key * 3 + j, (j * 17 % 7).toDouble)))
+    val df = rows.toDF("key", "id", "v").coalesce(1)
+    val native = TopKPerKey.topKDesc(df, Seq("key"), "v", Seq("id"), 2048)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
+    val expected = rows.groupBy(_._1).values.flatMap(g =>
+      g.sortBy(r => (-r._3, r._2)).zipWithIndex
+        .map { case (r, i) => (r._1, r._2, i + 1L) }).toSet
+    assert(native == expected && native.size == 6000)
   }
 
   test("float/double grouping keys route to the window form (-0.0 == 0.0)") {

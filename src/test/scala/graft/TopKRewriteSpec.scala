@@ -40,6 +40,16 @@ class TopKRewriteSpec extends SparkSpec {
       Set(("a", 4L), ("b", 6L), ("c", 7L)))
   }
 
+  test("topKDesc keeps its long rank: no int round trip, no rename Project") {
+    val out = graft.plans.TopKPerKey.topKDesc(df, Seq("key"), "v", Seq("id"), 2)
+    val plan = physical(out)
+    assert(plan.contains("FinalTopK"), plan)
+    assert(!plan.contains("as int)") && !plan.contains("Project"), plan)
+    assert(out.schema("rk").dataType.typeName == "long")
+    assert(out.collect().map(r => (r.getLong(1), r.getLong(3))).toSet ==
+      Set((4L, 1L), (2L, 2L), (6L, 1L), (5L, 2L), (7L, 1L)))
+  }
+
   test("residual conjuncts re-apply on identical rank values") {
     val w = Window.partitionBy("key").orderBy(col("v").desc, col("id"))
     val out = df.withColumn("rk", row_number().over(w))
