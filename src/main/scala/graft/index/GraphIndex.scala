@@ -68,12 +68,10 @@ object GraphIndex {
   // ── construction ──
 
   /** Exact rounded cosine of (src, dst) pairs, both ends looked up in
-    * `corpus` by two bounded payload joins. */
+    * `corpus`: (src, dst, cos). */
   private def scorePairs(corpus: DataFrame)(pairs: DataFrame): DataFrame =
-    pairs
-      .join(corpus.selectExpr("vec_id as src", "embedding as ea", "sq as sa"), "src")
-      .join(corpus.selectExpr("vec_id as dst", "embedding as eb", "sq as sb"), "dst")
-      .selectExpr("src", "dst", s"$sCosIn as cos")
+    VectorIndex.scorePairs(pairs, "src" -> corpus, "dst" -> corpus,
+      bcastA = false, Seq("src", "dst"), "cos")
 
   /** The undirected view of a directed edge list: out ∪ in, deduped. */
   private[graft] def undirected(edges: DataFrame): DataFrame =

@@ -252,19 +252,24 @@ object VectorIndex {
 
   // ── exact scoring ──
 
-  /** Exact `cos_sim` of candidate id pairs: `cand`'s two id columns look
-    * up their (embedding, sq) in a corpus frame each, the `a` side
-    * broadcast when `bcastA` (a probe-bounded side). (out…, cos_sim). */
+  /** Exact cosine of candidate id pairs, named `score`: `cand`'s two id
+    * columns look up their (embedding, sq) in a corpus frame each, the `a`
+    * side broadcast when `bcastA` (a probe-bounded side). The one exact
+    * pair scorer: the vector indexes and the graph index's construction
+    * (`src`/`dst` → `cos`) both score through it. (out…, score). */
   private[graft] def scorePairs(cand: DataFrame, a: (String, DataFrame),
-      b: (String, DataFrame), bcastA: Boolean, out: Seq[String]): DataFrame = {
+      b: (String, DataFrame), bcastA: Boolean, out: Seq[String],
+      score: String = "cos_sim"): DataFrame = {
     val sideA = side(a._2, a._1, "a")
     cand.join(if (bcastA) broadcast(sideA) else sideA, a._1)
       .join(side(b._2, b._1, "b"), b._1)
-      .selectExpr(out :+ s"$sCosIn as cos_sim": _*)
+      .selectExpr(out :+ s"$sCosIn as $score": _*)
   }
 
-  /** A corpus frame as one side of [[sCosIn]]: (id, carry renamed…,
-    * e`tag`, s`tag`). */
+  /** A corpus frame (vec_id, embedding, sq) as one side of [[sCosIn]]:
+    * (id, carry renamed…, e`tag`, s`tag`). `sq` is carried though the
+    * cosine recomputes the norms: without it the projection no longer
+    * matches cached frames that carry it, and the plans change. */
   private def side(df: DataFrame, id: String, tag: String,
       carry: Seq[(String, String)] = Nil): DataFrame =
     df.select((col("vec_id").as(id) +: carry.map { case (c, as) => col(c).as(as) }) ++
@@ -273,8 +278,10 @@ object VectorIndex {
   /** Probe × corpus brute force: the probes of `corpus` (vec_id in
     * [[QuerySet]]) broadcast against every row of `cands`, each side
     * carrying `carry` columns as q_/n_ twins, the `pair` filter before
-    * scoring: (query_id, q_…, neighbor_id, n_…, cos_sim). Each executor
-    * streams its share of the corpus once. */
+    * scoring: (query_id, q_…, neighbor_id, n_…, cos_sim). The payload is
+    * each frame's (`embedding`, `sq`): a caller scores a prefix by
+    * projecting it there (x102). Each executor streams its share of the
+    * corpus once. */
   private[graft] def bruteForce(corpus: DataFrame, cands: DataFrame,
       pair: Option[Column], carry: Seq[String] = Nil): DataFrame = {
     val scored = side(cands, "neighbor_id", "b", carry.map(c => c -> s"n_$c"))

@@ -170,13 +170,11 @@ object Ingest {
   }
 
   /** Evict every in-session reader memoized over `landingPath` (the
-    * `Tables` and `Shared` caches). An append, prune or compaction
-    * changes the files under the path; a memoized plan pins the OLD
-    * listing and would miss new files or fail on deleted ones. */
-  def invalidate(landingPath: String): Unit = {
-    graft.queries.Tables.invalidate(landingPath)
+    * `Shared` registry). An append, prune or compaction changes the
+    * files under the path; a memoized plan pins the OLD listing and
+    * would miss new files or fail on deleted ones. */
+  def invalidate(landingPath: String): Unit =
     graft.queries.Shared.invalidate(landingPath)
-  }
 
   /** Bucketed landing store — the shuffle-free path for the latest-
     * version views at scale (SCALE.md §2). Partitions by type and

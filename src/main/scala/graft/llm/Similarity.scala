@@ -292,24 +292,17 @@ object Similarity {
     // (x11's pipeline reused verbatim), reported as overlap, recall@10
     // and whether rank-1 survives. The read-before-committing report
     // for any truncated-serving decision. Same 100 TB shape as x11 —
+    // x11's brute force over the prefix projected as the payload:
     // broadcast probes, one corpus stream, native bounded-heap top-k;
     // the prefix slice narrows the scan payload rather than widening
     // the plan.
     "x102_matryoshka_eval" -> { (s, dir) =>
       val corpus = withSq(s, dir)
-        .selectExpr("vec_id", "slice(embedding, 1, 16) as e16")
-        .selectExpr("vec_id", "e16", s"${sSumSq("e16")} as sq16")
-      val probes = corpus.filter(QuerySet)
-        .select(col("vec_id").as("query_id"), col("e16").as("ea"),
-          col("sq16").as("sa"))
-      val cands = corpus.select(col("vec_id").as("neighbor_id"),
-        col("e16").as("eb"), col("sq16").as("sb"))
-      val scored = cands.crossJoin(broadcast(probes))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .selectExpr("query_id", "neighbor_id",
-          sRound6(s"${sDot("ea", "eb")} / sqrt(sa * sb)") + " as cos16")
-      val trunc = graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"),
-        "cos16", Seq("neighbor_id"), TopK)
+        .selectExpr("vec_id", "slice(embedding, 1, 16) as embedding")
+        .selectExpr("vec_id", "embedding", s"${sSumSq("embedding")} as sq")
+      val trunc = graft.plans.TopKPerKey.topKDesc(
+        bruteForce(corpus, corpus, Some(col("query_id") =!= col("neighbor_id"))),
+        Seq("query_id"), "cos_sim", Seq("neighbor_id"), TopK)
       val exact = exactTopk(s, dir)
       trunc.select(col("query_id"), col("neighbor_id"), col("rk").as("trk"))
         .join(exact.select(col("query_id"), col("neighbor_id"),

@@ -5,7 +5,7 @@ import graft.model.RootSchema
 import graft.views.Views
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, Path}
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
@@ -163,16 +163,9 @@ final class SyncPipeline(
     f(Ingest.readLanding(spark, landingPath)).write.mode("overwrite")
       .partitionBy("type").parquet(staging)
     val target = Paths.get(landingPath)
-    deleteRecursive(target)
+    graft.queries.Durable.deleteRecursive(target)
     Files.move(Paths.get(staging), target)
     Ingest.invalidate(landingPath)
   }
 
-  private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p)) {
-      Using.resource(Files.walk(p)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder[Path]())
-          .iterator.asScala.foreach(Files.delete)
-      }
-    }
 }

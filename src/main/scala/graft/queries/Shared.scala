@@ -3,12 +3,15 @@ package graft.queries
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Cache registry for persisted frames, split by lifetime.
+/** The in-session frame registry, split by lifetime.
   *
   * Two tiers:
-  *  - '''shared''' — pipeline stages reused by several queries over the
-  *    same corpus (shingle sets, embedding norms, the synthetic landing
-  *    frame). Memoized per (session, dir, key) so every caller gets the
+  *  - '''memoized''' — per-session table resolutions (`Tables.t`,
+  *    unpersisted: re-resolving a parquet table per query re-lists the
+  *    directory and re-reads footers) and, persisted, pipeline stages
+  *    reused by several queries over the same corpus (shingle sets,
+  *    embedding norms, the synthetic landing frame). Memoized per
+  *    (session, dir, key) so every caller gets the
   *    same plan object, hence the same cache entry. On a long-running
   *    cluster these are exactly the materialized intermediate tables a
   *    warehouse would keep; the benchmark's per-query isolation keeps
@@ -28,34 +31,45 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * uncached recompute. */
 object Shared {
 
-  private val sharedCache =
+  /** THE in-session registry: every memoized frame, persisted or not. */
+  private val registry =
     new ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
   private val transientFrames =
     java.util.Collections.newSetFromMap(
       new ConcurrentHashMap[DataFrame, java.lang.Boolean]())
 
-  /** Memoize + persist a cross-query shared stage. The build runs once
-    * per (session, dir, key); all queries then reference one cached
-    * plan. Corpus dirs are immutable while cached (same contract as
-    * `Tables.t`). */
-  def shared(s: SparkSession, dir: String, key: String)(
+  /** Memoize `build` per (session, dir, key), persisted when `persist`:
+    * the build runs once and every caller gets the same plan object,
+    * hence the same cache entry. Keyed by session because specs and the
+    * driver may use different sessions. Above 256 entries, those of
+    * stopped sessions go first, then all. Contract: a corpus dir is
+    * immutable while registered; the write paths call [[invalidate]]. */
+  def memo(s: SparkSession, dir: String, key: String, persist: Boolean)(
       build: => DataFrame): DataFrame = {
-    if (sharedCache.size > 128) {
-      sharedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      if (sharedCache.size > 128) { dropShared(); }
+    if (registry.size > 256) {
+      registry.keySet.removeIf(k => k._1.sparkContext.isStopped)
+      if (registry.size > 256) forget(_ => true)
     }
     val k = (s, dir, key)
-    val hit = sharedCache.get(k)
+    val hit = registry.get(k)
     if (hit != null) hit
     else synchronized {
       // double-checked under a reentrant lock: builds may recursively
-      // request other shared frames (simhashed → shingled), which
+      // request other frames (simhashed → shingled), which
       // ConcurrentHashMap.computeIfAbsent forbids on one map
-      val again = sharedCache.get(k)
+      val again = registry.get(k)
       if (again != null) again
-      else { val df = build.persist(); sharedCache.put(k, df); df }
+      else {
+        val df = if (persist) build.persist() else build
+        registry.put(k, df)
+        df
+      }
     }
   }
+
+  /** Memoize + persist a cross-query shared stage. */
+  def shared(s: SparkSession, dir: String, key: String)(
+      build: => DataFrame): DataFrame = memo(s, dir, key, persist = true)(build)
 
   /** Persist a per-query temporary and register it for dropTransient. */
   def temp(df: DataFrame): DataFrame = {
@@ -71,30 +85,30 @@ object Shared {
     transientFrames.clear()
   }
 
-  /** Unpersist + drop shared entries keyed under `path` — the write
-    * paths call this alongside `Tables.invalidate` so a rewritten corpus
-    * dir doesn't serve stale materialized stages. Same coarse
-    * prefix-overlap rule. */
+  /** Unpersist + forget every entry whose dir contains, equals, or is
+    * contained by `path`: the write paths (append, prune, compact,
+    * through `Ingest.invalidate`; a tier install) call this so the next
+    * read sees the rewritten files, not a plan pinned to the old
+    * listing. Coarse on purpose: eviction is cheap, staleness is not. */
   def invalidate(path: String): Unit = {
     val p = path.stripSuffix("/")
-    val it = sharedCache.entrySet.iterator
+    forget { k =>
+      val dir = k._2.stripSuffix("/")
+      dir == p || dir.startsWith(p + "/") || p.startsWith(dir + "/")
+    }
+  }
+
+  private def forget(which: ((SparkSession, String, String)) => Boolean): Unit = {
+    val it = registry.entrySet.iterator
     while (it.hasNext) {
       val e = it.next()
-      val dir = e.getKey._2.stripSuffix("/")
-      if (dir == p || dir.startsWith(p + "/") || p.startsWith(dir + "/")) {
+      if (which(e.getKey)) {
         try e.getValue.unpersist(false) catch { case _: Throwable => () }
         it.remove()
       }
     }
   }
 
-  /** Unpersist + forget the shared tier too (tests / corpus rewrite). */
-  def dropShared(): Unit = {
-    sharedCache.values.forEach(df =>
-      try df.unpersist(false) catch { case _: Throwable => () })
-    sharedCache.clear()
-  }
-
-  /** Full reset: both tiers. */
-  def dropAll(): Unit = { dropTransient(); dropShared() }
+  /** Full reset: the registry and the per-query temporaries. */
+  def dropAll(): Unit = { dropTransient(); forget(_ => true) }
 }

@@ -7,42 +7,11 @@ import org.apache.spark.sql.types.DecimalType
 /** Shared helpers for the oracle-verified query surface. */
 object Tables {
 
-  // Per-session table catalog: re-resolving the same parquet table for
-  // every query re-lists the directory and re-reads footers — a pure
-  // per-query constant. Memoizing the DataFrame (immutable plan) is
-  // exactly what a catalog does. Keyed by session too: specs and the
-  // driver may use different sessions. Contract: corpus dirs are
-  // immutable while cached (the cached file listing would otherwise go
-  // stale); the size bound keeps a driver that cycles sessions or dirs
-  // from pinning them forever.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // Evict entries pinned to stopped sessions first (they can never be
-    // read again); only if live entries still exceed the bound fall back
-    // to the blunt clear.
-    if (cache.size > 256) {
-      cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      if (cache.size > 256) cache.clear()
-    }
-    cache.computeIfAbsent((s, dir, name), { case (s, dir, name) => load(s, dir, name) })
-  }
-
-  /** Drop cached resolutions overlapping `path` — the write paths
-    * (append, prune, compact, through Ingest.invalidate) call this so an
-    * in-session rewrite of a cached table is seen by the next read (the
-    * cached plan would otherwise pin the old file listing). Matches any
-    * cache entry whose directory contains, equals, or is contained by the
-    * written path — coarse on purpose: eviction is cheap, staleness is
-    * not. */
-  def invalidate(path: String): Unit = {
-    val p = path.stripSuffix("/")
-    cache.keySet.removeIf { k =>
-      val dir = k._2.stripSuffix("/")
-      dir == p || dir.startsWith(p + "/") || p.startsWith(dir + "/")
-    }
-  }
+  /** The corpus table `name` of `dir`, resolved once per session in
+    * the [[Shared]] registry (unpersisted): re-resolving a parquet table
+    * for every query re-lists the directory and re-reads footers. */
+  def t(s: SparkSession, dir: String, name: String): DataFrame =
+    Shared.memo(s, dir, s"$name.parquet", persist = false)(load(s, dir, name))
 
   private def load(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
@@ -73,7 +42,9 @@ object Tables {
     * and is amortized across the whole session — exactly how a
     * warehouse clusters its fact tables. Spark only honors bucketing
     * through the catalog, hence a TABLE with an explicit tmp location;
-    * table name is dir-hashed so two corpora never share a store.
+    * table name is dir-hashed so two corpora never share a store, and
+    * the store is a [[Durable.jvmStore]] kept fresh by
+    * [[Durable.bucketedStore]] (a corpus rewritten in place rewrites it).
     * Results are invariant (same rows, same types — BucketingSpec and
     * the oracle gate both pin this); only the scan's reported
     * partitioning changes.
@@ -88,25 +59,11 @@ object Tables {
     * documents. */
   def bucketed(s: SparkSession, dir: String, name: String, key: String,
       nBuckets: Int = 32): DataFrame = {
-    val dirTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val table = s"graft_bk_${name}_${key}_$dirTag"
-    if (!s.catalog.tableExists(table)) bucketedLock.synchronized {
-      if (!s.catalog.tableExists(table)) {
-        val loc = new org.apache.hadoop.fs.Path(
-          System.getProperty("java.io.tmpdir"),
-          s"${table}_${ProcessHandle.current().pid()}")
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        t(s, dir, name).write.mode("overwrite").format("parquet")
-          .bucketBy(nBuckets, key).sortBy(key)
-          .option("path", loc.toString).saveAsTable(table)
-        s.catalog.refreshTable(table)
-      }
-    }
+    val table = s"graft_bk_${name}_${key}_${Durable.md5(dir).take(12)}"
+    Durable.bucketedStore(s, dir, table, Durable.jvmStore(table), key,
+      nBuckets)(t(s, dir, name))
     s.table(table)
   }
-  private val bucketedLock = new Object
 
   /** Order-independent exact double sum: accumulate in decimal (exact,
     * associative — immune to parallel summation order), present as

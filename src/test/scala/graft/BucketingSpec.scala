@@ -240,8 +240,8 @@ class BucketingSpec extends SparkSpec {
   test("r68's bucketed store is written once per JVM: a second session " +
       "neither rewrites it nor reads different rows") {
     val r68 = graft.queries.DocViews.queries("r68_bucketed_latest")
-    val loc = java.nio.file.Paths.get(
-      graft.queries.DocViews.storePath("r68_store", sf001))
+    val loc = graft.queries.Durable.jvmStore(
+      graft.queries.DocViews.r68Table(sf001))
     def listing() = scala.util.Using.resource(Files.walk(loc)) {
       _.iterator.asScala.filter(Files.isRegularFile(_))
         .map(f => (loc.relativize(f).toString, Files.getLastModifiedTime(f)))

@@ -13,7 +13,10 @@ import org.apache.spark.sql.DataFrame
   * `Nil`) graded the same way. x132 is the curve whose beam differs per
   * pk (a rank cut under the widest fold); x136/x137 share one beam. The
   * degree sweeps x134/x135 run per-leg builds (a fused build was raced
-  * and lost; see SCALE.md). */
+  * and lost; see SCALE.md).
+  *
+  * Also the standing walk's per-probe candidate bound and x134's
+  * degree curve. */
 class GraphIndexSpec extends SparkSpec {
 
   private def sortedRows(df: DataFrame): Seq[String] =
@@ -98,5 +101,66 @@ class GraphIndexSpec extends SparkSpec {
     val ids = emb.filter("vec_id % 10 = 0").select("vec_id").collect()
       .map(_.getLong(0)).sorted
     assert(slice.toSeq == ids.indices.map(_.toLong).zip(ids.toSeq))
+  }
+
+  // ── the walk's per-probe bound ──
+
+  test("beamWalk: the per-probe candidate bound is an enforced invariant, not an average") {
+    // the 100 TB claim, asserted: visited(probe) ≤ E entries + per hop
+    // at most B frontier nodes × the ρ-capped undirected degree (2K).
+    // STRUCTURAL since round 11: the walk folds the scored entry visits
+    // to the top-B hop-1 frontier, so hop 1 obeys the same B·2K bound
+    // as every later hop (previously all E entries expanded and the
+    // bound held only through incidental candidate overlap — a latent
+    // flake). Without the hash-order cap on reverse edges a hub node's
+    // fan-out would be its in-degree — corpus-dependent (x123's tail).
+    val E = 8; val B = 5; val cap = 20; val hops = 2
+    val probes = spark.read.parquet(s"$sf001/embeddings.parquet")
+      .filter("vec_id < 8")
+      .selectExpr("vec_id as src", "embedding as ea",
+        "aggregate(zip_with(embedding, embedding, (x, y) -> cast(x as double) * cast(y as double)), cast(0 as double), (acc, t) -> acc + t) as sa")
+    val visited = graft.index.GraphIndex.standingWalk(spark, sf001, probes,
+      graft.index.GraphIndex.standingEntries(spark, sf001, probes), hops).last
+    val perProbe = visited.groupBy("src").count().collect()
+      .map(_.getLong(1))
+    val bound = E + hops * B * cap
+    assert(perProbe.forall(_ <= bound),
+      s"candidate bound violated: max ${perProbe.max} > $bound")
+    assert(perProbe.nonEmpty && perProbe.max > E,
+      "walk must actually expand beyond its entry points")
+  }
+
+  // ── x134 construction-degree operating curve ──
+
+  private lazy val x134Rows =
+    SparkEntry.queries("x134_degree_sweep")(spark, sf001).collect()
+
+  test("x134: one row per degree, ordered, with full answer sets") {
+    assert(x134Rows.map(_.getLong(0)).toSeq == Seq(5L, 10L, 20L))
+    // 8 probes × k answers — the walk must fill every slot at any
+    // degree (entries alone provide ≥ 8 visits, hops add B·2K more)
+    assert(x134Rows.forall(_.getAs[Long]("n_answers_5") == 40L))
+    assert(x134Rows.forall(_.getAs[Long]("n_answers_10") == 80L))
+  }
+
+  test("x134: recall is a valid fraction and hits match the recall algebra") {
+    x134Rows.foreach { r =>
+      val r5 = r.getAs[Double]("recall_at_5")
+      val r10 = r.getAs[Double]("recall_at_10")
+      assert(r5 >= 0.0 && r5 <= 1.0 && r10 >= 0.0 && r10 <= 1.0)
+      assert(math.abs(r5 - r.getAs[Long]("n_hits_5").toDouble /
+        r.getAs[Long]("n_answers_5")) < 1e-6)
+      assert(math.abs(r10 - r.getAs[Long]("n_hits_10").toDouble /
+        r.getAs[Long]("n_answers_10")) < 1e-6)
+    }
+  }
+
+  test("x134: the plateau is a DEGREE ceiling — K=20 materially beats K=5") {
+    // the curve's reason to exist: x126/x132 sweep walk depth and width
+    // against the K=5 standing index and plateau; quadrupling the
+    // construction degree must buy recall the walk knobs could not.
+    val byDeg = x134Rows.map(r => r.getLong(0) -> r.getAs[Double]("recall_at_10")).toMap
+    assert(byDeg(20L) > byDeg(5L),
+      s"degree must move the plateau: $byDeg")
   }
 }
