@@ -100,22 +100,16 @@ final class SyncPipeline(
     loop(state.read(force), 0L)
   }
 
-  /** create_views (§3.2): register the R1/R2 + typed view catalog over
-    * the current landing store. */
+  /** create_views (§3.2): point the temp view `EXECUTE_DOCUMENTS` (the
+    * reference's landing table) at the current landing store, and
+    * register the R1/R2 + typed view catalog over it as SQL text. The
+    * catalog is created once; a later call re-points
+    * `EXECUTE_DOCUMENTS` and creates again only the views whose
+    * definition changed (see `Views.registerStore`). Returns the
+    * registered names, `EXECUTE_DOCUMENTS` first. */
   def createViews(schema: RootSchema): Seq[String] = {
-    val landing = Ingest.readLanding(spark, landingPath)
-    val latest = Views.latest(landing)
-    latest.createOrReplaceTempView("DOCUMENTS_LATEST")
-    Views.latestAllVersions(landing)
-      .createOrReplaceTempView("DOCUMENTS_LATEST_ALL_VERSIONS")
-    // the SCD2 companion of _LATEST_ALL_VERSIONS: same rows, annotated
-    // with validity intervals — registered so point-in-time SQL can
-    // BETWEEN-join it without touching the Scala API
-    Views.history(landing)
-      .createOrReplaceTempView("DOCUMENTS_HISTORY")
-    Seq("DOCUMENTS_LATEST", "DOCUMENTS_LATEST_ALL_VERSIONS",
-      "DOCUMENTS_HISTORY") ++
-      Views.registerAll(latest, schema)
+    Ingest.readLanding(spark, landingPath).createOrReplaceTempView("EXECUTE_DOCUMENTS")
+    "EXECUTE_DOCUMENTS" +: Views.registerStore(spark, "EXECUTE_DOCUMENTS", schema)
   }
 
   /** create_views --persistent-db DB: the same catalog as SQL-text

@@ -329,10 +329,10 @@ object DocViews {
     // not just the view builder: the walk must emit DOC_META_ITEMS and
     // the view must re-union chunk-split slices below the root.
     "r81_nested_list_flatten" -> { (s, dir) =>
-      val latest = Shared.shared(s, dir, "latest_nestedlist") {
+      Shared.shared(s, dir, "latest_nestedlist") {
         Views.latest(nestedListLanding(s, dir))
-      }
-      Views.registerAll(latest, nestedListSchema)
+      }.createOrReplaceTempView("R81_LATEST")
+      Views.registerAll(s, "R81_LATEST", nestedListSchema)
       s.table("DOC_META_ITEMS").orderBy("DOCUMENT_ID", "LISTITEM_ID")
     },
     // RECORD UNDER A LIST ITEM — the other half of the reference's
@@ -342,10 +342,10 @@ object DocViews {
     // via registerAll: the walk emits DOC_ITEMS (the list view) AND
     // DOC_ITEMS_POS (this view); chunk slices re-union through both.
     "r82_list_item_record" -> { (s, dir) =>
-      val latest = Shared.shared(s, dir, "latest_itemrec") {
+      Shared.shared(s, dir, "latest_itemrec") {
         Views.latest(itemRecordLanding(s, dir))
-      }
-      Views.registerAll(latest, itemRecordSchema)
+      }.createOrReplaceTempView("R82_LATEST")
+      Views.registerAll(s, "R82_LATEST", itemRecordSchema)
       s.table("DOC_ITEMS_POS").orderBy("DOCUMENT_ID", "LISTITEM_ID")
     },
     // THE VARIANT FLATTEN TWIN — r81's at-depth list flatten through

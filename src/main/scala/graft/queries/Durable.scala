@@ -201,10 +201,27 @@ object Durable {
   /** A store that lives as long as this JVM: under java.io.tmpdir, per
     * store name (which carries a corpus tag) and per JVM (the pid), so
     * two processes on one corpus never share files. Never under the
-    * index root, which must hold no persisted copy of a corpus. */
-  private[graft] def jvmStore(name: String): Path =
-    Paths.get(System.getProperty("java.io.tmpdir"),
+    * index root, which must hold no persisted copy of a corpus. The
+    * first call installs a shutdown hook that deletes every store
+    * handed out ([[deleteStores]] over [[jvmStores]]). */
+  private[graft] def jvmStore(name: String): Path = {
+    jvmStoresHook
+    val p = Paths.get(System.getProperty("java.io.tmpdir"),
       s"${name}_${ProcessHandle.current().pid()}")
+    jvmStores.add(p)
+    p
+  }
+
+  /** The stores [[jvmStore]] handed out in this JVM. */
+  private[graft] val jvmStores: java.util.Set[Path] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+
+  private lazy val jvmStoresHook: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => deleteStores(jvmStores), "graft-jvm-stores"))
+
+  /** Delete each of `stores` and forget it. */
+  private[graft] def deleteStores(stores: java.util.Set[Path]): Unit =
+    stores.removeIf { p => scala.util.Try(deleteRecursive(p)); true }
 
   /** THE writer of corpus-derived stores: makes sure the store of `dir`
     * at `loc`, and its catalog `table` if it has one, is fresh — its

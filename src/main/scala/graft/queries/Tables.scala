@@ -60,9 +60,14 @@ object Tables {
   def bucketed(s: SparkSession, dir: String, name: String, key: String,
       nBuckets: Int = 32): DataFrame = {
     val table = s"graft_bk_${name}_${key}_${Durable.md5(dir).take(12)}"
-    Durable.bucketedStore(s, dir, table, Durable.jvmStore(table), key,
-      nBuckets)(t(s, dir, name))
-    s.table(table)
+    // resolved once per session and corpus fingerprint: a corpus
+    // rewritten in place has a new fingerprint, so its store is checked
+    // (and rewritten) again before a frame is handed out
+    Shared.memo(s, dir, s"$table@${Durable.fingerprint(s, dir)}", persist = false) {
+      Durable.bucketedStore(s, dir, table, Durable.jvmStore(table), key,
+        nBuckets)(t(s, dir, name))
+      s.table(table)
+    }
   }
 
   /** Order-independent exact double sum: accumulate in decimal (exact,

@@ -2,7 +2,9 @@ package graft.views
 
 import graft.ingest.Landing
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.execution.command.ViewHelper
 import org.apache.spark.sql.functions._
 
 /** The generated query layer of the reference (SURVEY.md §2.4–§2.5).
@@ -333,39 +335,84 @@ object Views {
     frame(latestDf,
       viewSteps(ItemRecordDef(docType, docType, listPath, subPath), root))
 
-  /** V7 — register the full view catalog for a schema, mirroring the
-    * reference's recursive generator (snowflake.go:314-378): `<TYPE>`
-    * top view; `<TYPE>_<FIELD>…` per nested RECORD at any depth; a
-    * flatten view per RECORD LIST reached through RECORDs at any depth
-    * (root still `data`-prefixed in the reference's terms); and a
-    * flattened-grain view per RECORD nested under a list ITEM. Only
-    * LIST-under-LIST is refused (the `value`-rooted case the
-    * reference's guard blocks). View names accumulate the field chain,
-    * exactly as the reference's `tableName_FIELD` recursion does.
-    *
-    * Per-view error resilience matches the reference
-    * (snowflake.go:373-378): a view that fails to build or register is
-    * logged and SKIPPED — one bad type or field never aborts the rest
-    * of the catalog. Returns the successfully registered names. */
-  def registerAll(latestDf: DataFrame, schema: RootSchema): Seq[String] = {
-    val reg = scala.collection.mutable.ArrayBuffer.empty[String]
-    def register(name: String)(df: => DataFrame): Unit =
-      try { df.createOrReplaceTempView(name); reg += name }
-      catch {
-        case e: Exception =>
-          System.err.println(s"graft: error creating view $name: ${e.getMessage}")
-      }
-    catalogDefs(schema).foreach { d =>
-      register(d.name)(frame(latestDf, viewSteps(d, schema(d.docType))))
+  /** V7 — register the typed view catalog of `schema` ([[catalogDefs]],
+    * the reference's recursive generator, snowflake.go:314-378) over
+    * the relation named `latest` (a temp view or table holding a frame
+    * produced by [[latest]]), as SQL text that resolves `latest` by
+    * name when read ([[createTemp]]). Per-view error resilience matches
+    * the reference (snowflake.go:373-378): a view that fails to
+    * register is logged and SKIPPED — one bad type or field never
+    * aborts the rest of the catalog. Returns the registered names. */
+  def registerAll(spark: SparkSession, latest: String,
+      schema: RootSchema): Seq[String] =
+    createTemp(spark, catalogSql(schema, qi(latest)))
+
+  /** create_views' catalog: the store views `DOCUMENTS_LATEST_ALL_VERSIONS`,
+    * `DOCUMENTS_LATEST` and `DOCUMENTS_HISTORY` over the landing
+    * relation named `landing`, then every [[catalogDefs]] view over
+    * `DOCUMENTS_LATEST` — all SQL text that resolves `landing` by name
+    * when read, so re-pointing `landing` refreshes the whole catalog.
+    * Resilience and result as in [[registerAll]]. */
+  def registerStore(spark: SparkSession, landing: String,
+      schema: RootSchema): Seq[String] =
+    createTemp(spark, catalogSql(schema, qi("DOCUMENTS_LATEST"), Some(qi(landing))))
+
+  /** The generated catalog as (view name, SQL text), the one list the
+    * temp ([[createTemp]]) and persistent ([[registerAllPersistent]])
+    * catalogs read, so they differ only in the relations they name:
+    * with a `landing` reference, the three store views over it first;
+    * then every [[catalogDefs]] view over `latest`. Both references are
+    * SQL relation text, embedded as given. */
+  private def catalogSql(schema: RootSchema, latest: String,
+      landing: Option[String] = None,
+      prefix: String = "DOCUMENTS"): Seq[(String, String)] = {
+    val cols = Landing.schema.fieldNames.toSeq
+    landing.toSeq.flatMap { l => Seq(
+      s"${prefix}_LATEST_ALL_VERSIONS" -> sqlText(l, latestAllVersionsSteps(cols)),
+      s"${prefix}_LATEST" -> sqlText(l, latestSteps(cols)),
+      s"${prefix}_HISTORY" -> sqlText(l, historySteps(cols)))
+    } ++ catalogDefs(schema).map { d =>
+      d.name -> sqlText(latest, viewSteps(d, schema(d.docType)))
     }
-    reg.toSeq
+  }
+
+  /** Register `views` as SQL-text temp views, in order. A text view
+    * resolves the relations it names when a query reads it, so a view
+    * the session already holds is created again only when its
+    * definition changed: it is skipped when the stored view has no
+    * stored plan, the same text, and the SQL configs a CREATE would
+    * capture now. Under `spark.sql.legacy.storeAnalyzedPlanForView`
+    * every view stores a plan and is created on every call. A view
+    * whose CREATE fails is logged and skipped; a later call tries it
+    * again. Returns the registered names. */
+  private def createTemp(spark: SparkSession,
+      views: Seq[(String, String)]): Seq[String] = {
+    val catalog = spark.sessionState.catalog
+    val prefix = CatalogTable.VIEW_SQL_CONFIG_PREFIX
+    val configs = ViewHelper.sqlConfigsToProps(spark.sessionState.conf, prefix)
+    def current(name: String, text: String) =
+      catalog.getRawTempView(name).exists { v =>
+        v.plan.isEmpty && v.tableMeta.viewText.contains(text) &&
+          v.tableMeta.properties.filter(_._1.startsWith(prefix)) == configs
+      }
+    views.flatMap { case (name, text) =>
+      logged(name) {
+        if (!current(name, text)) {
+          // the name is parsed as createOrReplaceTempView parses it, so
+          // a name that is not one identifier fails the same way
+          val id = spark.sessionState.sqlParser.parseMultipartIdentifier(name)
+          require(id.size == 1, s"$name is not one identifier")
+          spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${qi(id.head)} AS\n$text")
+        }
+        name
+      }
+    }
   }
 
   /** One generated view's identity in the catalog walk — the shared
-    * description BOTH registration modes are driven from (temp
-    * DataFrame views in [[registerAll]], persistent SQL DDL in
-    * [[registerAllPersistent]]), so the two catalogs can never drift
-    * in shape: same walk, same names, same skip rules. */
+    * description [[catalogSql]] renders for both registration modes,
+    * so the two catalogs can never drift in shape: same walk, same
+    * names, same skip rules. */
   sealed trait ViewDef { def name: String; def docType: String }
   final case class TypedDef(name: String, docType: String) extends ViewDef
   final case class RecordDef(name: String, docType: String,
@@ -423,9 +470,9 @@ object Views {
 
   /** One step of a generated view: `SELECT cols FROM <previous step>
     * WHERE where` (no WHERE when empty). Every view is a short chain of
-    * steps, rendered as a DataFrame by [[frame]] (temp views and the
-    * public builders) and as SQL text by [[sqlText]] (the persistent
-    * catalog), so the two catalogs cannot drift. */
+    * steps, rendered as a DataFrame by [[frame]] (the public builders)
+    * and as SQL text by [[sqlText]] (the registered catalogs), so the
+    * two forms cannot drift. */
   private final case class Step(cols: Seq[String], where: String = "")
 
   private def frame(df: DataFrame, steps: Seq[Step]): DataFrame =
@@ -508,33 +555,29 @@ object Views {
     * SparkContext; Hive/Unity metastore: any session ever — resolves
     * them. Per-view error resilience as in [[registerAll]]: one bad
     * view never aborts the rest. Returns qualified registered names. */
-  def registerAllPersistent(spark: org.apache.spark.sql.SparkSession,
+  def registerAllPersistent(spark: SparkSession,
       landingPath: String, schema: RootSchema, db: String,
       prefix: String = "DOCUMENTS"): Seq[String] = {
-    val reg = scala.collection.mutable.ArrayBuffer.empty[String]
-    def create(name: String)(body: => String): Unit = {
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS ${qi(db)}")
+    catalogSql(schema, s"${qi(db)}.${qi(s"${prefix}_LATEST")}",
+      Some(s"parquet.${qi(landingPath)}"), prefix).flatMap { case (name, text) =>
       val qn = s"${qi(db)}.${qi(name)}"
-      try {
-        spark.sql(s"CREATE OR REPLACE VIEW $qn AS\n$body")
-        reg += s"$db.$name"
-      } catch {
-        case e: Exception =>
-          System.err.println(s"graft: error creating view $qn: ${e.getMessage}")
+      logged(qn) {
+        spark.sql(s"CREATE OR REPLACE VIEW $qn AS\n$text")
+        s"$db.$name"
       }
     }
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS ${qi(db)}")
-    val landingRef = s"parquet.${qi(landingPath)}"
-    val cols = graft.ingest.Landing.schema.fieldNames.toSeq
-    create(s"${prefix}_LATEST_ALL_VERSIONS")(
-      sqlText(landingRef, latestAllVersionsSteps(cols)))
-    create(s"${prefix}_LATEST")(sqlText(landingRef, latestSteps(cols)))
-    create(s"${prefix}_HISTORY")(sqlText(landingRef, historySteps(cols)))
-    val latestQn = s"${qi(db)}.${qi(s"${prefix}_LATEST")}"
-    catalogDefs(schema).foreach { d =>
-      create(d.name)(sqlText(latestQn, viewSteps(d, schema(d.docType))))
-    }
-    reg.toSeq
   }
+
+  /** `create`'s result, or None after logging why it failed: one bad
+    * view never aborts the rest of a catalog. */
+  private def logged(name: String)(create: => String): Option[String] =
+    try Some(create)
+    catch {
+      case e: Exception =>
+        System.err.println(s"graft: error creating view $name: ${e.getMessage}")
+        None
+    }
 
   /** The V4 reference join with the broadcast decision made from
     * evidence instead of faith. r73's public query hints `broadcast`

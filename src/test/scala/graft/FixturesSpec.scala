@@ -81,7 +81,8 @@ class FixturesSpec extends SparkSpec {
   test("F1+F3 typed views: tombstone visible, FK projected, list-in-list refused, unknown type skipped") {
     val landing = land("2026-03-01 00:00:00", f2Lines)
     val latest = Views.latest(landing)
-    val names = Views.registerAll(latest, f1Schema.withoutInactive)
+    latest.createOrReplaceTempView("F1_LATEST")
+    val names = Views.registerAll(spark, "F1_LATEST", f1Schema.withoutInactive)
     assert(names.contains("WELL") && names.contains("WELL_LOCATION")
       && names.contains("WELL_READINGS") && names.contains("COMPANY"))
     assert(!names.contains("WELL_READINGS_TAGS")) // no list-in-list view

@@ -16,7 +16,8 @@ import org.apache.spark.sql.DataFrame
   *      record, list flatten, record-under-list-item, plus the three
   *      store views), the persistent SQL text returns row-for-row what
   *      the DataFrame builders return, on a fixture exercising replay
-  *      dedup, version argmax, chunk re-union and tombstones.
+  *      dedup, version argmax, chunk re-union and tombstones; and the
+  *      temp catalog stores the same text, over other relations.
   *   2. DURABILITY — a NEW session (same catalog) resolves the
   *      persistent views after the defining session's temp views are
   *      gone. In-memory catalog: any session of the SparkContext;
@@ -169,6 +170,24 @@ class PersistentViewsSpec extends SparkSpec {
           assert(kept("d2", 1) == Seq((d2Chunk1, "a")), s"$form $name: data")
           assert(kept("d3", 0) == Seq((d3Data, "a")), s"$form $name: author")
         }
+    }
+  }
+
+  test("the temp and persistent catalogs store one text per view, " +
+      "differing only in the relations they read") {
+    registered
+    landing.createOrReplaceTempView("EXECUTE_DOCUMENTS")
+    val temp = Views.registerStore(spark, "EXECUTE_DOCUMENTS", schema)
+    assert(temp.map(n => s"$db.$n").toSet == registered.toSet)
+    val catalog = spark.sessionState.catalog
+    temp.foreach { name =>
+      val tempText = catalog.getRawTempView(name).get.tableMeta.viewText.get
+      val persistText = catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(name, Some(db))).viewText.get
+      assert(persistText == tempText
+        .replace("`EXECUTE_DOCUMENTS`", s"parquet.`$landingDir`")
+        .replace("`DOCUMENTS_LATEST`", s"`$db`.`DOCUMENTS_LATEST`"), name)
+      assert(rows(spark.table(name)) == rows(spark.table(s"$db.$name")), name)
     }
   }
 

@@ -349,4 +349,89 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.schema(Landing.schema).parquet(land).select("id")
       .collect().map(_.getString(0)).sorted.toSeq == Seq("a", "b"))
   }
+
+  // ─── the lazy catalog: created once, re-pointed by every createViews ───
+
+  private val lazySchema = graft.model.SchemaCodec.parse(
+    """{"W": {"N": {"ACTIVE": true, "TYPE": "TEXT", "NULLABLE": true}}}""")
+
+  private def doc(id: String, version: Int, day: Int, n: String) =
+    s"""{"$$TYPE":"W","DOCUMENT_ID":"$id","$$VERSION":$version,""" +
+      s""""$$DATE":"2026-01-0${day}T00:00:00Z","N":"$n","M":"m$n"}"""
+
+  private def strings(q: String): Seq[String] =
+    spark.sql(q).collect().map(_.toSeq.mkString("|")).toSeq
+
+  /** The names of the views each CREATE run by `body` created. */
+  private def viewsCreated(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.command.CreateViewCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val created = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.logical.foreach {
+          case c: CreateViewCommand => created.add(c.name.table)
+          case _ =>
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    created.asScala.toSeq
+  }
+
+  /** Clone one page, land a second, createViews again: every view shows
+    * the second page. Returns the views the second createViews created. */
+  private def catalogFollowsTheStore(): Seq[String] = {
+    val source = new StubSource(Vector(Seq(doc("a", 1, 1, "a1"), doc("b", 1, 1, "b1"))))
+    val p = new SyncPipeline(spark, "", tmp("lazy") + "/landing", tmp("stlazy"))
+    assert(p.clone(lazySchema, Some(source)) == 2L)
+    assert(strings("SELECT id, version FROM DOCUMENTS_LATEST ORDER BY id") ==
+      Seq("a|1", "b|1"))
+    source.pages :+= Seq(doc("a", 2, 2, "a2"), doc("c", 1, 2, "c1"))
+    assert(p.syncFrom(source) == 2L)
+    val created = viewsCreated {
+      assert(p.createViews(lazySchema) == Seq("EXECUTE_DOCUMENTS",
+        "DOCUMENTS_LATEST_ALL_VERSIONS", "DOCUMENTS_LATEST", "DOCUMENTS_HISTORY", "W"))
+    }
+    assert(strings("SELECT id, version FROM DOCUMENTS_LATEST ORDER BY id") ==
+      Seq("a|2", "b|1", "c|1"))
+    assert(strings("SELECT DOCUMENT_ID, N FROM W ORDER BY DOCUMENT_ID") ==
+      Seq("a|a2", "b|b1", "c|c1"))
+    assert(strings("SELECT id, version, is_current FROM DOCUMENTS_HISTORY " +
+      "ORDER BY id, version") == Seq("a|1|false", "a|2|true", "b|1|true", "c|1|true"))
+    created
+  }
+
+  test("after a later page, createViews shows it in the store, typed and history views") {
+    catalogFollowsTheStore()
+  }
+
+  test("a second createViews with the same schema creates only EXECUTE_DOCUMENTS") {
+    assert(catalogFollowsTheStore() == Seq("EXECUTE_DOCUMENTS"))
+  }
+
+  test("a schema with one more field creates the changed typed view again") {
+    catalogFollowsTheStore()
+    val wider = graft.model.SchemaCodec.parse(
+      """{"W": {"N": {"ACTIVE": true, "TYPE": "TEXT", "NULLABLE": true},
+        |"M": {"ACTIVE": true, "TYPE": "TEXT", "NULLABLE": true}}}""".stripMargin)
+    val p = new SyncPipeline(spark, "", tmp("wider") + "/landing", tmp("stwider"))
+    p.clone(lazySchema, Some(new StubSource(Vector(Seq(doc("a", 1, 1, "a1"))))))
+    assert(viewsCreated(p.createViews(wider)) == Seq("EXECUTE_DOCUMENTS", "W"))
+    assert(strings("SELECT DOCUMENT_ID, N, M FROM W") == Seq("a|a1|ma1"))
+  }
+
+  test("with analyzed plans stored for views, createViews still shows a later page") {
+    val key = "spark.sql.legacy.storeAnalyzedPlanForView"
+    spark.conf.set(key, "true")
+    try assert(catalogFollowsTheStore() == Seq("EXECUTE_DOCUMENTS",
+      "DOCUMENTS_LATEST_ALL_VERSIONS", "DOCUMENTS_LATEST", "DOCUMENTS_HISTORY", "W"))
+    finally spark.conf.unset(key)
+  }
 }

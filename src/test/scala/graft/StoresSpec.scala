@@ -88,6 +88,24 @@ class StoresSpec extends SparkSpec {
     }
   }
 
+  test("a JVM store is registered for deletion at exit; deleteStores removes stores") {
+    import graft.queries.Durable
+    val store = Durable.jvmStore("graft_spec_store")
+    assert(Durable.jvmStores.contains(store))
+    Durable.jvmStores.remove(store)
+    // a set of its own, so the stores other specs read stay
+    val stores = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+    val full = Files.createTempDirectory("graft_spec_store")
+    Files.createDirectories(full.resolve("part=a/bucket"))
+    Files.writeString(full.resolve("part=a/bucket/f.parquet"), "x")
+    val empty = Files.createTempDirectory("graft_spec_store")
+    Seq(full, empty, empty.resolveSibling(empty.getFileName.toString + "_gone"))
+      .foreach(stores.add)
+    Durable.deleteStores(stores)
+    assert(!Files.exists(full) && !Files.exists(empty))
+    assert(stores.isEmpty)
+  }
+
   test("with an index root set, no JVM store is written under it") {
     val root = Files.createTempDirectory("graft_stores_root")
     try withCopies(1) { case Seq(dir) =>

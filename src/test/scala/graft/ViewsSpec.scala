@@ -1,7 +1,7 @@
 package graft
 
 import graft.ingest.{Ingest, Landing, LandingRecord}
-import graft.model.SchemaCodec
+import graft.model.{RootSchema, SchemaCodec}
 import graft.views.Views
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
@@ -16,6 +16,12 @@ class ViewsSpec extends SparkSpec {
   private def landing(rs: LandingRecord*): DataFrame = {
     import spark.implicits._
     spark.createDataset(rs).toDF()
+  }
+
+  /** The typed catalog over `latest`, registered under one name. */
+  private def registerAll(latest: DataFrame, schema: RootSchema): Seq[String] = {
+    latest.createOrReplaceTempView("SPEC_LATEST")
+    Views.registerAll(spark, "SPEC_LATEST", schema)
   }
 
   test("R1 latestAllVersions keeps all chunks of the newest batch per (type,id,version)") {
@@ -262,7 +268,7 @@ class ViewsSpec extends SparkSpec {
     val df = landing(
       rec("2026-01-01 00:00:00", "WELL", "d1", 1,
         data = """{"NAME":"a","LOCATION":{"LAT":1.0},"TESTS":[{"SCORE":1}]}"""))
-    val names = Views.registerAll(Views.latest(df), wellSchema)
+    val names = registerAll(Views.latest(df), wellSchema)
     assert(names.toSet == Set("WELL", "WELL_LOCATION", "WELL_TESTS"))
     assert(spark.table("WELL_TESTS").count() == 1)
   }
@@ -295,7 +301,7 @@ class ViewsSpec extends SparkSpec {
       // chunk-split slice carries a third crew: re-union at depth
       rec("2026-01-01 00:00:00", "RIG", "r1", 1, chunk = 1, data =
         """{"DOCUMENT_ID":"r1","META":{"CREWS":[{"LISTITEM_ID":"c3","SIZE":2,"LEAD":{"NAME":"eve"}}]}}"""))
-    val names = Views.registerAll(Views.latest(df), deepSchema)
+    val names = registerAll(Views.latest(df), deepSchema)
     assert(names.toSet == Set("RIG", "RIG_META", "RIG_META_CREWS",
       "RIG_META_CREWS_LEAD"))
     assert(!names.exists(_.contains("SHIFTS"))) // list-in-list refused
@@ -325,7 +331,7 @@ class ViewsSpec extends SparkSpec {
     val df = landing(
       rec("2026-01-01 00:00:00", "GOOD1", "d1", 1, data = """{"A":"x"}"""),
       rec("2026-01-01 00:00:00", "GOOD2", "d2", 1, data = """{"L":[{"V":1}]}"""))
-    val names = Views.registerAll(Views.latest(df), schema)
+    val names = registerAll(Views.latest(df), schema)
     assert(names.toSet == Set("GOOD1", "GOOD2", "GOOD2_L"))
     assert(spark.table("GOOD2_L").count() == 1)
   }
@@ -341,7 +347,7 @@ class ViewsSpec extends SparkSpec {
     val df = landing(
       rec("2026-01-01 00:00:00", "WELL", "d1", 1,
         data = """{"NAME":"a","OLD_CODE":"z","GHOST":{"X":"y"}}"""))
-    val names = Views.registerAll(Views.latest(df), schema.withoutInactive)
+    val names = registerAll(Views.latest(df), schema.withoutInactive)
     // GHOST's recordType empties out → dropped entirely (schema.go:111-113
     // nils an emptied RecordType), so no zero-column GHOST child view
     assert(names.toSet == Set("WELL"))
